@@ -16,6 +16,8 @@ bucket-join on LSH keys — same code path as minhash LSH banding.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -24,26 +26,93 @@ from pyspark.sql.window import Window
 
 from etl_tools_rs_spark.operators.sketch import kmv_hash
 
+# ---------------------------------------------------------------------------
+# SQL-text expression builder. Vector math with embedded float literals is
+# written as Spark SQL text and compiled by one ``F.expr`` call: building the
+# same tree through the Column API costs one driver→JVM round trip per
+# literal and per lambda, tens of thousands for a multi-table LSH plan.
+# ---------------------------------------------------------------------------
 
-def dot(a: Column, b: Column) -> Column:
-    """JVM-side dot product. Inputs are cast to double element-wise:
-    float32 accumulation would drift ~1e-7 relative, which is the same
-    order as a 6-dp output round — double keeps error at ~1e-15."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    return F.aggregate(
-        F.zip_with(ad, bd, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
+
+def _sql_ident(name: str) -> str:
+    """Backtick-quoted identifier (embedded backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_double(x: float) -> str:
+    """Exact DOUBLE literal: ``repr`` round-trips every finite double and
+    the ``D`` suffix types it. NaN and ±inf have no literal form."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"no SQL double literal for {x!r}")
+    return repr(x) + "D"
+
+
+def _sql_vector(xs) -> str:
+    return "array(" + ", ".join(_sql_double(x) for x in xs) + ")"
+
+
+def _lit_vector(xs) -> Column:
+    """``array<double>`` literal holding exactly the given floats."""
+    return F.expr(_sql_vector(xs))
+
+
+def _sql_doubles(vec: str) -> str:
+    return f"transform({vec}, x -> CAST(x AS DOUBLE))"
+
+
+def _sql_dot(a: str, b: str) -> str:
+    """Dot product of two ``array<double>`` SQL expressions: a sequential
+    left-to-right fold in double (float32 accumulation would drift ~1e-7
+    relative, the order of a 6-dp output round)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        "CAST(0.0D AS DOUBLE), (acc, y) -> acc + y)"
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def _sql_cosine(a: str, b: str) -> str:
+    """Cosine similarity of two vector SQL expressions."""
+    ad, bd = _sql_doubles(a), _sql_doubles(b)
+    return (
+        f"CAST({_sql_dot(ad, bd)} / "
+        f"(SQRT({_sql_dot(ad, ad)}) * SQRT({_sql_dot(bd, bd)})) AS DOUBLE)"
+    )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return (dot(a, b) / (norm(a) * norm(b))).cast("double")
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of two vector columns, by name."""
+    return F.expr(_sql_cosine(_sql_ident(a), _sql_ident(b)))
+
+
+def _sql_plane_dots(vec: str, planes: list[list[float]]) -> list[str]:
+    """One dot fold per hyperplane, each against a double literal array."""
+    vd = _sql_doubles(vec)
+    return [_sql_dot(vd, _sql_vector(p)) for p in planes]
+
+
+def _sql_sign_bucket(dots: list[str]) -> str:
+    """Bucket id: bit i set iff plane dot i is > 0 (BIGINT)."""
+    return "CAST(0 AS BIGINT)" + "".join(
+        f" + (CASE WHEN {d} > 0 THEN {1 << i}L ELSE 0L END)"
+        for i, d in enumerate(dots)
+    )
+
+
+def _sql_probe_buckets(dots: list[str], num_probes: int) -> str:
+    """Array of the main bucket followed by one bucket per flipped bit,
+    flipping planes in ascending (|dot|, index) order."""
+    bucket = _sql_sign_bucket(dots)
+    n = min(num_probes, len(dots))
+    if n <= 0:
+        return f"array({bucket})"
+    margins = ", ".join(
+        f"named_struct('m', abs({d}), 'i', {i})" for i, d in enumerate(dots)
+    )
+    return (
+        f"concat(array({bucket}), transform(slice(sort_array(array("
+        f"{margins})), 1, {n}), _flip -> ({bucket}) ^ shiftleft(1L, _flip.i)))"
+    )
 
 
 def knn_brute(
@@ -71,7 +140,7 @@ def knn_brute(
     scored = c.crossJoin(q).select(
         F.col("_qid"),
         F.col("_cid"),
-        cosine(F.col("_qv"), F.col("_cv")).alias("_sim"),
+        cosine("_qv", "_cv").alias("_sim"),
     )
     w = Window.partitionBy("_qid").orderBy(F.col("_sim").desc(), F.col("_cid").asc())
     return (
@@ -94,69 +163,80 @@ def _hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
     return rng.standard_normal((num_planes, dim)).tolist()
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from random hyperplanes (JVM-side dot products).
-
-    Form chosen by measurement (r5, knn_cosine_lsh 16×4 at sf0.1): the
-    per-plane ``aggregate`` fold = 7.9s. Alternatives tried and
-    rejected: flat unrolled ``element_at`` sums (4096-node expression
-    trees) = 63s — Catalyst optimization/codegen degrades badly on
-    giant trees; one fused fold per table with a struct-of-sums
-    accumulator = 22s — interpreted per-element struct construction
-    costs more than the extra fold calls it saves. A numpy
-    ``mapInPandas`` matmul would be fastest but changes float summation
-    order (pairwise vs sequential), breaking the bit-parity the
-    embedded-literal oracles rely on for the ``d > 0`` sign."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        d = dot(vec, F.array(*[F.lit(float(x)) for x in p]))
-        bucket = bucket + F.when(d > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return bucket
+def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
+    """Sign-bit bucket id (BIGINT) of the vector column named ``vec``:
+    bit i is set iff its dot with ``planes[i]`` is > 0. Each dot is a
+    sequential left-to-right fold in double, so the sign is bit-for-bit
+    the one any engine gets replaying that fold over the same literals.
+    Built as SQL text and compiled by one ``F.expr`` call."""
+    return F.expr(_sql_sign_bucket(_sql_plane_dots(_sql_ident(vec), planes)))
 
 
 def lsh_probe_buckets(
-    vec: Column, planes: list[list[float]], num_probes: int
+    vec: str, planes: list[list[float]], num_probes: int
 ) -> Column:
-    """Main bucket plus ``num_probes`` multi-probe buckets (Lv et al.,
-    VLDB'07): flip the sign bit of the j-th smallest |margin| plane for
-    j = 1..num_probes — the planes the vector sits closest to are
-    exactly the bits most likely to differ from a true neighbor's
-    bucket, so probing those neighboring buckets buys back the recall
-    that extra TABLES otherwise pay for with corpus replication. Pure
-    JVM expressions: per-plane dots once, |margin|-sorted plane indices
-    via ``sort_array`` on (|d|, i) structs, bucket XOR (1<<i) per probe.
-    Returns an array of distinct bucket ids (main bucket first)."""
-    dots = [
-        dot(vec, F.array(*[F.lit(float(x)) for x in p])) for p in planes
-    ]
-    bucket = F.lit(0).cast("long")
-    for i, d in enumerate(dots):
-        bucket = bucket + F.when(
-            d > 0, F.lit(1 << i).cast("long")
-        ).otherwise(F.lit(0))
-    if num_probes <= 0:
-        return F.array(bucket)
-    ranked = F.sort_array(
-        F.array(
-            *[
-                F.struct(
-                    F.abs(d).alias("m"), F.lit(i).cast("int").alias("i")
-                )
-                for i, d in enumerate(dots)
-            ]
+    """Main bucket plus ``min(num_probes, len(planes))`` multi-probe
+    buckets (Lv et al., VLDB'07) of the vector column named ``vec``:
+    probe j flips the bit of the plane with the j-th smallest
+    (|dot|, plane index), the bits most likely to differ from a true
+    neighbor's bucket. Returns ``array<bigint>``, main bucket first,
+    all distinct. Built as SQL text and compiled by one ``F.expr``
+    call."""
+    return F.expr(
+        _sql_probe_buckets(
+            _sql_plane_dots(_sql_ident(vec), planes), num_probes
         )
     )
-    probes = [bucket]
-    for j in range(min(num_probes, len(planes))):
-        flip_bit = F.element_at(ranked, j + 1)["i"]
-        # shiftleft needs a literal shift; pow(2, i) is exact in double
-        # for i < 53 and num_planes is far below that
-        probes.append(
-            bucket.bitwiseXOR(
-                F.pow(F.lit(2.0), flip_bit).cast("long")
-            )
+
+
+def _lsh_corpus_keys(vec: str, tables: list[list[list[float]]]) -> Column:
+    """``array<struct<t: int, b: bigint>>``: the bucket of the vector
+    column named ``vec`` in every table, as one expression."""
+    v = _sql_ident(vec)
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('t', {t}, 'b', "
+            f"{_sql_sign_bucket(_sql_plane_dots(v, planes))})"
+            for t, planes in enumerate(tables)
         )
-    return F.array(*probes)
+        + ")"
+    )
+
+
+def _explode_lsh_probe_keys(
+    df: DataFrame, vec: str, tables: list[list[list[float]]], num_probes: int
+) -> DataFrame:
+    """``df`` with one row per table and main-or-probe bucket
+    (:func:`lsh_probe_buckets`) of the vector column named ``vec``, keyed
+    by ``_tb: struct<t: int, b: bigint>``. The plane dots are computed
+    once, as columns of a first projection; a second derives buckets and
+    probes from them, so each dot is folded once per row."""
+    names = [
+        [f"_d{t}_{i}" for i in range(len(planes))]
+        for t, planes in enumerate(tables)
+    ]
+    v = _sql_ident(vec)
+    dots = df.selectExpr(
+        "*",
+        *[
+            f"{d} AS {n}"
+            for planes, row in zip(tables, names)
+            for d, n in zip(_sql_plane_dots(v, planes), row)
+        ],
+    )
+    keys = ", ".join(
+        f"transform({_sql_probe_buckets(row, num_probes)}, "
+        f"b -> named_struct('t', {t}, 'b', b))"
+        for t, row in enumerate(names)
+    )
+    # the explode stays inline: over a projected key array,
+    # InferFiltersFromGenerate pushes a size() filter below it that
+    # re-inlines every dot
+    return dots.select(
+        *[F.col(_sql_ident(c)) for c in df.columns],
+        F.explode(F.expr(f"flatten(array({keys}))")).alias("_tb"),
+    )
 
 
 def knn_lsh(
@@ -173,80 +253,49 @@ def knn_lsh(
     query_vec: str = "embedding",
     num_probes: int = 0,
 ) -> DataFrame:
-    """Approximate top-k: candidates limited to the query's LSH bucket(s).
+    """Approximate top-k cosine: candidates are the corpus vectors that
+    share a sign-LSH bucket with the query in any of ``num_tables``
+    tables, exactly rescored.
 
-    ``num_tables`` independent hash tables (r4): each table hashes with
-    its own ``num_planes`` hyperplanes, candidates are the UNION of
-    same-bucket pairs across tables (classic multi-table LSH — recall
-    grows ~1-(1-p^b)^L while per-table selectivity stays sharp; a single
-    sign-LSH table has weak recall on high-dim data no matter how b is
-    tuned, measured 0.10@10 on the gate embeddings vs 0.86 with 8
-    tables). One shuffle on the (table, bucket) key — corpus rows
-    replicate ×num_tables, the scale knob AQE handles like any explode;
-    duplicate candidate pairs collapse in the same aggregate that scores
-    them. Exact cosine rescoring inside the union.
+    Table t hashes with ``num_planes`` hyperplanes seeded
+    ``seed + 7919·t`` (so ``num_tables=1`` is the single-table index).
+    Each query also probes its ``num_probes`` weakest-margin bit flips
+    per table (:func:`lsh_probe_buckets`); ``num_probes=0`` probes the
+    main bucket only. The corpus replicates ×num_tables, the broadcast
+    query side ×num_tables·(1+probes), so probes are the cheap recall
+    knob while queries are few; when the query set grows with the
+    corpus, prefer tables, or the dedup_* band joins. One join on the
+    (table, bucket) key, a pair reached several ways collapses in the
+    max() that scores it, and ties rank by corpus id. Output:
+    ``(query_id, neighbor_id, cosine_sim rounded to 6 dp, rank)``.
 
-    ``num_probes`` (r9, VERDICT r8 #5): multi-probe on the QUERY side —
-    each query additionally probes the buckets reached by flipping its
-    j-th-weakest sign bits (:func:`lsh_probe_buckets`). Probes multiply
-    only the small broadcast side (queries × tables × (1+probes) rows);
-    the CORPUS side still replicates ×num_tables only. The full cost
-    model (measured, SCALE_COMPARE_r09 sf1/sf3): banding work is
-    ∝ tables·|C| but expected CANDIDATE volume is
-    ∝ tables·(1+probes)/2^planes·|C|·|Q| — probes shift cost from the
-    corpus explode to the verify join. Under the serving contract
-    (|Q| ≪ |C|: fixed 40-query batch) 6×4 planes×3 probes beats 16×4×0
-    2.0× at sf1 at higher recall; when |Q| GROWS with the corpus (a
-    batch all-pairs-ish workload) the (1+probes)/tables candidate ratio
-    flips the sign — prefer more tables / fewer probes there, or use
-    the dedup_* band-join operators, which are built for corpus-vs-
-    corpus. ``num_probes=0`` reproduces the historical output
-    bit-for-bit."""
-    c_hashes, q_probe_arrays = [], []
-    for t in range(num_tables):
-        # table 0 uses `seed` exactly → num_tables=1 reproduces the
-        # historical single-table output bit-for-bit
-        planes = _hyperplanes(dim, num_planes, seed + 7919 * t)
-        c_hashes.append(
-            F.struct(
-                F.lit(t).alias("t"),
-                lsh_bucket(F.col(corpus_vec), planes).alias("b"),
-            )
-        )
-        def _tagged(planes_t: list[list[float]], t_idx: int) -> Column:
-            # single-arg lambda: F.transform treats a 2-arg callable as
-            # (element, index), which would shadow the table id
-            return F.transform(
-                lsh_probe_buckets(F.col(query_vec), planes_t, num_probes),
-                lambda b: F.struct(
-                    F.lit(t_idx).alias("t"), b.alias("b")
-                ),
-            )
-
-        q_probe_arrays.append(_tagged(planes, t))
-    q_hashes = [F.explode(F.flatten(F.array(*q_probe_arrays))).alias("_tb")]
+    Every vector expression is SQL text compiled by ``F.expr``: one
+    expression holds all corpus-side buckets (:func:`_lsh_corpus_keys`);
+    the query side computes its num_tables·num_planes plane dots once as
+    columns, and a second projection derives the buckets and probes
+    from them (:func:`_explode_lsh_probe_keys`)."""
+    tables = [
+        _hyperplanes(dim, num_planes, seed + 7919 * t)
+        for t in range(num_tables)
+    ]
     c = corpus.select(
         F.col(corpus_id).alias("_cid"),
         F.col(corpus_vec).alias("_cv"),
-        F.explode(F.array(*c_hashes)).alias("_tb"),
+        F.explode(_lsh_corpus_keys(corpus_vec, tables)).alias("_tb"),
     )
-    # within a table the 1+p probe buckets are distinct by construction
-    # (each flips a different bit of the main bucket) and tables are
-    # keyed apart by t, so no (qid, tb) duplicates need removing; a pair
-    # reached via several probes collapses in the same max() aggregate
-    # that dedups multi-table hits
-    q = queries.select(
-        F.col(query_id).alias("_qid"),
-        F.col(query_vec).alias("_qv"),
-        q_hashes[0],
+    # within a table the probe buckets are distinct and tables are keyed
+    # apart by t, so no (qid, tb) duplicates need removing
+    q = _explode_lsh_probe_keys(
+        queries.select(
+            F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv")
+        ),
+        "_qv",
+        tables,
+        num_probes,
     )
     scored = (
         c.join(F.broadcast(q), "_tb")
-        .select(
-            "_qid",
-            "_cid",
-            cosine(F.col("_qv"), F.col("_cv")).alias("_sim"),
-        )
+        .select("_qid", "_cid", cosine("_qv", "_cv").alias("_sim"))
         # a pair found by several tables scores identically — max() is
         # the dedup (cheaper than distinct on the vectors themselves)
         .groupBy("_qid", "_cid")
@@ -276,22 +325,16 @@ def embedding_near_dup(
     target_bucket_size: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH self-join: vectors in
-    the same hyperplane bucket with cosine ≥ threshold. Exact within
-    buckets — so per-bucket occupancy m costs m²/2 verifies, and a FIXED
-    plane count goes quadratic as the corpus grows (measured r5: 6
-    planes = 64 buckets was fine at sf0.1 but ~250M verifies on 180k
-    vectors at sf3). ``num_planes`` must scale ~log2(n): pass
-    ``target_bucket_size`` to do that automatically — planes are raised
-    to ``ceil(log2(n / target_bucket_size))`` from one cheap count, so
-    expected occupancy stays ~constant and the join stays ~linear.
-    (More planes = tighter buckets = lower recall for borderline pairs;
-    near-exact duplicates at 0.95 land in the same bucket at any
-    reasonable plane count.) The value-checked registry query runs this
-    auto-scaled path (r6): at gate scales it resolves to the authored
-    6-plane literals, at sf1+ it grows with log2(n)."""
+    the same hyperplane bucket (:func:`lsh_bucket`) with 6-dp cosine ≥
+    threshold, as ``(id_a < id_b, cosine_sim)``. Exact within buckets —
+    so per-bucket occupancy m costs m²/2 verifies, and a FIXED plane
+    count goes quadratic as the corpus grows. ``num_planes`` must scale
+    ~log2(n): pass ``target_bucket_size`` to raise planes to
+    ``ceil(log2(n / target_bucket_size))`` from one count, so expected
+    occupancy stays ~constant and the join stays ~linear. (More planes =
+    tighter buckets = lower recall for borderline pairs; near-exact
+    duplicates land in the same bucket at any reasonable plane count.)"""
     if target_bucket_size is not None:
-        import math
-
         n = df.count()
         if n > target_bucket_size:
             num_planes = max(
@@ -301,7 +344,7 @@ def embedding_near_dup(
     v = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
-        lsh_bucket(F.col(vec_col), planes).alias("_bkt"),
+        lsh_bucket(vec_col, planes).alias("_bkt"),
     )
     a, b = v.alias("a"), v.alias("b")
     return (
@@ -309,7 +352,9 @@ def embedding_near_dup(
         .select(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
-            F.round(cosine(F.col("a._v"), F.col("b._v")), 6).alias("cosine_sim"),
+            F.round(
+                F.expr(_sql_cosine("`a`.`_v`", "`b`.`_v`")), 6
+            ).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -529,9 +574,7 @@ def nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     functions are interpreted (never codegen) and the literal tree is
     k×dim nodes, so for dense linear algebra the Arrow-vectorized UDF is
     the faster path at any scale."""
-    carr = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
+    carr = F.expr("array(" + ", ".join(_sql_vector(c) for c in centroids) + ")")
     dists = F.transform(
         carr,
         lambda c: F.aggregate(
@@ -622,7 +665,7 @@ def knn_ivf(
     )
     q = q0.select("_qid", "_qv", F.explode(probe(F.col("_aqv"))).alias("_cell"))
     scored = c.join(F.broadcast(q), "_cell").select(
-        "_qid", "_cid", cosine(F.col("_qv"), F.col("_cv")).alias("_sim")
+        "_qid", "_cid", cosine("_qv", "_cv").alias("_sim")
     )
     w = Window.partitionBy("_qid").orderBy(F.col("_sim").desc(), F.col("_cid").asc())
     return (
@@ -1083,7 +1126,7 @@ def knn_pq(
         .select(
             query_id,
             F.col(corpus_id).alias("neighbor_id"),
-            cosine(F.col("_qv"), F.col(corpus_vec)).alias("_sim"),
+            cosine("_qv", corpus_vec).alias("_sim"),
         )
     )
     w = Window.partitionBy(query_id).orderBy(
@@ -1322,7 +1365,7 @@ def jl_project(
     xd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     cols = []
     for j in range(out_dim):
-        sj = F.array(*[F.lit(float(signs[i][j])) for i in range(dim)])
+        sj = _lit_vector(signs[i][j] for i in range(dim))
         dec = F.aggregate(
             F.zip_with(
                 xd, sj, lambda a, b: F.round(a * b, 6).cast("decimal(24,6)")
@@ -1713,13 +1756,13 @@ def pca_project(
     ``aggregate``-fold dot product per component — k codegen
     expressions, no Python in the projection path, model ships as
     literals exactly like the JL sign matrix."""
-    mean_lit = F.array(*[F.lit(float(m)) for m in model.mean])
+    mean_lit = _lit_vector(model.mean)
     centered = F.zip_with(
         F.col(vec_col).cast("array<double>"), mean_lit, lambda x, m: x - m
     )
     outs = []
     for comp in model.components:
-        comp_lit = F.array(*[F.lit(float(c)) for c in comp])
+        comp_lit = _lit_vector(comp)
         dot = F.aggregate(
             F.zip_with(centered, comp_lit, lambda x, c: x * c),
             F.lit(0.0),

@@ -142,9 +142,7 @@ class TestMultiProbe:
             r.vec_id: list(r.pb)
             for r in emb.select(
                 "vec_id",
-                sim_ops.lsh_probe_buckets(
-                    F.col("embedding"), planes, 2
-                ).alias("pb"),
+                sim_ops.lsh_probe_buckets("embedding", planes, 2).alias("pb"),
             ).collect()
         }
         for r in emb.collect():
@@ -190,6 +188,103 @@ class TestMultiProbe:
         r0 = len(set(s0) & brute) / len(brute)
         r2 = len(set(s2) & brute) / len(brute)
         assert r2 >= r0
+
+
+class TestSqlBuilder:
+    """The sign-LSH expressions are SQL text compiled by ``F.expr``
+    (similarity.py builder): literals must round-trip bit-exactly, the
+    buckets and probes must equal a sequential-sum replay, and building
+    the registry query must stay a few hundred driver→JVM calls."""
+
+    def test_double_literal_round_trips_bit_exactly(self, spark):
+        import struct
+
+        from pyspark.sql import functions as F
+
+        from etl_tools_rs_spark.operators import similarity as sim_ops
+
+        xs = [-0.0, 5e-324, 1e16, 0.1, -1.5, 1.7976931348623157e308]
+        row = spark.range(1).select(
+            *[F.expr(sim_ops._sql_double(x)) for x in xs],
+            sim_ops._lit_vector(xs).alias("v"),
+        ).first()
+        bits = lambda v: struct.pack(">d", v)  # noqa: E731
+        for got, x in zip(list(row)[:-1], xs):
+            assert bits(got) == bits(x), (got, x)
+        assert [bits(v) for v in row.v] == [bits(x) for x in xs]
+        for bad in (float("nan"), float("inf"), float("-inf")):
+            with pytest.raises(ValueError, match="no SQL double literal"):
+                sim_ops._sql_double(bad)
+
+    def test_registry_config_buckets_and_probes_match_replay(self, spark):
+        """64-dim, 6 tables × 4 planes × 3 probes (the knn_cosine_lsh
+        registry config) over the 500 gate embeddings: corpus keys,
+        exploded query probe keys and the public helpers all equal an
+        independent python replay of the sequential double fold."""
+        from pyspark.sql import functions as F
+
+        from etl_tools_rs_spark.operators import similarity as sim_ops
+        from etl_tools_rs_spark.session import load_tables
+
+        emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
+        tables = [sim_ops._hyperplanes(64, 4, 42 + 7919 * t) for t in range(6)]
+        rows = emb.select(
+            "vec_id",
+            "embedding",
+            sim_ops._lsh_corpus_keys("embedding", tables).alias("ck"),
+            *[
+                sim_ops.lsh_bucket("embedding", p).alias(f"b{t}")
+                for t, p in enumerate(tables)
+            ],
+            *[
+                sim_ops.lsh_probe_buckets("embedding", p, 3).alias(f"p{t}")
+                for t, p in enumerate(tables)
+            ],
+        ).collect()
+        probe_keys: dict[int, list[tuple[int, int]]] = {}
+        for r in sim_ops._explode_lsh_probe_keys(
+            emb.select("vec_id", "embedding"), "embedding", tables, 3
+        ).collect():
+            probe_keys.setdefault(r.vec_id, []).append((r._tb.t, r._tb.b))
+        assert len(rows) == 500 and len(probe_keys) == 500
+
+        for r in rows:
+            want_c, want_p = [], []
+            for t, planes in enumerate(tables):
+                dots = []
+                for p in planes:
+                    acc = 0.0
+                    for x, y in zip(r.embedding, p):
+                        acc = acc + x * y
+                    dots.append(acc)
+                bucket = sum(1 << i for i, d in enumerate(dots) if d > 0)
+                order = sorted(range(4), key=lambda i: (abs(dots[i]), i))
+                probes = [bucket] + [bucket ^ (1 << i) for i in order[:3]]
+                assert r[f"b{t}"] == bucket, (r.vec_id, t)
+                assert list(r[f"p{t}"]) == probes, (r.vec_id, t)
+                want_c.append((t, bucket))
+                want_p += [(t, b) for b in probes]
+            assert [(k.t, k.b) for k in r.ck] == want_c, r.vec_id
+            assert probe_keys[r.vec_id] == want_p, r.vec_id
+
+    def test_knn_cosine_lsh_plan_build_py4j_budget(self, spark):
+        """Building the registry plan (tables read, 6×4×3 LSH, rerank,
+        top-k) costs a few hundred Py4J round trips; the Column-API
+        construction cost ~32,500."""
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+        calls = [0]
+
+        def counting(*args, **kwargs):
+            calls[0] += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            REGISTRY["knn_cosine_lsh"].fn(spark, SF_DIR)
+        finally:
+            client.send_command = send
+        assert calls[0] <= 1000, calls[0]
 
 
 class TestKmeansExact:

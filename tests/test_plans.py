@@ -600,3 +600,23 @@ def test_minhash_table_explode_stays_inline_no_inferred_ngrams_filter(spark):
         assert "Filter" not in plan, plan
         # the generator is the ngrams expression itself, not an attribute
         assert "Generate explode(CASE WHEN" in plan, plan
+
+
+def test_knn_lsh_plane_dots_folded_once(spark):
+    """knn_cosine_lsh (6 tables × 4 planes) folds each plane dot once per
+    side: T·P on the corpus side, T·P in the query side's first
+    projection (buckets and probes read them as columns), plus the 3
+    folds of the rerank cosine — 2·T·P + 3 = 51 ``aggregate`` folds in
+    the optimized plan. Re-inlining the query-side dots into the probe
+    expression multiplies the count (the Column-API build carried 195)."""
+    df = REGISTRY["knn_cosine_lsh"].fn(spark, SF_DIR)
+    # projection lists past maxToStringFields print as "... N more fields"
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "more field" not in plan
+    assert plan.count("aggregate(") == 2 * 6 * 4 + 3, plan.count("aggregate(")

@@ -36,7 +36,6 @@ CONFIGS = [
     (4, 4, 4),
     (6, 4, 2),
     (6, 4, 4),
-    (8, 4, 2),
 ]
 
 
