@@ -7,7 +7,9 @@ max_errors that broadcasts TooManyErrors to every runner
 
 Engine: the actor collapses to a thread-safe registry + Python logging
 (Spark's own UI/event log covers the rest, SURVEY §2.6 O6). The global
-budget is checked whenever any runner reports errors.
+budget is checked whenever any runner counts errors (``JobRunner`` checks
+it with its own budget), and once tripped it stops every runner's next
+stream step.
 """
 
 from __future__ import annotations
@@ -42,12 +44,13 @@ class JobManager:
             return sum(r.num_errors for r in self.runners)
 
     def check_global_budget(self) -> bool:
-        """True when the fleet-wide error budget is breached; runners call
-        this after accumulating errors and abort via TooManyErrors."""
-        breached = self.total_errors() > self.max_errors
-        if breached:
+        """True once the budget is tripped: the fleet-wide error total
+        exceeds ``max_errors`` now, or a runner broadcast TooManyErrors
+        before. Runners call this whenever they count errors and abort via
+        TooManyErrors when it is True."""
+        if self.total_errors() > self.max_errors:
             self.tripped = True
-        return breached
+        return self.tripped
 
     def broadcast_too_many_errors(self, source_runner) -> None:
         with self._lock:

@@ -9,16 +9,22 @@ Reference parity (etl-job/src/job.rs:27-643):
   (job.rs:606-643);
 - ``run_output_task`` — detached parallel pipelines awaited at ``complete``
   (job.rs:433-451, job.rs:280-314);
-- ``max_errors`` budget → TooManyErrors (job.rs:44-46,258-263,694-695);
-- per-input-file accounting (stream.rs:266-308) via ``_source`` groupBy.
+- ``max_errors`` budget → TooManyErrors (job.rs:44-46,258-263,694-695),
+  per runner and, through a ``JobManager``, fleet-wide;
+- per-input-file accounting (stream.rs:266-308) via ``_source``.
 
 Engine semantics (clean, per SURVEY §7.4): ok = parsed rows, err = corrupt
-rows; stats finalize only after the sink action returns (§4.3). The pump
-loop / channels collapse into one Spark action per step.
+rows. The pump loop and channels collapse into one step lifecycle shared
+by ``run_stream`` and ``run_stream_handler``: cache the frame, run ONE
+counting aggregate (``groupBy([_source,] is_err).count()``) that gives the
+error, ok and per-file counts, check the error budget, and only then hand
+the ok rows to the consumer (the sink write or the handler). Stats
+finalize after the consumer returns (§4.3).
 """
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Callable
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
@@ -37,7 +43,7 @@ from etl_tools_rs_spark.jobs.state import (
     StepStatus,
 )
 from etl_tools_rs_spark.sinks.simple_store import SimpleStore
-from etl_tools_rs_spark.sources.files import CORRUPT_COL, SOURCE_COL, split_ok_err
+from etl_tools_rs_spark.sources.files import SOURCE_COL, is_error, split_ok_err
 
 
 class JobRunnerError(Exception):
@@ -138,16 +144,30 @@ class JobRunner:
     def _save(self) -> None:
         self.state.save(self.store)
 
-    def _check_budget(self, step: StepStatus) -> None:
-        if self.num_errors > self.max_errors:
-            self.state.error_step(step.name, "TooManyErrors")
-            self.state.run_status = RUN_FATAL
-            self._save()
-            if self.manager is not None:
-                self.manager.broadcast_too_many_errors(self)
-            raise TooManyErrors(
-                f"{self.state.name}: {self.num_errors} errors > budget {self.max_errors}"
-            )
+    def _add_errors(self, step: StepStatus, n: int) -> None:
+        """Count ``n`` errors against ``step`` and check the error budgets.
+
+        Raises TooManyErrors when this runner's total exceeds its
+        ``max_errors``, or when it has a manager whose fleet-wide total
+        exceeds the manager's ``max_errors`` or which already tripped
+        (job_manager.rs:82-90). The step is recorded Error and the run
+        Fatal before the raise."""
+        self.num_errors += n
+        step.num_errors += n
+        own = self.num_errors > self.max_errors
+        fleet = self.manager is not None and self.manager.check_global_budget()
+        if not (own or fleet):
+            return
+        self.state.error_step(step.name, "TooManyErrors")
+        self.state.run_status = RUN_FATAL
+        self._save()
+        if own and self.manager is not None:
+            self.manager.broadcast_too_many_errors(self)
+        raise TooManyErrors(
+            f"{self.state.name}: {self.num_errors} errors > budget {self.max_errors}"
+            if own
+            else f"{self.state.name}: job manager budget {self.manager.max_errors} tripped"
+        )
 
     def _skip_or_start(self, name: str, kind: str) -> StepStatus | None:
         if self.state.step_is_complete(name):
@@ -159,46 +179,53 @@ class JobRunner:
         self._save()
         return step
 
-    # -- run_stream (job.rs:318-412) ----------------------------------------
-    def run_stream(
+    def _count(self, step: StepStatus, df: DataFrame) -> int:
+        """The step's one counting action: ``groupBy([_source,] is_err)
+        .count()`` gives the error count, the ok count (returned) and the
+        per-input-file counts (stream.rs:266-308) together. The error
+        budgets are checked here, before any consumer runs."""
+        keys = [SOURCE_COL] if SOURCE_COL in df.columns else []
+        rows = df.groupBy(*keys, is_error(df).alias("is_err")).count().collect()
+        if keys:
+            for r in rows:
+                step.inputs[r[SOURCE_COL]] = step.inputs.get(r[SOURCE_COL], 0) + r["count"]
+        n_err = sum(r["count"] for r in rows if r["is_err"])
+        self._add_errors(step, n_err)
+        return sum(r["count"] for r in rows) - n_err
+
+    def _stream_step(
         self,
         name: str,
         df: DataFrame,
-        sink: Any,
-        count_by_source: bool = True,
+        consume: Callable[[DataFrame, StepStatus, int], int],
+        prepare: Callable[[DataFrame], DataFrame | None] | None = None,
     ) -> StepStatus | None:
-        """Source→sink step: split ok/corrupt, enforce the error budget,
-        write ok rows, record per-file + total stats, mark Complete.
-
-        One extra action computes counts (cache bounds the recompute);
-        the sink write is the main action. Stats finalize after the write
-        returns (sink-acknowledged, SURVEY §4.3)."""
+        """The lifecycle of both stream steps, in order: skip a Complete
+        step or start it; ``prepare`` the frame (a handler's init: None
+        means Skip, and the step completes untouched); cache it; run the
+        one counting aggregate, which records ``num_errors`` and ``inputs``
+        and checks the error budgets; hand the ok rows and their count to
+        ``consume``, which returns the rows it accepted. Stats finalize
+        only after ``consume`` returns (SURVEY §4.3). Any failure other
+        than a JobRunnerError records the step Error and the run Fatal."""
         step = self._skip_or_start(name, "stream")
         if step is None:
             return None
-        # cache the PARSED frame: (a) the ok/err/per-file counts and the sink
-        # write reuse one scan+parse; (b) Spark disallows counting only the
-        # corrupt column straight off a raw file scan
-        # (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the cache boundary is the
-        # documented remedy
+        if prepare is not None:
+            df = prepare(df)
+            if df is None:
+                self.state.complete_step(name)
+                self._save()
+                return step
+        # cache the PARSED frame: (a) the count and the consumer reuse one
+        # scan+parse; (b) Spark disallows querying only the corrupt column
+        # straight off a raw file scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN) —
+        # the cache boundary is the documented remedy
         df = df.cache()
-        ok, err = split_ok_err(df)
         try:
-            n_err = err.count()
-            self.num_errors += n_err
-            step.num_errors = n_err
-            self._check_budget(step)
-            if count_by_source and SOURCE_COL in df.columns:
-                per_file = (
-                    df.groupBy(SOURCE_COL).agg(F.count(F.lit(1)).alias("n")).collect()
-                )
-                step.inputs = {r[SOURCE_COL]: r["n"] for r in per_file}
-            n_ok = ok.count()
-            step.total_lines_scanned = n_ok + n_err
-            out_df = ok.drop(SOURCE_COL) if SOURCE_COL in ok.columns else ok
-            result = sink.write(out_df)
-            written = result if isinstance(result, int) and result >= 0 else n_ok
-            step.outputs[getattr(sink, "path", type(sink).__name__)] = written
+            n_ok = self._count(step, df)
+            n_ok = consume(split_ok_err(df)[0], step, n_ok)
+            step.total_lines_scanned = n_ok + step.num_errors
             self.state.complete_step(name)
             self._save()
             return step
@@ -212,6 +239,25 @@ class JobRunner:
         finally:
             df.unpersist()
 
+    # -- run_stream (job.rs:318-412) ----------------------------------------
+    def run_stream(self, name: str, df: DataFrame, sink: Any) -> StepStatus | None:
+        """Source→sink step. One counting aggregate records the ok, error
+        and per-file counts and checks the error budget; only then are the
+        ok rows, without ``_source``, written to ``sink`` — a breached
+        budget writes nothing. ``outputs`` keys the sink's ``path`` (or its
+        class name) to the row count ``sink.write`` returns, or to the ok
+        count when it returns none. Into a ``FileSink`` a step runs four
+        Spark jobs: three for the aggregate over the cached frame, one for
+        the write."""
+
+        def write(ok: DataFrame, step: StepStatus, n_ok: int) -> int:
+            result = sink.write(ok.drop(SOURCE_COL))
+            written = result if isinstance(result, int) else n_ok
+            step.outputs[getattr(sink, "path", type(sink).__name__)] = written
+            return n_ok
+
+        return self._stream_step(name, df, write)
+
     # -- run_stream_handler (job.rs:457-602) --------------------------------
     def run_stream_handler(
         self,
@@ -220,116 +266,83 @@ class JobRunner:
         handler: StreamHandler,
         order_by: list[str] | None = None,
     ) -> StepStatus | None:
-        """Custom consumer with resume semantics.
+        """Custom consumer with Start/Skip/Resume{index} semantics, on the
+        same lifecycle as ``run_stream``: ``handler.init`` runs once the
+        step starts; one counting aggregate records the decode errors and
+        per-file counts, and the error budget is checked before the
+        handler sees a row. The handler receives only ok rows, and the
+        errors it reports count against the budget as they arrive.
+
+        Which path runs:
+
+        - ``process_partition`` overridden, init Start, no ``order_by``,
+          classic session: on executors via ``foreachPartition``; counts
+          return through accumulators (one Spark action, no per-row driver
+          traffic);
+        - the same on Spark Connect (no accumulators): driver-side as one
+          pseudo-partition over ``toLocalIterator``, with a RuntimeWarning;
+        - otherwise the ordered driver loop over ``process_item``; a row
+          that raises counts as one error.
 
         Resume contract: the reference relies on stable source order
-        (job.rs:677-679); the engine makes that explicit — ``order_by``
-        defines the deterministic ordering that ``Resume{index}`` filters
-        against via row_number (SURVEY §7.3). Without order_by, resume is
-        refused (no deterministic order exists in a distributed scan).
+        (job.rs:677-679); the engine makes it explicit — ``order_by``
+        defines the ordering that ``Resume{index}`` filters against via
+        row_number (SURVEY §7.3). Without order_by, resume is refused (no
+        deterministic order exists in a distributed scan)."""
+        init = HandlerInit.start()
 
-        Execution path: when the handler overrides ``process_partition``,
-        init returned Start, and no ``order_by`` is requested, the handler
-        runs ON EXECUTORS via ``foreachPartition`` (ok/err counts flow back
-        through accumulators — one Spark action, no per-row driver
-        traffic). Otherwise the ordered driver loop over ``process_item``
-        runs (required for Resume, which needs a global row_number)."""
-        step = self._skip_or_start(name, "stream")
-        if step is None:
-            return None
-        init = handler.init(self)
-        if init.action == "skip":
-            self.state.complete_step(name)
-            self._save()
-            return self.state.step_history[name]
-        work = df
-        if init.action == "resume":
-            if not order_by:
-                raise JobRunnerError("resume requires order_by for deterministic order")
-            w = Window.orderBy(*order_by)
-            work = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") > init.index)
-                .drop("_rn")
-            )
-        try:
-            work = work.cache()  # same corrupt-column caveat as run_stream
-            ok, err = split_ok_err(work)
-            n_err = err.count()
-            self.num_errors += n_err
-            step.num_errors = n_err
-            self._check_budget(step)
+        def prepare(frame: DataFrame) -> DataFrame | None:
+            nonlocal init
+            init = handler.init(self)
+            if init.action == "skip":
+                return None
+            if init.action == "resume":
+                if not order_by:
+                    raise JobRunnerError("resume requires order_by for deterministic order")
+                rn = F.row_number().over(Window.orderBy(*order_by))
+                frame = frame.withColumn("_rn", rn).filter(F.col("_rn") > init.index).drop("_rn")
+            return frame
+
+        def consume(ok: DataFrame, step: StepStatus, n_ok: int) -> int:
             partition_mode = (
-                handler.has_partition_path()
-                and init.action == "start"
-                and order_by is None
+                handler.has_partition_path() and init.action == "start" and order_by is None
             )
             if partition_mode and not is_connect(ok.sparkSession):
-                n_ok = self._run_partition_handler(ok, handler, step)
+                n_ok = self._run_partition_handler(ok, handler, step, n_ok)
             elif partition_mode:
-                # Spark Connect (r4 audit): no sparkContext / classic
-                # accumulators for the executor path — run the SAME
-                # process_partition contract driver-side as one pseudo-
-                # partition over toLocalIterator, with a loud warning
-                # (ordered-loop handlers are unaffected; partition-only
-                # handlers keep working instead of dying on sparkContext)
-                import warnings
-
                 warnings.warn(
                     "Spark Connect session: process_partition runs "
                     "driver-side as a single pseudo-partition (no "
                     "foreachPartition accumulators on Connect)",
                     RuntimeWarning,
-                    stacklevel=2,
+                    stacklevel=4,
                 )
                 res = handler.process_partition(ok.toLocalIterator())
                 if res is not None:
-                    n_ok, extra_err = int(res[0]), int(res[1])
-                    if extra_err:
-                        self.num_errors += extra_err
-                        step.num_errors += extra_err
-                        self._check_budget(step)
-                else:
-                    n_ok = ok.count()
+                    n_ok = int(res[0])
+                    self._add_errors(step, int(res[1]))
             else:
-                rows = (
-                    ok.toLocalIterator()
-                    if order_by is None
-                    else ok.orderBy(*order_by).toLocalIterator()
-                )
-                n_ok = 0
+                rows = ok.orderBy(*order_by) if order_by else ok
                 base = init.index if init.action == "resume" else 0
-                for i, row in enumerate(rows):
+                n_ok = 0
+                for i, row in enumerate(rows.toLocalIterator()):
                     try:
                         handler.process_item(base + i, row, self)
                         n_ok += 1
                     except Exception:
-                        self.num_errors += 1
-                        step.num_errors += 1
-                        self._check_budget(step)
-            step.total_lines_scanned = n_ok + step.num_errors
+                        self._add_errors(step, 1)
             handler.shutdown(self)
-            self.state.complete_step(name)
-            self._save()
-            return step
-        except JobRunnerError:
-            raise
-        except Exception as e:
-            self.state.error_step(name, str(e))
-            self.state.run_status = RUN_FATAL
-            self._save()
-            raise
-        finally:
-            work.unpersist()
+            return n_ok
+
+        return self._stream_step(name, df, consume, prepare)
 
     def _run_partition_handler(
-        self, ok: DataFrame, handler: StreamHandler, step: StepStatus
+        self, ok: DataFrame, handler: StreamHandler, step: StepStatus, n_ok: int
     ) -> int:
         """Executor-side dispatch: one ``foreachPartition`` action runs
         ``handler.process_partition`` per task; ok/err counts flow back via
-        accumulators (classic-mode; under Spark Connect the driver loop is
-        the fallback). A handler that returns ``None`` reports no counts,
-        so ok falls back to one ``count()`` on the cached frame."""
+        accumulators. When a partition returns ``None`` (no counts), ok is
+        the aggregate's ``n_ok`` less the errors the others reported."""
         sc = ok.sparkSession.sparkContext
         ok_acc = sc.accumulator(0)
         err_acc = sc.accumulator(0)
@@ -348,16 +361,8 @@ class JobRunner:
                     pass
 
         ok.foreachPartition(_part)
-        n_err = err_acc.value
-        if n_err:
-            self.num_errors += n_err
-            step.num_errors += n_err
-            self._check_budget(step)
-        if silent_acc.value == 0:
-            return ok_acc.value
-        # some partitions reported no counts → books incomplete; one count()
-        # on the cached frame closes them (cache hit, no rescan)
-        return ok.count() - n_err
+        self._add_errors(step, err_acc.value)
+        return ok_acc.value if silent_acc.value == 0 else n_ok - err_acc.value
 
     def run_stream_handler_fn(
         self, name: str, df: DataFrame, fn: Callable[[int, Row, "JobRunner"], None]
@@ -408,19 +413,11 @@ class JobRunner:
                 self.state.complete_step(name)
                 self._save()
                 return result
-            except retry_on as e:
-                if attempt < retries:
+            except Exception as e:
+                if isinstance(e, retry_on) and attempt < retries:
                     do_sleep(min(backoff_s * (2**attempt), backoff_cap_s))
                     attempt += 1
                     continue
-                self.state.error_step(name, str(e))
-                if self.stop_on_error:
-                    self.state.run_status = RUN_FATAL
-                    self._save()
-                    raise JobStepError(f"step {name!r}: {e}") from e
-                self._save()
-                return None
-            except Exception as e:
                 self.state.error_step(name, str(e))
                 if self.stop_on_error:
                     self.state.run_status = RUN_FATAL

@@ -566,30 +566,10 @@ def kmeans_centroids_exact(
     return centroids
 
 
-def nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
-    """Index of the nearest centroid by squared L2 — JVM-side fold over a
-    broadcast centroid array literal (no Python in the loop).
-
-    Pure-JVM alternative to ``nearest_cells_udf``; note that higher-order
-    functions are interpreted (never codegen) and the literal tree is
-    k×dim nodes, so for dense linear algebra the Arrow-vectorized UDF is
-    the faster path at any scale."""
-    carr = F.expr("array(" + ", ".join(_sql_vector(c) for c in centroids) + ")")
-    dists = F.transform(
-        carr,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    return F.array_position(dists, F.array_min(dists)).cast("int") - 1
-
-
 def nearest_cells_udf(centroids: list[list[float]], n_probe: int = 1):
     """Arrow-vectorized centroid probe: pandas UDF mapping a vector column
     to its ``n_probe`` nearest centroid indices (array<int>, distance-
-    ranked, index tie-break — same ordering as the JVM column form).
+    ranked, ties broken by the lower centroid index).
 
     Dense k×dim×batch distance math belongs in one numpy matmul per Arrow
     batch, not an interpreted per-element HOF fold: centroids ride the

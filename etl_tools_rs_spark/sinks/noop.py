@@ -1,9 +1,8 @@
 """Null sink: consume the frame, return the row count.
 
 Reference parity: ``MockJsonDataOutput`` — serialize, log, count
-(etl-core/src/datastore/mock.rs:16-76). Spark's ``noop`` format executes the
-full plan without writing; we count via observe-free ``count()`` for the
-stats contract.
+(etl-core/src/datastore/mock.rs:16-76). ``write`` runs the full plan as one
+``count()`` and returns that count for the step stats.
 """
 
 from __future__ import annotations
@@ -15,10 +14,5 @@ from pyspark.sql import DataFrame
 
 @dataclass
 class NoopSink:
-    use_noop_format: bool = False
-
     def write(self, df: DataFrame) -> int:
-        if self.use_noop_format:
-            df.write.format("noop").mode("overwrite").save()
-            return -1  # noop format reports no counts
         return df.count()

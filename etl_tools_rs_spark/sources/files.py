@@ -34,11 +34,23 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 SOURCE_COL = "_source"
 CORRUPT_COL = "_corrupt_record"
+
+
+def with_corrupt_column(schema: str | StructType) -> StructType:
+    """``schema`` (DDL or struct) with a ``_corrupt_record string`` field
+    appended unless a field of that name exists. PERMISSIVE corrupt-record
+    capture needs the column in an explicitly supplied schema."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if CORRUPT_COL in schema.fieldNames():
+        return schema
+    return StructType([*schema.fields, StructField(CORRUPT_COL, StringType())])
 
 
 @dataclass
@@ -159,21 +171,13 @@ class FileSource:
         elif self.format == "csv":
             opts = self.csv_options.to_spark()
             if self.schema:
-                # PERMISSIVE corrupt-record capture needs the corrupt column in
-                # the schema when one is supplied explicitly.
-                schema = self.schema
-                if CORRUPT_COL not in schema:
-                    schema = f"{schema}, {CORRUPT_COL} string"
-                df = reader.options(**opts).schema(schema).csv(paths)
+                df = reader.options(**opts).schema(with_corrupt_column(self.schema)).csv(paths)
             else:
                 df = reader.options(**opts).option("inferSchema", "true").csv(paths)
         elif self.format == "json":
             opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
             if self.schema:
-                schema = self.schema
-                if CORRUPT_COL not in schema:
-                    schema = f"{schema}, {CORRUPT_COL} string"
-                df = reader.options(**opts).schema(schema).json(paths)
+                df = reader.options(**opts).schema(with_corrupt_column(self.schema)).json(paths)
             else:
                 df = reader.options(**opts).json(paths)
         elif self.format == "parquet":
@@ -191,10 +195,7 @@ class FileSource:
             }
             r = reader.options(**opts).format("xml")
             if self.schema:
-                schema = self.schema
-                if CORRUPT_COL not in schema:
-                    schema = f"{schema}, {CORRUPT_COL} string"
-                r = r.schema(schema)
+                r = r.schema(with_corrupt_column(self.schema))
             df = r.load(paths)
         else:
             raise ValueError(f"unknown format: {self.format}")
@@ -206,22 +207,33 @@ class FileSource:
 ERROR_COL = "_error"
 
 
+def _error_markers(df: DataFrame) -> list[str]:
+    return [c for c in (CORRUPT_COL, ERROR_COL) if c in df.columns]
+
+
+def is_error(df: DataFrame) -> Column:
+    """True on the error rows of ``df``: a non-null ``_corrupt_record``
+    (decode failure) or ``_error`` (transform failure); constant False
+    when ``df`` has neither column."""
+    flag = F.lit(False)
+    for m in _error_markers(df):
+        flag = flag | F.col(m).isNotNull()
+    return flag
+
+
 def split_ok_err(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split a frame into (ok_rows, error_rows) — the engine's clean
     definition of the reference's per-record lines_scanned / num_errors
     accounting (SURVEY §7.4). Error rows are decode failures
     (``_corrupt_record`` from PERMISSIVE parsing) and/or transform
     failures (``_error`` from operators.transform.with_error_column) —
-    both in-band, both counted against the budget."""
-    markers = [c for c in (CORRUPT_COL, ERROR_COL) if c in df.columns]
+    both in-band, both counted against the budget. The ok side drops
+    both marker columns."""
+    markers = _error_markers(df)
     if not markers:
         return df, df.limit(0)
-    is_err = F.lit(False)
-    for m in markers:
-        is_err = is_err | F.col(m).isNotNull()
-    ok = df.filter(~is_err).drop(*markers)
-    err = df.filter(is_err)
-    return ok, err
+    flag = is_error(df)
+    return df.filter(~flag).drop(*markers), df.filter(flag)
 
 
 def list_files(prefix: str, regex: str | None = None, glob: str | None = None) -> list[str]:

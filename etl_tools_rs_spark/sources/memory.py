@@ -25,7 +25,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_tools_rs_spark.sources.files import CORRUPT_COL, CsvOptions
+from etl_tools_rs_spark.sources.files import (
+    CORRUPT_COL,
+    CsvOptions,
+    with_corrupt_column,
+)
 
 _TMP_ROOT: str | None = None
 
@@ -65,7 +69,7 @@ class JsonLinesSource:
     schema: str | None = None
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        from pyspark.sql.types import StringType, StructType
+        from pyspark.sql.types import StructType
 
         raw = _lines_df(spark, self.lines)
         if self.schema is None:
@@ -77,12 +81,11 @@ class JsonLinesSource:
             ]
             schema = StructType(inferred)
         else:
-            schema = StructType.fromDDL(self.schema)
+            schema = self.schema
         # the corrupt column must live INSIDE the from_json schema:
         # PERMISSIVE mode fills it for malformed lines (a null-struct check
         # does not work — Spark returns an all-null row, not a null struct)
-        if CORRUPT_COL not in schema.fieldNames():
-            schema = schema.add(CORRUPT_COL, StringType())
+        schema = with_corrupt_column(schema)
         parsed = raw.select(
             F.from_json(
                 "value",
@@ -106,10 +109,7 @@ class CsvLinesSource:
         opts = self.csv_options.to_spark()
         reader = spark.read.options(**opts)
         if self.schema:
-            schema = self.schema
-            if CORRUPT_COL not in schema:
-                schema = f"{schema}, {CORRUPT_COL} string"
-            reader = reader.schema(schema)
+            reader = reader.schema(with_corrupt_column(self.schema))
         else:
             reader = reader.option("inferSchema", "true")
         # cache boundary: file-backed scans refuse corrupt-column-only

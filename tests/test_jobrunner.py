@@ -115,3 +115,68 @@ def test_run_stream_file_to_file(spark, fixture_dir, tmp_path):
     assert "_corrupt_record" not in back.columns
     assert "_source" not in back.columns  # engine columns stripped at the sink
     assert step.total_lines_scanned == 10 and step.num_errors == 1
+
+
+def test_manager_budget_stops_fleet(spark):
+    # two runners, each within its own budget, whose combined errors
+    # exceed the manager's: the second to count its errors is stopped,
+    # and the tripped manager stops the first runner's next step
+    store = MemoryStore()
+    mgr = JobManager(max_errors=3)
+    jr_a = JobRunner("jf", "job_a", store, max_errors=2, manager=mgr)
+    jr_b = JobRunner("jf", "job_b", store, max_errors=2, manager=mgr)
+    df = JsonLinesSource(F1_LINES, schema=F1_SCHEMA).to_df(spark)  # 3 ok / 2 err
+    assert jr_a.run_stream("load", df, NoopSink()).num_errors == 2
+    with pytest.raises(TooManyErrors, match="manager"):
+        jr_b.run_stream("load", df, NoopSink())
+    assert mgr.tripped and mgr.total_errors() == 4
+    assert jr_b.state.run_status == RUN_FATAL
+    assert jr_b.state.step_history["load"].status == "Error"
+    clean = JsonLinesSource([F1_LINES[0]], schema=F1_SCHEMA).to_df(spark)
+    with pytest.raises(TooManyErrors):
+        jr_a.run_stream("again", clean, NoopSink())
+
+
+def test_run_stream_one_aggregate_spark_jobs(spark, tmp_path):
+    # one counting aggregate gives ok, err and per-file counts before the
+    # write: four Spark jobs per step into a FileSink (three for the
+    # aggregate over the cached frame, one for the write)
+    import os
+
+    from etl_tools_rs_spark.sinks.files import FileSink
+
+    paths = []
+    for f in range(3):
+        p = tmp_path / f"part{f}.ndjson"
+        lines = [
+            "{not json" if i % 10 == f else f'{{"index": "{i}", "words": "w{i}"}}'
+            for i in range(40 + 10 * f)
+        ]
+        p.write_text("\n".join(lines) + "\n")
+        paths.append(str(p))
+    src = FileSource(paths, format="json", schema="index string, words string")
+    sc = spark.sparkContext
+    group = "test_run_stream_one_aggregate_spark_jobs"
+    out = str(tmp_path / "out")
+    sc.setJobGroup(group, "one run_stream step")
+    try:
+        step = JobRunner("jc", "jobs", MemoryStore()).run_stream(
+            "load", src.to_df(spark), FileSink(out)
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert {os.path.basename(k): v for k, v in step.inputs.items()} == {
+        "part0.ndjson": 40, "part1.ndjson": 50, "part2.ndjson": 60
+    }
+    assert step.num_errors == 4 + 5 + 6
+    assert step.total_lines_scanned == 150
+    assert step.outputs == {out: 135}
+    assert spark.read.parquet(out).count() == 135
+
+    # a breached budget writes nothing
+    out2 = str(tmp_path / "out2")
+    jr = JobRunner("jc2", "jobs", MemoryStore(), max_errors=14)
+    with pytest.raises(TooManyErrors):
+        jr.run_stream("load", src.to_df(spark), FileSink(out2))
+    assert not os.path.exists(out2)

@@ -39,6 +39,16 @@ def test_json_file_source_error_as_record(spark, fixture_dir):
     assert SOURCE_COL in df.columns
     src = ok.select(SOURCE_COL).distinct().collect()
     assert len(src) == 1 and src[0][0].endswith("10_lines.ndjson")
+    # a user column whose name merely contains "_corrupt_record" must not
+    # stop the corrupt column from being appended to the schema
+    df = FileSource(
+        [str(fixture_dir / "10_lines.ndjson")],
+        format="json",
+        schema="index string, words string, _corrupt_record_raw string",
+    ).to_df(spark).cache()
+    ok, err = split_ok_err(df)
+    assert CORRUPT_COL in df.columns and "_corrupt_record_raw" in ok.columns
+    assert (ok.count(), err.count()) == (9, 1)
 
 
 def test_csv_file_source_clean(spark, fixture_dir):
@@ -75,6 +85,12 @@ def test_csv_strict_schema_corrupt_rows(spark):
     ok, err = split_ok_err(src.to_df(spark))
     assert ok.count() == 2
     assert err.count() == 1
+    src = CsvLinesSource(
+        ["id,qty,_corrupt_record_raw", "1,10,a", "2,notanint,b", "3,30,c"],
+        schema="id int, qty int, _corrupt_record_raw string",
+    )
+    ok, err = split_ok_err(src.to_df(spark))
+    assert (ok.count(), err.count()) == (2, 1)
 
 
 def test_json_lines_source_f1_mix(spark):
