@@ -158,9 +158,7 @@ class JobRunner:
         fleet = self.manager is not None and self.manager.check_global_budget()
         if not (own or fleet):
             return
-        self.state.error_step(step.name, "TooManyErrors")
-        self.state.run_status = RUN_FATAL
-        self._save()
+        self._fail(step.name, "TooManyErrors")
         if own and self.manager is not None:
             self.manager.broadcast_too_many_errors(self)
         raise TooManyErrors(
@@ -168,6 +166,12 @@ class JobRunner:
             if own
             else f"{self.state.name}: job manager budget {self.manager.max_errors} tripped"
         )
+
+    def _fail(self, name: str, message: str) -> None:
+        """Record step ``name`` Error and the run Fatal, and save."""
+        self.state.error_step(name, message)
+        self.state.run_status = RUN_FATAL
+        self._save()
 
     def _skip_or_start(self, name: str, kind: str) -> StepStatus | None:
         if self.state.step_is_complete(name):
@@ -206,25 +210,29 @@ class JobRunner:
         one counting aggregate, which records ``num_errors`` and ``inputs``
         and checks the error budgets; hand the ok rows and their count to
         ``consume``, which returns the rows it accepted. Stats finalize
-        only after ``consume`` returns (SURVEY §4.3). Any failure other
-        than a JobRunnerError records the step Error and the run Fatal."""
+        only after ``consume`` returns (SURVEY §4.3). Any failure, in
+        ``prepare`` too, leaves the step Error and the run Fatal in the
+        saved state (a JobRunnerError has recorded that before it is
+        raised)."""
         step = self._skip_or_start(name, "stream")
         if step is None:
             return None
-        if prepare is not None:
-            df = prepare(df)
-            if df is None:
-                self.state.complete_step(name)
-                self._save()
-                return step
-        # cache the PARSED frame: (a) the count and the consumer reuse one
-        # scan+parse; (b) Spark disallows querying only the corrupt column
-        # straight off a raw file scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN) —
-        # the cache boundary is the documented remedy
-        df = df.cache()
+        cached = None
         try:
-            n_ok = self._count(step, df)
-            n_ok = consume(split_ok_err(df)[0], step, n_ok)
+            if prepare is not None:
+                df = prepare(df)
+                if df is None:
+                    self.state.complete_step(name)
+                    self._save()
+                    return step
+            # cache the PARSED frame: (a) the count and the consumer reuse
+            # one scan+parse; (b) Spark disallows querying only the corrupt
+            # column straight off a raw file scan
+            # (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the cache boundary is
+            # the documented remedy
+            cached = df.cache()
+            n_ok = self._count(step, cached)
+            n_ok = consume(split_ok_err(cached)[0], step, n_ok)
             step.total_lines_scanned = n_ok + step.num_errors
             self.state.complete_step(name)
             self._save()
@@ -232,12 +240,11 @@ class JobRunner:
         except JobRunnerError:
             raise
         except Exception as e:
-            self.state.error_step(name, str(e))
-            self.state.run_status = RUN_FATAL
-            self._save()
+            self._fail(name, str(e))
             raise
         finally:
-            df.unpersist()
+            if cached is not None:
+                cached.unpersist()
 
     # -- run_stream (job.rs:318-412) ----------------------------------------
     def run_stream(self, name: str, df: DataFrame, sink: Any) -> StepStatus | None:
@@ -298,7 +305,9 @@ class JobRunner:
                 return None
             if init.action == "resume":
                 if not order_by:
-                    raise JobRunnerError("resume requires order_by for deterministic order")
+                    msg = "resume requires order_by for deterministic order"
+                    self._fail(name, msg)
+                    raise JobRunnerError(msg)
                 rn = F.row_number().over(Window.orderBy(*order_by))
                 frame = frame.withColumn("_rn", rn).filter(F.col("_rn") > init.index).drop("_rn")
             return frame
@@ -418,11 +427,10 @@ class JobRunner:
                     do_sleep(min(backoff_s * (2**attempt), backoff_cap_s))
                     attempt += 1
                     continue
-                self.state.error_step(name, str(e))
                 if self.stop_on_error:
-                    self.state.run_status = RUN_FATAL
-                    self._save()
+                    self._fail(name, str(e))
                     raise JobStepError(f"step {name!r}: {e}") from e
+                self.state.error_step(name, str(e))
                 self._save()
                 return None
 

@@ -24,6 +24,7 @@ import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType, StructField, StructType
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
@@ -79,11 +80,11 @@ def _xxhash64_injective(gram_rows: DataFrame, g_col: str = "_g") -> bool:
     prove gram→hash is a bijection on THIS corpus, so replacing gram
     strings with their 8-byte hashes cannot change any set-cardinality
     arithmetic (intersections, unions, document frequencies) — the
-    exactness gate behind ``hash_grams="verified"`` in the set-similarity
-    operators (r9). Collision probability is ≈ G²/2⁶⁵ for G distinct
-    grams (~5·10⁻⁸ at G=10⁶), so the narrow path is taken essentially
-    always; the check turns "probably safe" into "unconditionally safe"
-    (callers fall back to string grams when it fails)."""
+    exactness gate of the hashed-gram narrowing in
+    :func:`ngram_jaccard_pairs` and :func:`prefix_jaccard_pairs`.
+    Collision probability is ≈ G²/2⁶⁵ for G distinct grams (~5·10⁻⁸ at
+    G=10⁶), so the narrow path is taken essentially always; callers fall
+    back to string grams when the check fails."""
     r = gram_rows.agg(
         F.countDistinct(F.col(g_col)).alias("_g_cnt"),
         F.countDistinct(F.xxhash64(F.col(g_col))).alias("_h_cnt"),
@@ -200,7 +201,6 @@ def dedup_minhash_lsh(
     hash_family: str = "xxhash64",
     max_bucket_size: int | None = None,
     oversize_policy: str = "salt",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs.
 
@@ -246,44 +246,26 @@ def dedup_minhash_lsh(
     anyway (cache/localCheckpoint, e.g. before connected_components)
     should semi-filter the corpus on candidate ids instead.
 
-    ``checkpoint`` (r9, shingle-once/bands-once): the interpreted
-    ``ngrams`` transform over every document used to run THREE times per
-    call (once inside the signature subtree per self-join side, once for
-    the verify frame — plus once more per verify side), and the
-    16-hash min-aggregate twice (both band-join sides). The default
-    lazily ``localCheckpoint``s (a) the tokenized ``(id, shingles)``
-    frame, feeding the signature AND both verify joins from one
-    materialization, and (b) the narrow ``(id, band, bucket)`` band
-    table, so both self-join sides read the same blocks. Pure
-    plan-shape change; ``False`` restores the recompute shape for
-    corpora whose tokenized form outweighs local storage (the band
-    table is always narrow — docs × bands rows).
+    Materialization: the tokenized ``(id, shingles)`` frame is lazily
+    ``localCheckpoint``ed (DISK_ONLY) and feeds the signature stage and
+    both verify joins, so the interpreted ``ngrams`` runs once per
+    document; the narrow ``(id, band, bucket)`` table is checkpointed
+    too, so both self-join sides read the same blocks instead of each
+    re-running the 16-hash min-aggregate.
     """
     rows_per_band = num_hashes // bands
+    # DISK_ONLY: this is the largest frame the codebase checkpoints
+    # (corpus-scale shingle arrays) and it feeds 16-hash aggregations
+    # downstream — the default MEMORY_AND_DISK deserialized on-heap
+    # level is the block class that starved execution memory into OOM
+    # on large frames (see connected_components)
     toks = df.select(
         F.col(id_col).alias("_id"), ngrams(text_col, shingle_n).alias("_sh")
-    )
-    if checkpoint:
-        # DISK_ONLY (r10, ADVICE r9): this is the largest frame the
-        # codebase checkpoints (corpus-scale shingle arrays) and it
-        # feeds 16-hash aggregations downstream — the default
-        # MEMORY_AND_DISK deserialized on-heap level is the exact block
-        # class the r6 giant-component hardening identified as starving
-        # execution memory into OOM on large frames.
-        toks = toks.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.DISK_ONLY
-        )
-        # safe: _sh is a materialized attribute, so the inferred
-        # size/notnull generate-filter costs an array length check,
-        # not two extra interpreted ngrams passes (see minhash_table)
-        sig = _minhash_from_shingles(toks, "_id", "_sh", num_hashes, hash_family)
-    else:
-        # recompute shape: keep the explode INLINE over the raw corpus —
-        # exploding the _sh projection would trigger the
-        # InferFiltersFromGenerate 3x-ngrams pathology (minhash_table)
-        sig = minhash_table(
-            df, text_col, id_col, num_hashes, shingle_n, hash_family
-        ).withColumnRenamed(id_col, "_id")
+    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    # safe: _sh is a materialized attribute, so the inferred size/notnull
+    # generate-filter costs an array length check, not two extra
+    # interpreted ngrams passes (see minhash_table)
+    sig = _minhash_from_shingles(toks, "_id", "_sh", num_hashes, hash_family)
 
     def band_bucket(b: int) -> Column:
         cols = [F.col(f"_h{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
@@ -321,12 +303,9 @@ def dedup_minhash_lsh(
                 "bucket", F.xxhash64(F.col("bucket"), salt)
             ).drop("_n")
 
-    if checkpoint:
-        # bands-once (r9): both self-join sides (and, when the cap
-        # engages, the sizes aggregate's join-back) read the same
-        # materialized narrow (id, band, bucket) rows instead of each
-        # re-running the shingle explode + 16-hash min-aggregate
-        banded = banded.localCheckpoint(eager=False)
+    # both self-join sides (and, when the cap engages, the sizes
+    # aggregate's join-back) read the same materialized narrow rows
+    banded = banded.localCheckpoint(eager=False)
     # shuffle_hash pin (r7): the build side sits above the band-struct
     # Generate, so Catalyst's size estimate predates the ×bands fan-out —
     # the exact mis-plan class that broadcast fuzzy_join's 8.5M-row
@@ -346,13 +325,11 @@ def dedup_minhash_lsh(
         .distinct()
     )
 
-    # verify reads the SAME tokenized frame the signature stage consumed
-    # (one interpreted ngrams pass over the corpus when checkpointing,
-    # r9) — joined only to the (small) verified candidate-pair set
-    sh = toks
+    # verify reads the SAME tokenized frame the signature stage consumed,
+    # joined only to the (small) candidate-pair set
     cand = (
-        pairs.join(sh.withColumnsRenamed({"_id": "id_a", "_sh": "_sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"_id": "id_b", "_sh": "_sh_b"}), "id_b")
+        pairs.join(toks.withColumnsRenamed({"_id": "id_a", "_sh": "_sh_a"}), "id_a")
+        .join(toks.withColumnsRenamed({"_id": "id_b", "_sh": "_sh_b"}), "id_b")
         .select(
             "id_a",
             "id_b",
@@ -462,6 +439,33 @@ def dedup_simhash(
     )
 
 
+def _gram_blocks(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    block_col: Column | None,
+) -> DataFrame:
+    """``(_id, _ng, _blk)``: each document's distinct n-gram array and
+    its block key (``block_col``, default the first token), documents
+    without an n-gram dropped — the input of the blocked set-similarity
+    self-joins. Lazily ``localCheckpoint``ed, so the interpreted
+    ``ngrams()`` runs once per document instead of once per join side."""
+    return (
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.array_distinct(ngrams(text_col, n)).alias("_ng"),
+            (
+                block_col
+                if block_col is not None
+                else F.element_at(tokens(text_col), 1)
+            ).alias("_blk"),
+        )
+        .filter(F.size("_ng") > 0)
+        .localCheckpoint(eager=False)
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -469,51 +473,28 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     block_col: Column | None = None,
-    hash_grams: bool | str = False,
-    checkpoint: bool = True,
 ) -> DataFrame:
-    """Exact pairwise n-gram Jaccard similarity above a threshold.
+    """Exact pairwise n-gram Jaccard similarity above a threshold:
+    ``(id_a, id_b, jaccard)`` with ``id_a < id_b`` and the raw (unrounded)
+    ratio.
 
     O(n²) within a block — the verification / small-partition path. Callers
     at scale MUST provide ``block_col`` (e.g. a language or length bucket)
     so the self-join stays within blocks; default blocks on first token,
     which bounds pair counts for natural corpora.
 
-    ``hash_grams`` (r9) narrows the quadratic self-join's payload: each
-    gram string in the per-doc array is replaced by its ``xxhash64``
-    BEFORE the block shuffle, so the join ships ``array<bigint>`` (8
-    bytes/gram) instead of wide strings and the per-pair
-    intersect/union compares longs. The jaccard value depends only on
-    set CARDINALITIES, which any injective gram→hash map preserves —
-    ``"verified"`` proves injectivity on this corpus first (one
-    aggregate job, :func:`_xxhash64_injective`) and falls back to
-    string grams on a collision, so the output is UNCONDITIONALLY
-    identical (the oracle-checked registry mode); ``True`` skips the
-    check (bounded-error scale mode, error ≈ G²/2⁶⁵).
-
-    ``checkpoint`` (r9) lazily ``localCheckpoint``s the tokenized
-    frame so the interpreted ``ngrams()`` transform runs ONCE per
-    corpus instead of once per self-join side (plus once more for the
-    injectivity check in verified mode); when hashing engages, the
-    hashed frame is checkpointed again so the per-gram ``xxhash64``
-    also runs once, not per side. Pure plan-shape change — both join
-    sides read the same materialized rows."""
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(ngrams(text_col, n)).alias("_ng"),
-        (block_col if block_col is not None else F.element_at(tokens(text_col), 1)).alias(
-            "_blk"
-        ),
-    ).filter(F.size("_ng") > 0)
-    if checkpoint:
-        toks = toks.localCheckpoint(eager=False)
-    if hash_grams and (
-        hash_grams != "verified"
-        or _xxhash64_injective(toks.select(F.explode("_ng").alias("_g")))
-    ):
-        toks = toks.withColumn("_ng", F.transform("_ng", lambda g: F.xxhash64(g)))
-        if checkpoint:
-            toks = toks.localCheckpoint(eager=False)
+    The self-join ships each gram as its 8-byte ``xxhash64`` instead of
+    the string, and the per-pair intersect/union compares longs. Jaccard
+    depends only on set cardinalities, which an injective gram→hash map
+    preserves; one aggregate job proves injectivity on this corpus
+    (:func:`_xxhash64_injective`) and a collision falls back to string
+    grams, so the output is the string-gram output. The hashed frame is
+    checkpointed, so each gram hashes once."""
+    toks = _gram_blocks(df, text_col, id_col, n, block_col)
+    if _xxhash64_injective(toks.select(F.explode("_ng").alias("_g"))):
+        toks = toks.withColumn(
+            "_ng", F.transform("_ng", lambda g: F.xxhash64(g))
+        ).localCheckpoint(eager=False)
     a = toks.alias("a")
     b = toks.alias("b")
     return (
@@ -639,10 +620,8 @@ def connected_components(
     algorithm" / §3.1 broadcast reasoning): the edge count is already on
     the driver (it seeds the count-first fixpoint), so when the
     materialized DISTINCT edge list is small — ``driver_max_edges``,
-    default 1,000,000 edges ≈ 16 MB of key data, the envelope Spark
-    itself collects to the driver for any broadcast join — the exact
-    union-find runs driver-side in one pass and the labels return as a
-    LOCAL relation. That replaces 4+ shuffles per star round (each a
+    default 1,000,000 edges — the exact union-find runs driver-side in
+    one pass and the labels return as a LOCAL relation. That replaces 4+ shuffles per star round (each a
     fixed-cost 2-job barrier that dominates answer-sized graphs: the CC
     tail of ``dedup_fuzzy_customers`` measured 4.3 s at sf0.1 on a
     few-hundred-edge graph) with one collect, and — because Catalyst
@@ -654,7 +633,20 @@ def connected_components(
     simply never pays fixpoint overhead on graphs that fit a broadcast.
     ``driver_max_edges``: ``None`` reads ``SPARK_GRAFT_CC_DRIVER_MAX_EDGES``
     (default 1,000,000); 0 disables the driver path.
+
+    Ids must not be float or double: the driver path orders ids with
+    Python's ``<``, which disagrees with Spark's ordering on NaN, so the
+    two paths could label a component differently. Such columns raise
+    ``ValueError`` before any Spark job runs.
     """
+    for c in (a_col, b_col):
+        id_t = pairs.schema[c].dataType
+        if isinstance(id_t, (FloatType, DoubleType)):
+            raise ValueError(
+                f"connected_components: id column {c!r} is "
+                f"{id_t.simpleString()}; float ids are not supported "
+                "(NaN orders differently in Python and Spark)"
+            )
     _cp = lambda df: df.localCheckpoint(  # noqa: E731 — one knob, used 3×
         eager=True, storageLevel=StorageLevel.DISK_ONLY
     )
@@ -712,8 +704,6 @@ def connected_components(
                 labels = _cc_union_find(
                     [(r[0], r[1]) for r in edges.collect()]
                 )
-                from pyspark.sql.types import StructField, StructType
-
                 return spark.createDataFrame(
                     labels,
                     StructType(
@@ -774,7 +764,6 @@ def keep_best_per_group(
     groups: DataFrame,
     quality_col: str,
     id_col: str = "doc_id",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Quality-aware canonical selection: given near-dup ``groups``
     (``(member_id, group_id)`` from :func:`connected_components`), keep
@@ -791,23 +780,16 @@ def keep_best_per_group(
     stage here is bounded by them — one quality join onto the group
     frame, ONE max-of-struct argmax per group (no window), a broadcast-
     friendly anti-join of losers against the corpus, and the keeper
-    join-back. The corpus shuffles once, on its id.
-
-    ``checkpoint`` (r9) lazily ``localCheckpoint``s the answer-sized
-    quality-joined group frame: it is consumed TWICE in the returned
-    plan (the per-group argmax and the loser derivation), and without
-    the checkpoint each consumer re-runs the corpus-side quality scan
-    (+ the ``quality_col`` expression, e.g. a token count) and the
-    group join. Pure plan-shape change — both consumers read the same
-    materialized rows; the frame is group-member-sized, never
-    corpus-sized.
+    join-back. The corpus shuffles once, on its id. The quality-joined
+    group frame feeds both the argmax and the loser derivation, so it is
+    lazily ``localCheckpoint``ed: the corpus-side quality scan (and the
+    ``quality_col`` expression) runs once. It is group-member-sized,
+    never corpus-sized.
     """
     q = df.select(
         F.col(id_col).alias("member_id"), F.col(quality_col).alias("_q")
     )
-    g = groups.join(q, "member_id")
-    if checkpoint:
-        g = g.localCheckpoint(eager=False)
+    g = groups.join(q, "member_id").localCheckpoint(eager=False)
     best = g.groupBy("group_id").agg(
         F.max(
             F.struct(
@@ -1050,8 +1032,6 @@ def containment_pairs(
     threshold: float = 0.8,
     block_col: Column | None = None,
     scale: int = 4,
-    hash_grams: bool | str = False,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Asymmetric n-gram containment: ``|A ∩ B| / |A|`` — how much of
     document A's shingle set appears in B. The quote/subset detector
@@ -1060,36 +1040,14 @@ def containment_pairs(
     (id_a, id_b) pairs BOTH ways when both directions pass — direction
     matters (A-inside-B ≠ B-inside-A).
 
-    Same block-bounded self-join shape as ngram_jaccard_pairs (callers
-    at scale supply ``block_col``), and the same ``hash_grams`` modes
-    (r9): containment ``|A∩B|/|A|`` is pure set-cardinality arithmetic,
-    so an injective gram→xxhash64 map leaves every emitted value
-    identical while the self-join ships ``array<bigint>`` instead of
-    strings — ``"verified"`` proves injectivity per run (one aggregate
-    job) with a string fallback; ``True`` skips the check.
-    ``checkpoint`` (r9) lazily ``localCheckpoint``s the tokenized frame
-    so ``ngrams()`` runs ONCE per corpus instead of once per self-join
-    side — a pure plan-shape change, both sides read the same
-    materialized rows. Containment is floor-scaled so the pair table is
+    Same block-bounded self-join over the same checkpointed gram frame
+    as :func:`ngram_jaccard_pairs` (callers at scale supply
+    ``block_col``), with string grams: the hashed-gram narrowing measured
+    slower here. Containment is floor-scaled so the pair table is
     engine-checkable. Returns ``(id_a, id_b, containment)`` where id_a
     is the contained side.
     """
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(ngrams(text_col, n)).alias("_ng"),
-        (block_col if block_col is not None else F.element_at(tokens(text_col), 1)).alias(
-            "_blk"
-        ),
-    ).filter(F.size("_ng") > 0)
-    if checkpoint:
-        toks = toks.localCheckpoint(eager=False)
-    if hash_grams and (
-        hash_grams != "verified"
-        or _xxhash64_injective(toks.select(F.explode("_ng").alias("_g")))
-    ):
-        toks = toks.withColumn("_ng", F.transform("_ng", lambda g: F.xxhash64(g)))
-        if checkpoint:
-            toks = toks.localCheckpoint(eager=False)
+    toks = _gram_blocks(df, text_col, id_col, n, block_col)
     a = toks.alias("a")
     b = toks.alias("b")
     p10 = float(10**scale)
@@ -1121,8 +1079,7 @@ def prefix_jaccard_pairs(
     threshold: float = 0.5,
     shingle_n: int = 3,
     scale: int = 6,
-    checkpoint: bool = True,
-    hash_grams: bool | str = False,
+    hash_grams: bool = False,
     max_df: int | None = None,
 ) -> DataFrame:
     """Blockless exact-Jaccard self-join via prefix filtering (the
@@ -1148,26 +1105,18 @@ def prefix_jaccard_pairs(
     ``hash_grams=True`` replaces each shingle string with its xxhash64
     before anything shuffles: the frequency agg, the per-doc ranking,
     the prefix self-join and the verify join all move 8-byte ints
-    instead of wide strings — the same key-narrowing that cut the
-    MinHash path 62%. A 64-bit collision merges two shingles
-    corpus-wide, so Jaccard error is bounded by the collision rate
-    ≈ ``G²/2⁶⁵`` for G distinct shingles — negligible below ~10⁹
-    shingles. ``hash_grams="verified"`` (r9) makes the narrowing
-    UNCONDITIONALLY exact and is what the oracle-checked registry
-    query runs: one aggregate job proves xxhash64 is injective on this
-    corpus's grams (:func:`_xxhash64_injective`; string fallback on a
-    collision), and injectivity suffices because (a) the prefix-filter
-    theorem holds for ANY global total order on grams — the
-    rarest-first order is a candidate-count heuristic, not a
-    correctness requirement — so re-ordering equal-df grams by hash
-    instead of string only changes which CANDIDATES are probed, never
-    which pairs pass, and (b) the verify stage recomputes the exact
-    count-based Jaccard from the full gram sets, whose cardinalities
-    any bijection preserves. The two modes' outputs are pinned equal
-    by a property test on random corpora. ``"verified"`` requires
-    ``max_df=None``: the capped mode's OUTPUT (not just its
-    candidates) depends on the gram tie-break order, so hashing there
-    is the documented bounded-recall ``True`` mode only.
+    instead of wide strings. One aggregate job first proves xxhash64
+    injective on this corpus's grams (:func:`_xxhash64_injective`) and
+    a collision falls back to string grams, so the output equals the
+    string-gram output: (a) the prefix-filter theorem holds for ANY
+    global total order on grams — rarest-first is a candidate-count
+    heuristic, not a correctness requirement — so ordering equal-df
+    grams by hash instead of string only changes which CANDIDATES are
+    probed, never which pairs pass, and (b) the verify stage recomputes
+    the exact count-based Jaccard from the full gram sets, whose
+    cardinalities any bijection preserves. ``hash_grams`` requires
+    ``max_df=None``: the capped mode's OUTPUT (not just its candidates)
+    depends on the gram tie-break order, which hashing changes.
 
     ``max_df`` is the DENSE-CORPUS SAFETY VALVE: grams whose corpus
     document frequency exceeds it never enter candidate generation
@@ -1191,22 +1140,19 @@ def prefix_jaccard_pairs(
         raise ValueError(f"threshold must be in (0,1], got {threshold!r}")
     if max_df is not None and max_df < 2:
         raise ValueError(f"max_df must be >= 2 (pairs need df 2), got {max_df!r}")
-    if hash_grams == "verified" and max_df is not None:
+    if hash_grams and max_df is not None:
         raise ValueError(
-            "hash_grams='verified' requires max_df=None: the capped mode's "
-            "output depends on the gram tie-break order, which hashing "
-            "changes — use hash_grams=True (bounded-recall scale mode) or "
-            "drop the cap"
+            "hash_grams requires max_df=None: the capped mode's output "
+            "depends on the gram tie-break order, which hashing changes"
         )
     p10 = float(10**scale)
     grams = df.select(
         F.col(id_col).alias("_id"),
         F.explode(F.array_distinct(ngrams(text_col, shingle_n))).alias("_g"),
     )
-    if hash_grams and (hash_grams != "verified" or _xxhash64_injective(grams)):
+    if hash_grams and _xxhash64_injective(grams):
         grams = grams.select("_id", F.xxhash64("_g").alias("_g"))
-    if checkpoint:
-        grams = grams.localCheckpoint(eager=False)
+    grams = grams.localCheckpoint(eager=False)
     dfc = grams.groupBy("_g").agg(F.count(F.lit(1)).alias("_dfn"))
     sz = grams.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
     ranked = grams.join(dfc, "_g")
@@ -1370,7 +1316,6 @@ def duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 20,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """Exact repeated-substring spans: for every document, the maximal
     character ranges covered by some length-``k`` substring that also
@@ -1387,10 +1332,8 @@ def duplicate_spans(
     (never a COUNT DISTINCT expansion), a semi-join back onto positions,
     then per-doc gaps-and-islands over ONLY the duplicated positions
     (window bounded by dup hits per doc, not text length). The single
-    big exchange is the gram shuffle; with ``hash_grams=True`` grams
-    ship as 8-byte xxhash64 keys instead of k-char strings (the 100 TB
-    setting — collisions only ever ADD a span, never drop one; kept off
-    by default so the operator stays engine-exact and oracle-checkable).
+    big exchange is the gram shuffle, keyed on the k-char gram strings
+    (engine-exact and oracle-checkable).
 
     Output: ``(id, span_start, span_end, span_len)`` with 0-based
     ``[span_start, span_end)`` char offsets, all bigint.
@@ -1407,8 +1350,6 @@ def duplicate_spans(
             )
         ).alias("pos", "_g"),
     )
-    if hash_grams:
-        grams = grams.withColumn("_g", F.xxhash64("_g"))
     doc_grams = grams.select("_g", "_id").distinct()
     shared = (
         doc_grams.groupBy("_g")
@@ -1450,7 +1391,6 @@ def remove_duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 20,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """The actionable form of ``duplicate_spans``: CUT every cross-document
     duplicated span out of the text (the Lee-et-al. exact-substring-dedup
@@ -1468,7 +1408,7 @@ def remove_duplicate_spans(
 
     Output: ``(id, clean_text, removed_chars bigint)``.
     """
-    spans = duplicate_spans(df, text_col, id_col, k=k, hash_grams=hash_grams)
+    spans = duplicate_spans(df, text_col, id_col, k=k)
     txt = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
     sp = spans.select(
         F.col(id_col).alias("_id"), "span_start", "span_end"
@@ -1637,7 +1577,6 @@ def prefix_jaccard_cross_pairs(
     threshold: float = 0.5,
     shingle_n: int = 3,
     scale: int = 6,
-    hash_grams: bool = False,
     max_df: int | None = None,
 ) -> DataFrame:
     """EXACT cross-corpus Jaccard pairs via prefix filtering:
@@ -1697,7 +1636,6 @@ def prefix_jaccard_cross_pairs(
         threshold=threshold,
         shingle_n=shingle_n,
         scale=scale,
-        hash_grams=hash_grams,
         max_df=max_df,
     )
     sa = sides.select(F.col("_id").alias("id_a"), F.col("_side").alias("_sa"))

@@ -188,7 +188,6 @@ def fuzzy_join(
     max_key_candidates: int | None = None,
     oversize_policy: str = "salt",
     cap_observation=None,
-    checkpoint: bool = True,
     self_inputs: bool = False,
 ) -> DataFrame:
     """Inner join of ``left`` × ``right`` on
@@ -196,17 +195,13 @@ def fuzzy_join(
     ``distance`` column. Output columns: all of ``left``'s, all of
     ``right``'s (names must be disjoint), ``distance`` (bigint).
 
-    ``checkpoint`` (r9, keys-once): when ``max_key_candidates`` engages,
-    the per-row variant-key ARRAYS are consumed twice per side — once by
-    the occupancy-count aggregates and once by the candidate join — and
-    without materialization each consumer re-runs the key generation
-    (an interpreted O(L) / O(L²) higher-order transform per row, the
-    dominant candidate-stage cost). The default lazily
-    ``localCheckpoint``s the tagged pre-explode frame per side so keys
-    generate ONCE per row; the frame is input-row-sized (one array
-    column), never exploded. ``False`` restores the recompute shape for
-    corpora whose key arrays outweigh local storage. Uncapped runs have
-    a single consumer per side and never checkpoint.
+    Materialization: when ``max_key_candidates`` is set, the per-row
+    variant-key ARRAYS are consumed twice per side — by the occupancy
+    aggregates and by the candidate join — so the tagged pre-explode
+    frame of each side is lazily ``localCheckpoint``ed and keys (an
+    interpreted O(L) / O(L²) transform per row) generate once per row.
+    The frame is input-row-sized, never exploded. Uncapped runs have a
+    single consumer per side and do not checkpoint.
 
     ``method``: ``"deletion"`` (FastSS variant keys), ``"segment"``
     (PassJoin pigeonhole keys), or ``"auto"`` (default) — deletion for
@@ -272,20 +267,19 @@ def fuzzy_join(
     fires and ``observation.get`` raises — guard degenerate empty inputs
     at the caller before reading the metrics.
 
-    ``self_inputs`` (r10): caller's promise that ``left`` and ``right``
-    are the SAME single-column relation up to the key column's name
+    ``self_inputs``: caller's promise that ``left`` and ``right`` are
+    the SAME single-column relation up to the key column's name
     (:func:`fuzzy_self_pairs` passes its distinct-string table twice).
     With the deletion method (both sides' blocking keys are the same
-    function) + ``checkpoint``, key generation, row tags, the occupancy
-    aggregate and the shard/hot-key derivation then run ONCE on a
-    materialized frame and the index side is a column rename of the
-    probe side — the per-side duplicates and the lsz⋈rsz occupancy join
-    disappear (guide §2.4). Every derived value is identical
-    (``_nl == _nr`` so products, shard widths and content-hash salts
-    match the two-sided computation), so the candidate set and output
-    are unchanged. Inputs that are not single-column raise; the segment
-    method (asymmetric probe/index keys) and ``checkpoint=False`` fall
-    back to the general shape.
+    function), key generation, row tags, the occupancy aggregate and
+    the shard/hot-key derivation then run ONCE on a materialized frame
+    and the index side is a column rename of the probe side — the
+    per-side duplicates and the lsz⋈rsz occupancy join disappear. Every
+    derived value is identical (``_nl == _nr`` so products, shard widths
+    and content-hash salts match the two-sided computation), so the
+    candidate set and output are unchanged. Inputs that are not
+    single-column raise; the segment method (asymmetric probe/index
+    keys) falls back to the general shape.
     """
     if max_distance < 1:
         raise ValueError(f"max_distance must be >= 1, got {max_distance!r}")
@@ -342,13 +336,13 @@ def fuzzy_join(
     # same function (deletion method), generate keys/tags ONCE on a
     # materialized frame and derive the index side by renaming — the
     # per-side key transform, the per-side occupancy aggregate, and the
-    # lsz⋈rsz occupancy join all collapse to one. Requires checkpoint
-    # (the shared tags must be pinned before the two branches consume
-    # them); every derived value — keys, counts (_nl == _nr), shard
+    # lsz⋈rsz occupancy join all collapse to one. The shared tags are
+    # pinned by the checkpoint before the two branches consume them;
+    # every derived value — keys, counts (_nl == _nr), shard
     # width ceil(sqrt(nl²/cap)), content-hash salt — is identical to
     # the two-sided computation on identical inputs, so the candidate
     # set and output are unchanged.
-    is_self = self_inputs and method == "deletion" and checkpoint
+    is_self = self_inputs and method == "deletion"
     if is_self:
         tagged = (
             left.withColumn("_lid", F.monotonically_increasing_id())
@@ -365,8 +359,8 @@ def fuzzy_join(
         index = right.withColumn(
             "_rid", F.monotonically_increasing_id()
         ).withColumn("_fkeys", rkeys)
-        if checkpoint and max_key_candidates is not None:
-            # keys-once (r9): the occupancy aggregates below and the
+        if max_key_candidates is not None:
+            # keys-once: the occupancy aggregates below and the
             # candidate join both consume the exploded keys; materializing
             # the PRE-explode frame runs the interpreted key transform once
             # per row (and pins the row tags, which lazy recompute would
@@ -575,20 +569,15 @@ def fuzzy_self_pairs(
     oversize_policy: str = "salt",
     connectivity_only: bool = False,
     cap_observation=None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """All (id_a < id_b) pairs within ``max_distance`` edits — the
     near-duplicate-string view of one table. Returns
     ``(id_a, id_b, distance)``. ``max_key_candidates`` /
     ``oversize_policy`` pass through to :func:`fuzzy_join` (the
-    adversarial-corpus candidate cap). ``checkpoint`` (r9,
-    distinct-once): the distinct string table has FOUR lazy consumers —
-    both fuzzy_join self-join sides and both branches of its LCP
-    min/max union — each otherwise re-running the corpus scan +
-    distinct shuffle; the default lazily materializes it (one string
-    column over distinct values) and passes through to
-    :func:`fuzzy_join`'s keys-once checkpoint. ``False`` restores the
-    recompute shape.
+    adversarial-corpus candidate cap). The distinct string table feeds
+    both :func:`fuzzy_join` sides and its LCP min/max, so it is lazily
+    ``localCheckpoint``ed: the corpus scan and distinct shuffle run
+    once (one string column over distinct values).
 
     Exact duplicates are collapsed BEFORE candidate generation (r6):
     blocking, capping, and the levenshtein verify all run on the
@@ -613,15 +602,7 @@ def fuzzy_self_pairs(
     the two groups' min ids. Distances stay exact (0 for star edges,
     the verified distance for anchor edges)."""
     vals = df.select(F.col(id_col).alias("_id"), F.col(col).alias("_s"))
-    distinct = vals.select("_s").distinct()
-    if checkpoint:
-        # distinct-once (r9): the distinct string table feeds BOTH self-
-        # join sides of fuzzy_join, and (under strip_common_prefix) both
-        # branches of its LCP min/max union — four lazy consumers, each
-        # otherwise re-running the corpus scan + distinct shuffle. The
-        # materialized frame is one string column over distinct values,
-        # bounded by the distinct-string count, never the corpus.
-        distinct = distinct.localCheckpoint(eager=False)
+    distinct = vals.select("_s").distinct().localCheckpoint(eager=False)
     dpairs = fuzzy_join(
         distinct.select(F.col("_s").alias("_sa")),
         distinct.select(F.col("_s").alias("_sb")),
@@ -629,9 +610,8 @@ def fuzzy_self_pairs(
         max_key_candidates=max_key_candidates,
         oversize_policy=oversize_policy,
         cap_observation=cap_observation,
-        checkpoint=checkpoint,
         # both sides are the same distinct-string table: keys, tags and
-        # occupancy compute once (r10 self fast path, guide §2.4)
+        # occupancy compute once
         self_inputs=True,
     ).filter(F.col("_sa") < F.col("_sb"))  # one row per unordered string pair
     if connectivity_only:
@@ -766,7 +746,6 @@ def dedup_fuzzy(
     max_iterations: int = 20,
     max_key_candidates: int | None = 250_000,
     cap_observation=None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Edit-distance dedup end to end: segment-blocked pair generation
     (:func:`fuzzy_self_pairs`) → connected components → keep one
@@ -815,7 +794,6 @@ def dedup_fuzzy(
         max_key_candidates=max_key_candidates,
         connectivity_only=True,
         cap_observation=cap_observation,
-        checkpoint=checkpoint,
     )
     comp = connected_components(pairs, "id_a", "id_b", max_iterations)
     # component sizes → n_merged for the representative (min id = group id)

@@ -59,7 +59,6 @@ def pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     scale: int = 9,
-    checkpoint: bool = True,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list.
@@ -75,10 +74,10 @@ def pagerank(
 
     Returns ``(node, rank double)`` for every node on either side of an
     edge. Deterministic: floor-scaled divisions, exact-decimal
-    contribution sums (see module docstring). ``checkpoint=False`` keeps
-    the full lineage visible (plan inspection / tiny graphs); leave it
-    on for real runs — without it iteration k replays all k-1 prior
-    rounds.
+    contribution sums (see module docstring). The edge list, the node
+    set, the degree-joined edges and every round's ranks are lazily
+    checkpointed (``_cp``), so iteration k never replays rounds 1..k-1
+    and no branch replays the caller's edge derivation.
 
     ``broadcast_ranks=True`` ships the rank table (node-count-sized, 2
     narrow columns) to executors each round instead of shuffling the
@@ -93,30 +92,27 @@ def pagerank(
     if not (0.0 < damping < 1.0):
         raise ValueError(f"damping must be in (0,1), got {damping!r}")
 
-    if checkpoint:
-        # nodes / degrees / the iteration loop all branch off the edge
-        # list — materialize it ONCE or every branch replays the
-        # caller's (often join-heavy) edge derivation
-        edges = _cp(edges)
-    nodes = (
+    # nodes / degrees / the iteration loop all branch off the edge list —
+    # materialize it ONCE or every branch replays the caller's (often
+    # join-heavy) edge derivation
+    edges = _cp(edges)
+    # reused by the teleport count, the rank init, and every round's left
+    # join — node-count-sized
+    nodes = _cp(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
     )
-    if checkpoint:
-        # reused by the teleport count, the rank init, and every round's
-        # left join — node-count-sized
-        nodes = _cp(nodes)
     n_total = nodes.agg(F.count(F.lit(1)).cast("double").alias("_n"))
     deg = edges.groupBy(F.col(src).alias("_src")).agg(
         F.count(F.lit(1)).cast("double").alias("_outdeg")
     )
-    edges_deg = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst")
-    ).join(deg, "_src")
-    if checkpoint:
-        # built once, reused every round — avoid re-reading the edge source
-        edges_deg = _cp(edges_deg)
+    # built once, reused every round — avoid re-reading the edge source
+    edges_deg = _cp(
+        edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).join(
+            deg, "_src"
+        )
+    )
 
     ranks = nodes.crossJoin(F.broadcast(n_total)).select(
         "node", _fl(F.lit(1.0) / F.col("_n"), scale).alias("rank")
@@ -136,7 +132,7 @@ def pagerank(
             .agg(F.sum("_c").alias("_csum"))
         )
         contrib_side = F.broadcast(contrib) if broadcast_ranks else contrib
-        ranks = (
+        ranks = _cp(  # cut lineage each round
             nodes.join(contrib_side, nodes["node"] == contrib_side["_dst"], "left")
             .crossJoin(F.broadcast(n_total))
             .select(
@@ -149,8 +145,6 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint:
-            ranks = _cp(ranks)  # cut lineage each round
     return ranks
 
 
@@ -226,7 +220,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient — the
     structural cohesion profile (community density, spam-farm detection)
@@ -254,10 +247,10 @@ def triangle_count(
     each referenced 2-3 times downstream; without lineage truncation
     Catalyst re-executes the whole upstream subtree per reference
     (measured: ~7× the edge-build work, 140 exchanges on a derived
-    graph). ``checkpoint=True`` (default) ``localCheckpoint``s the three
-    shared frames — all edge/node-sized, never corpus-sized.
+    graph), so the three shared frames are lazily checkpointed — all
+    edge/node-sized, never corpus-sized.
     """
-    e = (
+    e = _cp(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("x"),
             F.greatest(F.col(src), F.col(dst)).alias("y"),
@@ -265,28 +258,24 @@ def triangle_count(
         .filter(F.col("x") != F.col("y"))
         .distinct()
     )
-    if checkpoint:
-        e = _cp(e)
-    deg = (
+    deg = _cp(
         e.select(F.col("x").alias("node"))
         .unionAll(e.select(F.col("y").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
     )
-    if checkpoint:
-        deg = _cp(deg)
     dx = deg.select(F.col("node").alias("x"), F.col("degree").alias("_dx"))
     dy = deg.select(F.col("node").alias("y"), F.col("degree").alias("_dy"))
     ed = e.join(dx, "x").join(dy, "y")
     fwd = (F.col("_dx") < F.col("_dy")) | (
         (F.col("_dx") == F.col("_dy")) & (F.col("x") < F.col("y"))
     )
-    o = ed.select(
-        F.when(fwd, F.col("x")).otherwise(F.col("y")).alias("s"),
-        F.when(fwd, F.col("y")).otherwise(F.col("x")).alias("t"),
+    o = _cp(
+        ed.select(
+            F.when(fwd, F.col("x")).otherwise(F.col("y")).alias("s"),
+            F.when(fwd, F.col("y")).otherwise(F.col("x")).alias("t"),
+        )
     )
-    if checkpoint:
-        o = _cp(o)
     o1 = o.select(F.col("s"), F.col("t").alias("u"))
     o2 = o.select(F.col("s"), F.col("t").alias("w"))
     wedges = o1.join(o2, "s").filter(F.col("u") < F.col("w"))

@@ -411,7 +411,6 @@ def cat_association(
     col_a: str,
     col_b: str,
     scale: int = 9,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Association between two categorical columns: mutual information
     (nats), chi-square statistic, and Cramér's V — the label-leakage /
@@ -436,15 +435,14 @@ def cat_association(
         return F.floor(F.lit(p10) * col) / F.lit(p10)
 
     dec_t = f"decimal(38,{scale})"
+    # marginals/totals/cardinalities all branch off the cell table —
+    # materialize it once or the base table re-scans per branch
     cells = (
         df.filter(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
         .groupBy(F.col(col_a).alias("_a"), F.col(col_b).alias("_b"))
         .agg(F.count(F.lit(1)).cast("double").alias("_o"))
+        .localCheckpoint(eager=False)
     )
-    if checkpoint:
-        # marginals/totals/cardinalities all branch off the cell table —
-        # materialize it once or the base table re-scans per branch
-        cells = cells.localCheckpoint(eager=False)
     marg_a = cells.groupBy("_a").agg(F.sum("_o").alias("_oa"))
     marg_b = cells.groupBy("_b").agg(F.sum("_o").alias("_ob"))
     totals = cells.agg(
@@ -498,7 +496,6 @@ def rater_agreement(
     col_b: str,
     by: list[str] | None = None,
     scale: int = 9,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Cohen's kappa between two categorical columns over the same rows —
     agreement beyond chance between two raters/classifiers (a heuristic
@@ -532,9 +529,8 @@ def rater_agreement(
         df.filter(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
         .groupBy(*by, F.col(col_a).alias("_a"), F.col(col_b).alias("_b"))
         .agg(F.count(F.lit(1)).alias("_o"))
+        .localCheckpoint(eager=False)
     )
-    if checkpoint:
-        cells = cells.localCheckpoint(eager=False)
     marg_a = cells.groupBy(*by, "_a").agg(F.sum("_o").cast(dec).alias("_na"))
     marg_b = cells.groupBy(*by, "_b").agg(F.sum("_o").cast(dec).alias("_nb"))
     # Σ_k na_k·nb_k: categories absent from either rater contribute a

@@ -2632,16 +2632,14 @@ def ngram_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked n-gram Jaccard pairs (operators/dedup.py::
     ngram_jaccard_pairs): exact pairwise similarity computed only WITHIN
     first-token blocks — the blocking key bounds the quadratic self-join,
-    the scale contract for exact verification passes. r9:
-    ``hash_grams="verified"`` ships 8-byte gram hashes through the
-    quadratic join instead of strings — output provably identical (the
-    jaccard is set-cardinality arithmetic; injectivity of the map is
-    PROVEN per run by one aggregate job, with a string fallback), so
-    the md5-free oracle is untouched."""
+    the scale contract for exact verification passes. The operator ships
+    8-byte gram hashes through the quadratic join instead of strings;
+    the output equals the string-gram output (the jaccard is
+    set-cardinality arithmetic, injectivity of the map is proven per run
+    by one aggregate job, with a string fallback), so the oracle
+    matches."""
     t = load_tables(spark, sf_dir, ("documents",))
-    pairs = dedup_ops.ngram_jaccard_pairs(
-        t["documents"], n=3, threshold=0.2, hash_grams="verified"
-    )
+    pairs = dedup_ops.ngram_jaccard_pairs(t["documents"], n=3, threshold=0.2)
     return pairs.select(
         "id_a",
         "id_b",
@@ -4959,7 +4957,7 @@ def dsir_stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from etl_tools_rs_spark.operators.dsir import dsir_model_vector, dsir_score
-    from etl_tools_rs_spark.streaming.ops import run_append_available_now
+    from etl_tools_rs_spark.streaming.ops import run_available_now
 
     t = load_tables(spark, sf_dir, ("documents",))
     docs = t["documents"]
@@ -4974,7 +4972,9 @@ def dsir_stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = dsir_score(stream, lr)
     name = f"gate_dsir_{uuid.uuid4().hex[:8]}"
-    run_append_available_now(scored, tempfile.mkdtemp(prefix="ckpt_"), name)
+    run_available_now(
+        scored, tempfile.mkdtemp(prefix="ckpt_"), name, output_mode="append"
+    )
     return spark.table(name)
 
 
@@ -5044,15 +5044,11 @@ def containment_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric n-gram containment pairs (operators/dedup.py::
     containment_pairs, |A∩B|/|A| ≥ 0.3 within first-token blocks) — the
     quote/subset detector Jaccard misses; direction preserved, verified
-    pair-for-pair. r9: ``hash_grams="verified"`` was MEASURED AND
-    REFUSED here TWICE — first pre-tokenize-once (A/B median 1.72,
-    BENCH_AB_r09_setsim.json), then re-measured after the checkpoint
-    made the hashing once-per-corpus (BENCH_AB_r09_cthash.json: median
-    1.119, hashed slower in all 3 clean trials): even amortized, the
-    per-gram hashing + injectivity scan cost more than the narrower
-    join saves at this entry's pair volume — unlike
-    ngram_jaccard_blocked, whose pair volume amortizes them. The mode
-    stays available on the operator for denser corpora."""
+    pair-for-pair. The operator joins string grams: hashed grams measured
+    slower here twice (BENCH_AB_r09_setsim.json, BENCH_AB_r09_cthash.json
+    — the per-gram hashing and injectivity scan cost more than the
+    narrower join saves at this pair volume), so the operator has no
+    hashed mode."""
     t = load_tables(spark, sf_dir, ("documents",))
     return dedup_ops.containment_pairs(t["documents"], n=3, threshold=0.3)
 
@@ -5836,19 +5832,18 @@ def prefix_jaccard_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix_jaccard_pairs): prefix-filtered exact-Jaccard self-join over
     3-gram shingles at t=0.5 — no caller-supplied blocking key, no
     false negatives, hot shingles never enter the join. Verified
-    pair-for-pair including the exact scores. r9:
-    ``hash_grams="verified"`` — every shuffle (frequency agg, prefix
-    ranking, candidate join, verify join) moves 8-byte gram hashes
-    instead of strings; output provably identical (prefix filtering is
-    correct under ANY global gram order, verification is exact
-    cardinality arithmetic, injectivity proven per run with string
-    fallback — see the operator docstring), so the same oracle
-    matches."""
+    pair-for-pair including the exact scores. ``hash_grams=True``: every
+    shuffle (frequency agg, prefix ranking, candidate join, verify join)
+    moves 8-byte gram hashes instead of strings; the output equals the
+    string-gram output (prefix filtering is correct under ANY global
+    gram order, verification is exact cardinality arithmetic,
+    injectivity is proven per run with a string fallback — see the
+    operator docstring), so the same oracle matches."""
     from etl_tools_rs_spark.operators.dedup import prefix_jaccard_pairs
 
     t = load_tables(spark, sf_dir, ("documents",))
     return prefix_jaccard_pairs(
-        t["documents"], threshold=0.5, shingle_n=3, hash_grams="verified"
+        t["documents"], threshold=0.5, shingle_n=3, hash_grams=True
     )
 
 
@@ -8270,7 +8265,7 @@ def streaming_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_tools_rs_spark.streaming.ops import (
         near_dup_stream,
         near_dup_stream_index,
-        run_append_available_now,
+        run_available_now,
     )
 
     t = load_tables(spark, sf_dir, ("documents",))
@@ -8295,7 +8290,9 @@ def streaming_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"gate_ndp_{uuid.uuid4().hex[:8]}"
     try:
-        run_append_available_now(out, tempfile.mkdtemp(prefix="ckpt_"), name)
+        run_available_now(
+            out, tempfile.mkdtemp(prefix="ckpt_"), name, output_mode="append"
+        )
     finally:
         idx.unpersist()
     return spark.table(name).orderBy("id_a", "id_b")

@@ -207,28 +207,13 @@ def run_available_now(
 ) -> None:
     """Drain all available input, then stop — batch-parity execution for
     tests/backfills. Results land in the in-memory table ``query_name``.
-    ``output_mode`` overrides the default (update) — session-window
-    aggregations require append/complete."""
+    ``output_mode`` overrides the default (update for a streaming frame):
+    session-window aggregations require append/complete, and in append
+    mode windowed aggregations emit only watermark-closed windows."""
     q = (
         stream.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode or ("update" if stream.isStreaming else "append"))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_append_available_now(
-    stream: DataFrame, checkpoint: str, query_name: str = "engine_stream"
-) -> None:
-    """Append-mode variant (windowed aggs emit only watermark-closed
-    windows)."""
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

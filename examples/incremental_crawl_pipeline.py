@@ -195,7 +195,7 @@ def main(workdir: str | None = None, sf_dir: str | None = None) -> int:
         from etl_tools_rs_spark.streaming.ops import (
             near_dup_stream,
             near_dup_stream_index,
-            run_append_available_now,
+            run_available_now,
         )
         from etl_tools_rs_spark.streaming.sources import file_stream
 
@@ -217,8 +217,8 @@ def main(workdir: str | None = None, sf_dir: str | None = None) -> int:
         flagged = near_dup_stream(
             stream, lookup_idx, num_hashes=16, bands=4, threshold=0.8
         )
-        run_append_available_now(
-            flagged, f"{work}/ckpt_live", "crawl_live_hits"
+        run_available_now(
+            flagged, f"{work}/ckpt_live", "crawl_live_hits", output_mode="append"
         )
         hits = spark.table("crawl_live_hits")
         n_flagged = hits.select("id_a").distinct().count()

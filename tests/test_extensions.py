@@ -75,27 +75,40 @@ def test_dedup_minhash_lsh_finds_near_dups(docs):
 
 
 def test_dedup_minhash_lsh_checkpoint_modes_agree(docs):
-    """r9 shingle-once/bands-once checkpoints are pure plan-shape
-    changes: both modes must agree pair-for-pair and jaccard-for-
-    jaccard under both hash families and with the bucket cap engaged
-    (salt shards from content hashes — deterministic)."""
+    """The shingle-once signature (exploded from the checkpointed token
+    frame) equals the inline ``minhash_table`` signature under both hash
+    families, and every pair the operator emits, with and without the
+    bucket cap, carries its exact shingle Jaccard."""
+    toks = docs.select(
+        F.col("doc_id").alias("_id"), ngrams("text", 2).alias("_sh")
+    ).localCheckpoint()
+
+    def grams(text):
+        t = text.split()
+        return {" ".join(t[i : i + 2]) for i in range(len(t) - 1)}
+
+    sh = {d: grams(t) for d, t in DOCS}
     for family in ("xxhash64", "md5"):
+        inline = dedup.minhash_table(
+            docs, num_hashes=16, shingle_n=2, hash_family=family
+        ).withColumnRenamed("doc_id", "_id")
+        once = dedup._minhash_from_shingles(toks, "_id", "_sh", 16, family)
+        assert sorted(map(tuple, inline.collect())) == sorted(
+            map(tuple, once.collect())
+        ), family
         for cap in (None, 1):
-            runs = {}
-            for cp in (True, False):
-                runs[cp] = {
-                    (r.id_a, r.id_b): r.jaccard
-                    for r in dedup.dedup_minhash_lsh(
-                        docs, num_hashes=16, bands=8, shingle_n=2,
-                        threshold=0.5, hash_family=family,
-                        max_bucket_size=cap, checkpoint=cp,
-                    ).collect()
-                }
-            assert runs[True] == runs[False], (family, cap)
-            # non-empty INSIDE the loop (ADVICE r9): every mode-agreement
-            # comparison must be over a non-trivial pair set, not just
-            # the last (family, cap) config
-            assert len(runs[True]) > 0, (family, cap)
+            pairs = {
+                (r.id_a, r.id_b): r.jaccard
+                for r in dedup.dedup_minhash_lsh(
+                    docs, num_hashes=16, bands=8, shingle_n=2,
+                    threshold=0.5, hash_family=family, max_bucket_size=cap,
+                ).collect()
+            }
+            # non-empty for every (family, cap) config, not just the last
+            assert len(pairs) > 0, (family, cap)
+            for (a, b), j in pairs.items():
+                exact = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+                assert abs(j - exact) <= 5e-5 + 1e-12, (family, cap, a, b)
 
 
 def test_dedup_simhash_groups(docs):
@@ -665,6 +678,29 @@ def test_connected_components_long_chain(spark):
     assert {r.group_id for r in rows} == {0}  # one component, min-labeled
 
 
+def test_connected_components_rejects_float_ids(spark):
+    """Float ids raise before any Spark job runs: the driver path's
+    Python ``<`` orders NaN differently from Spark, so the two CC paths
+    could label a component differently."""
+    import pytest
+
+    nan = float("nan")
+    sc = spark.sparkContext
+    group = "test_connected_components_rejects_float_ids"
+    both = spark.createDataFrame(
+        [(1.0, nan), (nan, 2.0), (2.0, 3.0)], "id_a double, id_b double"
+    )
+    one_side = spark.createDataFrame([(1, nan)], "id_a long, id_b float")
+    sc.setJobGroup(group, "float-id refusal")
+    try:
+        for pairs in (both, one_side):
+            with pytest.raises(ValueError, match="float ids"):
+                dedup.connected_components(pairs, driver_max_edges=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_connected_components_matches_naive_union_find(spark):
     """Property check: result equals a driver-side union-find transitive
     closure on seeded random graphs."""
@@ -1196,27 +1232,3 @@ class TestKeepBestPerGroup:
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "Window" not in plan
-
-    def test_checkpoint_modes_agree(self, spark):
-        """r9 tokeep: the lazy localCheckpoint of the quality-joined
-        group frame is a pure plan-shape change — both modes must emit
-        identical rows, and the checkpointed plan must carry the scan
-        (ExistingRDD) where the uncheckpointed one recomputes."""
-        from etl_tools_rs_spark.operators.dedup import keep_best_per_group
-
-        rows = [(i, (i * 7) % 11) for i in range(30)]
-        groups_rows = [(i, (i % 4) * 100) for i in range(20)]
-        df = spark.createDataFrame(rows, ["doc_id", "q"])
-        groups = spark.createDataFrame(groups_rows, ["member_id", "group_id"])
-        with_cp = sorted(
-            map(tuple, keep_best_per_group(df, groups, "q").collect())
-        )
-        without = sorted(
-            map(
-                tuple,
-                keep_best_per_group(
-                    df, groups, "q", checkpoint=False
-                ).collect(),
-            )
-        )
-        assert with_cp == without

@@ -299,9 +299,9 @@ class TestKeyCandidateCap:
 
 
 class TestComputeOnceCheckpoints:
-    """r9 compute-once materializations: the distinct-string and
-    pre-explode key-array checkpoints are pure plan-shape changes —
-    both modes must agree pair-for-pair on every policy arm."""
+    """The compute-once materializations (distinct strings, pre-explode
+    key arrays, the self-input fast path) keep the exact pair set on
+    every policy arm."""
 
     def _self_pairs(self, spark, df, **kw):
         return {
@@ -309,47 +309,60 @@ class TestComputeOnceCheckpoints:
             for r in fuzzy.fuzzy_self_pairs(df, "w", "wid", **kw).collect()
         }
 
-    def test_self_pairs_modes_agree_uncapped(self, spark, words_df):
-        on = self._self_pairs(spark, words_df, max_distance=2, checkpoint=True)
-        off = self._self_pairs(
-            spark, words_df, max_distance=2, checkpoint=False
-        )
-        assert on == off and len(on) > 0
-
     def test_self_pairs_modes_agree_capped_cold_corpus(self, spark, words_df):
         """Cold corpus + cap: the keys-once checkpoint engages (capped
-        path) and the result must equal both the checkpoint-off capped
-        run and the exact uncapped pairs (no hot keys)."""
+        path) and the result must equal the exact uncapped pairs (no hot
+        keys)."""
         exact = self._self_pairs(spark, words_df, max_distance=2)
-        for cp in (True, False):
-            got = self._self_pairs(
-                spark, words_df, max_distance=2,
-                max_key_candidates=10**9, checkpoint=cp,
-            )
-            assert got == exact
+        got = self._self_pairs(
+            spark, words_df, max_distance=2, max_key_candidates=10**9
+        )
+        assert got == exact and len(exact) > 0
 
     def test_join_modes_agree_capped_hot_corpus(self, spark):
-        """Hot corpus where salt engages: both checkpoint modes must
-        produce subsets of the exact pairs with exact distances, and
-        the drop policy (deterministic under capping) must agree
-        row-for-row across modes."""
+        """Hot corpus where the cap engages: both policies produce
+        subsets of the exact pairs with exact distances."""
         rows = [(i, f"{i:04d}") for i in range(300)]
         df = spark.createDataFrame(rows, "wid long, w string")
         exact = self._self_pairs(spark, df, max_distance=1)
-        # both policies are deterministic under capping (hot keys from
-        # occupancy counts; salt shards from content hashes) — so each
-        # policy's output must be identical across checkpoint modes
         for policy in ("salt", "drop"):
-            by_mode = {}
-            for cp in (True, False):
-                got = self._self_pairs(
-                    spark, df, max_distance=1,
-                    max_key_candidates=16, oversize_policy=policy,
-                    checkpoint=cp,
+            got = self._self_pairs(
+                spark, df, max_distance=1,
+                max_key_candidates=16, oversize_policy=policy,
+            )
+            assert got <= exact and len(got) > 0, policy
+
+    def test_self_inputs_matches_two_sided_join(self, spark):
+        """``fuzzy_join(self_inputs=True)`` — keys, tags and occupancy
+        computed once, the index side a rename of the probe side — emits
+        the rows of the general two-sided shape, uncapped and under both
+        cap policies on a hot corpus (both policies are deterministic:
+        hot keys from occupancy counts, salt shards from content
+        hashes)."""
+        vals = spark.createDataFrame(
+            [(f"{i:04d}",) for i in range(300)], "w string"
+        )
+
+        def run(self_inputs, **kw):
+            return sorted(
+                map(
+                    tuple,
+                    fuzzy.fuzzy_join(
+                        vals.select(F.col("w").alias("a")),
+                        vals.select(F.col("w").alias("b")),
+                        "a", "b", max_distance=1,
+                        self_inputs=self_inputs, **kw,
+                    ).collect(),
                 )
-                assert got <= exact
-                by_mode[cp] = got
-            assert by_mode[True] == by_mode[False]
+            )
+
+        for kw in (
+            {},
+            dict(max_key_candidates=16, oversize_policy="salt"),
+            dict(max_key_candidates=16, oversize_policy="drop"),
+        ):
+            fast = run(True, **kw)
+            assert fast == run(False, **kw) and len(fast) > 0, kw
 
 
 class TestSemdedup:

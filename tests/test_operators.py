@@ -253,95 +253,58 @@ class TestContainmentPairs:
 
 
 class TestSetSimHashVerified:
-    """r9 ``hash_grams="verified"`` — the int-narrowed set-similarity
-    joins are OUTPUT-IDENTICAL to the string-gram paths: the emitted
-    values are pure set-cardinality arithmetic, preserved by any
-    injective gram→hash map, and injectivity is proven per run by one
-    aggregate (collision ⇒ string fallback, so identity holds
-    unconditionally). Pinned on the gate corpus (sf0.001 documents —
-    the corpus the oracles run on) for all three operators, plus the
-    fallback arm (injectivity check forced to fail) and the
-    verified+max_df refusal."""
+    """The hashed-gram set-similarity joins are OUTPUT-IDENTICAL to the
+    string-gram joins: the emitted values are pure set-cardinality
+    arithmetic, preserved by any injective gram→hash map, and
+    injectivity is proven per run by one aggregate (collision ⇒ string
+    fallback). The string reference is that fallback, forced by making
+    the injectivity check fail. Pinned on the gate corpus (sf0.001
+    documents — the corpus the oracles run on) for ngram_jaccard_pairs
+    and prefix_jaccard_pairs, plus the hash_grams+max_df refusal."""
 
     def _docs(self, spark):
         return spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet"
         ).select("doc_id", "text")
 
-    def _outputs(self, df, hash_grams):
+    def _outputs(self, df, prefix_hash_grams=True):
         from etl_tools_rs_spark.operators import dedup as dd
 
         ng = sorted(
-            map(
-                tuple,
-                dd.ngram_jaccard_pairs(
-                    df, n=3, threshold=0.2, hash_grams=hash_grams
-                ).collect(),
-            )
-        )
-        ct = sorted(
-            map(
-                tuple,
-                dd.containment_pairs(
-                    df, n=3, threshold=0.3, hash_grams=hash_grams
-                ).collect(),
-            )
+            map(tuple, dd.ngram_jaccard_pairs(df, n=3, threshold=0.2).collect())
         )
         pj = sorted(
             map(
                 tuple,
                 dd.prefix_jaccard_pairs(
-                    df, threshold=0.5, shingle_n=3, checkpoint=False,
-                    hash_grams=hash_grams,
+                    df, threshold=0.5, shingle_n=3,
+                    hash_grams=prefix_hash_grams,
                 ).collect(),
             )
         )
-        return ng, ct, pj
+        return ng, pj
 
-    def test_verified_identical_to_string_path(self, spark):
+    def test_verified_identical_to_string_path(self, spark, monkeypatch):
+        from etl_tools_rs_spark.operators import dedup as dd
+
         df = self._docs(spark)
-        plain = self._outputs(df, False)
-        verified = self._outputs(df, "verified")
-        for name, p, v in zip(("ngram", "containment", "prefix"), plain, verified):
-            assert p == v, name
-            assert len(p) > 0, name
+        hashed = self._outputs(df)
+        monkeypatch.setattr(dd, "_xxhash64_injective", lambda *a, **k: False)
+        strings = self._outputs(df)
+        for name, h, s in zip(("ngram", "prefix"), hashed, strings):
+            assert h == s, name
+            assert len(h) > 0, name
 
     def test_collision_fallback_arm_is_identical(self, spark, monkeypatch):
+        """The forced fallback equals the plain string run: prefix with
+        ``hash_grams=False``, ngram with its hashed default."""
         from etl_tools_rs_spark.operators import dedup as dd
 
         df = self._docs(spark).limit(200)
-        plain = self._outputs(df, False)
+        ng, pj_plain = self._outputs(df, prefix_hash_grams=False)
         monkeypatch.setattr(dd, "_xxhash64_injective", lambda *a, **k: False)
-        fallback = self._outputs(df, "verified")
-        for name, p, v in zip(("ngram", "containment", "prefix"), plain, fallback):
-            assert p == v, name
-
-    def test_tokenize_once_checkpoint_modes_agree(self, spark):
-        """r9 tokenize-once: the lazy localCheckpoint of the tokenized
-        frame (ngrams runs once per corpus, not once per self-join
-        side) is a pure plan-shape change — identical rows either way,
-        in both string and verified-hash modes."""
-        from etl_tools_rs_spark.operators import dedup as dd
-
-        df = self._docs(spark).limit(300)
-        for hg in (False, "verified"):
-            for op, kw in (
-                (dd.ngram_jaccard_pairs, dict(n=3, threshold=0.2)),
-                (dd.containment_pairs, dict(n=3, threshold=0.3)),
-            ):
-                with_cp = sorted(
-                    map(tuple, op(df, hash_grams=hg, **kw).collect())
-                )
-                without = sorted(
-                    map(
-                        tuple,
-                        op(
-                            df, hash_grams=hg, checkpoint=False, **kw
-                        ).collect(),
-                    )
-                )
-                assert with_cp == without, (op.__name__, hg)
-                assert len(with_cp) > 0, (op.__name__, hg)
+        fallback = self._outputs(df)
+        assert fallback == (ng, pj_plain)
 
     def test_verified_refuses_max_df(self, spark):
         import pytest
@@ -351,10 +314,8 @@ class TestSetSimHashVerified:
         df = spark.createDataFrame(
             [(1, "a b c d"), (2, "a b c d")], "doc_id long, text string"
         )
-        with pytest.raises(ValueError, match="verified"):
-            prefix_jaccard_pairs(
-                df, threshold=0.5, max_df=8, hash_grams="verified"
-            )
+        with pytest.raises(ValueError, match="hash_grams"):
+            prefix_jaccard_pairs(df, threshold=0.5, max_df=8, hash_grams=True)
 
 
 class TestEmbeddingProfile:
@@ -469,9 +430,7 @@ class TestPrefixJaccard:
         for t in (0.3, 0.5, 0.8):
             got = {
                 (r.id_a, r.id_b): r.jaccard
-                for r in prefix_jaccard_pairs(
-                    df, threshold=t, checkpoint=False
-                ).collect()
+                for r in prefix_jaccard_pairs(df, threshold=t).collect()
             }
             assert got == self._naive(docs, t), f"threshold {t}"
 
@@ -503,8 +462,8 @@ class TestPrefixJaccard:
             prefix_jaccard_pairs(df, threshold=0.0)
 
     def test_hash_grams_matches_exact(self, spark):
-        """The 8-byte-key scale path returns the same pairs and scores as
-        the string-key path (collisions are ~G²/2⁶⁵ — absent here)."""
+        """The 8-byte-key path returns the same pairs and scores as the
+        string-key path."""
         from etl_tools_rs_spark.operators.dedup import prefix_jaccard_pairs
 
         words = "alpha beta gamma delta epsilon zeta eta theta".split()
@@ -669,11 +628,11 @@ class TestPrefixCandidateEstimate:
 
 
 class TestDuplicateSpans:
-    def _spans(self, spark, docs, k=10, **kw):
+    def _spans(self, spark, docs, k=10):
         from etl_tools_rs_spark.operators.dedup import duplicate_spans
 
         df = spark.createDataFrame(docs, ["doc_id", "text"])
-        rows = duplicate_spans(df, "text", "doc_id", k=k, **kw).collect()
+        rows = duplicate_spans(df, "text", "doc_id", k=k).collect()
         return sorted((r.doc_id, r.span_start, r.span_end, r.span_len) for r in rows)
 
     def test_shared_substring_flagged_both_sides(self, spark):
@@ -715,16 +674,6 @@ class TestDuplicateSpans:
             (1, 0, 12, 12), (1, 28, 40, 12),
             (2, 0, 12, 12), (2, 28, 40, 12),
         ]
-
-    def test_hash_grams_equivalent(self, spark):
-        docs = [
-            (1, "shared-prefix-here plus own tail material"),
-            (2, "shared-prefix-here with a different rest"),
-            (3, "nothing in common with the others at all"),
-        ]
-        assert self._spans(spark, docs, k=12) == self._spans(
-            spark, docs, k=12, hash_grams=True
-        )
 
     def test_short_docs_skipped(self, spark):
         docs = [(1, "tiny"), (2, "tiny")]

@@ -311,12 +311,16 @@ def test_rolling_zscore_single_shuffle_jvm_only(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_pagerank_no_cartesian_broadcast_teleport(spark):
-    from etl_tools_rs_spark.operators.graph import pagerank
+def test_pagerank_no_cartesian_broadcast_teleport(spark, monkeypatch):
+    from etl_tools_rs_spark.operators import graph
     from etl_tools_rs_spark.session import load_tables
 
-    # checkpoint=False keeps the full lineage inspectable (the production
-    # default truncates the plan at each round's localCheckpoint)
+    # every frame pagerank materializes goes through graph._cp, and the
+    # returned plan starts at the last round's checkpoint: record each
+    # frame's plan before it is checkpointed
+    cp = graph._cp
+    seen = []
+    monkeypatch.setattr(graph, "_cp", lambda df: seen.append(df) or cp(df))
     t = load_tables(spark, SF_DIR, ("orders", "lineitem"))
     edges = (
         t["orders"]
@@ -327,12 +331,15 @@ def test_pagerank_no_cartesian_broadcast_teleport(spark):
         )
         .distinct()
     )
-    df = pagerank(edges, iterations=2, checkpoint=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    graph.pagerank(edges, iterations=2)
+    plans = [d._jdf.queryExecution().executedPlan().toString() for d in seen]
+    # edges, nodes, degree-joined edges, then one rank frame per round
+    assert len(plans) == 3 + 2
     # node-count teleport term joins back as a broadcast 1-row frame;
     # contribution joins are hash equi-joins — never a cartesian
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert not any("CartesianProduct" in p for p in plans)
+    for plan in plans[3:]:
+        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
 def test_cooccurrence_shares_group_partitioning(spark):
@@ -359,7 +366,7 @@ def test_prefix_jaccard_no_cartesian(spark):
         [(i, "a b c d e f g") for i in range(10)], "doc_id long, text string"
     )
     plan = (
-        prefix_jaccard_pairs(df, threshold=0.5, checkpoint=False)
+        prefix_jaccard_pairs(df, threshold=0.5)
         ._jdf.queryExecution().executedPlan().toString()
     )
     # candidate generation and verification are hash equi-joins on the

@@ -783,7 +783,7 @@ def test_prefix_jaccard_matches_naive(spark, docs_words, threshold):
     got = {
         (r.id_a, r.id_b): r.jaccard
         for r in prefix_jaccard_pairs(
-            df, threshold=threshold, shingle_n=2, checkpoint=False
+            df, threshold=threshold, shingle_n=2
         ).collect()
     }
     grams = _naive_gram_pairs(docs, 2)
@@ -815,7 +815,7 @@ def test_prefix_jaccard_capped_is_sound_subset(spark, docs_words, max_df):
     capped = {
         (r.id_a, r.id_b): r.jaccard
         for r in prefix_jaccard_pairs(
-            df, threshold=0.3, shingle_n=2, checkpoint=False, max_df=max_df
+            df, threshold=0.3, shingle_n=2, max_df=max_df
         ).collect()
     }
     grams = _naive_gram_pairs(docs, 2)
@@ -831,8 +831,7 @@ def test_prefix_jaccard_capped_is_sound_subset(spark, docs_words, max_df):
     uncapped_cap = {
         (r.id_a, r.id_b): r.jaccard
         for r in prefix_jaccard_pairs(
-            df, threshold=0.3, shingle_n=2, checkpoint=False,
-            max_df=len(docs),
+            df, threshold=0.3, shingle_n=2, max_df=len(docs),
         ).collect()
     }
     assert uncapped_cap == exact

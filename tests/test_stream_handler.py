@@ -65,6 +65,25 @@ def test_handler_resume_skips_prefix(spark):
     assert h.seen == [(2, "c"), (3, "d")]
 
 
+def test_handler_resume_without_order_by_saves_failure(spark):
+    """Resume with no ``order_by`` is refused, and the saved state says
+    so: the step is Error and the run FatalError, not InProgress."""
+    import pytest
+
+    from etl_tools_rs_spark.jobs.runner import JobRunnerError
+    from etl_tools_rs_spark.jobs.state import RUN_FATAL
+
+    store = MemoryStore()
+    jr = JobRunner("h3b", "resume_unordered", store)
+    h = CollectingHandler(init=HandlerInit.resume(1))
+    with pytest.raises(JobRunnerError, match="order_by"):
+        jr.run_stream_handler("consume", spark.range(3), h)
+    saved = store.load(jr.state.file_name)
+    assert saved["run_status"] == RUN_FATAL
+    assert saved["step_history"]["consume"]["status"] == "Error"
+    assert h.seen == []
+
+
 def test_handler_skip(spark):
     store = MemoryStore()
     jr = JobRunner("h4", "skip", store)

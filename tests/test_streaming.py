@@ -48,7 +48,7 @@ def test_windowed_agg_with_watermark(spark, event_dir, tmp_path):
         keys=["user"],
         aggs=[F.count(F.lit(1)).alias("n"), F.sum("v").alias("sum_v")],
     )
-    ops.run_append_available_now(agg, str(tmp_path / "ck1"), "win_agg")
+    ops.run_available_now(agg, str(tmp_path / "ck1"), "win_agg", output_mode="append")
     got = {
         (r.user, r.window.start.strftime("%H:%M")): (r.n, r.sum_v)
         for r in spark.sql("SELECT * FROM win_agg").collect()
@@ -70,7 +70,7 @@ def test_sessionize_stream(spark, event_dir, tmp_path):
         keys=["user"],
         aggs=[F.count(F.lit(1)).alias("n_events")],
     )
-    ops.run_append_available_now(sess, str(tmp_path / "ck2"), "sessions")
+    ops.run_available_now(sess, str(tmp_path / "ck2"), "sessions", output_mode="append")
     rows = spark.sql("SELECT user, n_events FROM sessions").collect()
     counts = sorted((r.user, r.n_events) for r in rows)
     # u1: [10:00:10, 10:00:50] then [10:03:30] (10:59 not closed? it is —
@@ -133,7 +133,7 @@ def test_dedup_stream_drops_repeats_within_watermark(spark, tmp_path):
     )
     stream = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     out = ops.dedup_stream(stream, keys=["k"], time_col="ts", watermark="10 minutes")
-    ops.run_append_available_now(out, str(tmp_path / "ck_dd"), "dedup_out")
+    ops.run_available_now(out, str(tmp_path / "ck_dd"), "dedup_out", output_mode="append")
     got = sorted((r.k, r.v) for r in spark.sql("SELECT k, v FROM dedup_out").collect())
     # first arrival per key survives; within-watermark repeats dropped
     assert got == [("a", 1), ("b", 3), ("c", 5)]
@@ -166,7 +166,7 @@ def test_interval_join_streams_attribution(spark, tmp_path):
         left_time="its", right_time="cts",
         horizon="5 minutes", watermark="10 minutes",
     )
-    ops.run_append_available_now(joined, str(tmp_path / "ck_ij"), "attributed")
+    ops.run_available_now(joined, str(tmp_path / "ck_ij"), "attributed", output_mode="append")
     got = sorted(
         (r.ad, r.cts.strftime("%H:%M"))
         for r in spark.sql("SELECT ad, cts FROM attributed").collect()
@@ -510,7 +510,7 @@ def test_curation_stream_matches_batch_funnel(spark, tmp_path):
     stream = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     out = ops.curation_stream(stream, watermark="10 minutes")
     assert out.isStreaming
-    ops.run_append_available_now(out, str(tmp_path / "ck_cur"), "curation_out")
+    ops.run_available_now(out, str(tmp_path / "ck_cur"), "curation_out", output_mode="append")
     kept = sorted(
         r.doc_id for r in spark.sql("SELECT doc_id FROM curation_out").collect()
     )
@@ -586,7 +586,7 @@ def test_near_dup_stream_matches_incremental_new_vs_old(spark, tmp_path):
     )
     out = ops.near_dup_stream(stream, idx, threshold=0.5)
     assert out.isStreaming
-    ops.run_append_available_now(out, str(tmp_path / "ck_ndp"), "ndp_out")
+    ops.run_available_now(out, str(tmp_path / "ck_ndp"), "ndp_out", output_mode="append")
     got_stream = {
         (r.id_a, r.id_b, r.jaccard)
         for r in spark.sql("SELECT * FROM ndp_out").collect()
