@@ -582,7 +582,7 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 20,
-    driver_max_edges: int | None = None,
+    driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """Group near-duplicate pairs into clusters: (member_id, group_id)
     where group_id = min member id of the connected component.
@@ -631,8 +631,7 @@ def connected_components(
     sampling, no order dependence). Above the threshold the star
     fixpoint runs unchanged — the 100 TB posture does not regress, it
     simply never pays fixpoint overhead on graphs that fit a broadcast.
-    ``driver_max_edges``: ``None`` reads ``SPARK_GRAFT_CC_DRIVER_MAX_EDGES``
-    (default 1,000,000); 0 disables the driver path.
+    ``driver_max_edges=0`` disables the driver path.
 
     Ids must not be float or double: the driver path orders ids with
     Python's ``<``, which disagrees with Spark's ordering on NaN, so the
@@ -682,12 +681,6 @@ def connected_components(
                 .distinct()
             )
 
-            if driver_max_edges is None:
-                import os
-
-                driver_max_edges = int(
-                    os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "1000000")
-                )
             n0 = edges.count()
             if driver_max_edges and n0 <= driver_max_edges:
                 # small-graph path (see docstring): exact union-find on

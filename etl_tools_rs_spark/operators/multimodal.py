@@ -752,9 +752,8 @@ def image_resize(df: DataFrame, width: int, height: int) -> DataFrame:
     """Arrow-batched REAL image resize (:func:`resize_image_real` per
     payload): binary column in, ``height`` × ``width`` grayscale pixel
     matrix out, decode failures error-as-record. Row-local, zero
-    shuffle — supersedes :func:`resize_stub` for the formats the
-    container can genuinely decode (BMP/PNG stdlib, anything via PIL
-    when present)."""
+    shuffle. Decodes BMP/PNG with the stdlib decoders and anything else
+    via PIL when it is importable."""
     import pandas as pd
 
     if "media_id" not in df.columns:
@@ -788,43 +787,6 @@ def image_resize(df: DataFrame, width: int, height: int) -> DataFrame:
             )
 
     return src.mapInPandas(_batches, schema=RESIZE_SCHEMA)
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Image-resize plumbing: passes payloads through an Arrow-batched stage
-    that would call the real resizer. NotImplemented decode is replaced by
-    a byte-truncation fake so the pipeline shape is testable. Superseded
-    by :func:`image_resize` (REAL for BMP/PNG/PIL-decodable formats);
-    kept for formats with no real decoder in this container."""
-    import pandas as pd
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("content", BinaryType(), True),
-            StructField("width", IntegerType(), False),
-            StructField("height", IntegerType(), False),
-        ]
-    )
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    # FAKE: real impl decodes + resizes; fake keeps a
-                    # deterministic prefix proportional to target area
-                    "content": [
-                        bytes(c)[: max(1, (width * height) // 64)] if c is not None else None
-                        for c in pdf["content"]
-                    ],
-                    "width": width,
-                    "height": height,
-                }
-            )
-            yield out
-
-    return df.select("media_id", "content").mapInPandas(_batches, schema=schema)
 
 
 def avi_frames(content: bytes) -> tuple[int, int, int, list[bytes]]:
@@ -922,8 +884,7 @@ def video_frame_sample(
     (:func:`_block_mean_resize`, the resize stage fused into the same
     pass so full-resolution frames never leave the executor). 1:N
     explode inside Arrow ``mapInPandas``; undecodable payloads produce
-    ONE error row (error-as-record), never job failures. Supersedes
-    :func:`frame_sample_stub` for the container's decodable format."""
+    ONE error row (error-as-record), never job failures."""
     import pandas as pd
 
     if every_ms <= 0:
@@ -967,28 +928,6 @@ def video_frame_sample(
             )
 
     return src.mapInPandas(_batches, schema=FRAME_SCHEMA)
-
-
-def frame_sample_stub(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: 1:N explode of a payload into frame
-    rows (timestamps every ``every_ms``). Frame extraction itself is faked
-    as sliced bytes; the explode/partitioning shape is the real design.
-    Superseded by :func:`video_frame_sample` (REAL demux + decode for
-    uncompressed AVI); kept for formats needing codec libraries."""
-    frames = F.transform(
-        F.sequence(
-            F.lit(0),
-            F.greatest((F.col("duration_ms") / every_ms).cast("int") - 1, F.lit(0)),
-        ),
-        lambda i: F.struct(
-            (i * every_ms).cast("long").alias("frame_ts_ms"),
-            # FAKE frame payload: deterministic slice keyed by index
-            F.substring(F.base64("content"), 1, 32).alias("frame_stub"),
-        ),
-    )
-    return df.select(
-        "media_id", F.explode(frames).alias("f")
-    ).select("media_id", "f.frame_ts_ms", "f.frame_stub")
 
 
 def _bmp_gray_grid(content: bytes, n: int) -> list[list[float]]:

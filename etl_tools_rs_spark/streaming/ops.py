@@ -269,27 +269,12 @@ def enrich_stream(
     return stream.join(F.broadcast(static), on, how)
 
 
-def tws_available() -> bool:
-    """True when the ``transformWithStateInPandas`` runtime dependency
-    (the ``protobuf`` Python package — its driver/worker protocol is
-    protobuf-framed) is importable. Mirrors the SFTP/SQS import-gating
-    pattern: the API surface exists either way; the capable path engages
-    where the environment allows."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def ema_stream(
     stream: DataFrame,
     keys: list[str],
     value_col: str,
     time_col: str,
     alpha: float = 0.5,
-    api: str = "auto",
 ) -> DataFrame:
     """Per-key exponential moving average maintained across micro-batches
     — one fixed (ema, n) struct per key, state bounded regardless of
@@ -298,49 +283,34 @@ def ema_stream(
     Rows are folded in ``time_col`` order within each batch
     (``ema ← α·v + (1−α)·ema``). Emits one ``(keys…, ema double,
     n_seen long)`` row per key per micro-batch — ``update`` semantics,
-    last row wins.
-
-    Two executor-side implementations, same semantics (property-pinned):
-
-    - ``api="tws"`` — ``transformWithStateInPandas`` (Spark 4's
-      typed-state successor to ``applyInPandasWithState``: named state
-      variables on a processor handle instead of one opaque tuple).
-      Requires the RocksDB state store
-      (``spark.sql.streaming.stateStore.providerClass`` →
-      ``...RocksDBStateStoreProvider``) and the ``protobuf`` package
-      (``tws_available()``).
-    - ``api="legacy"`` — ``applyInPandasWithState``, no extra deps.
-
-    ``api="auto"`` picks tws when its runtime dependency is present.
+    last row wins. Runs as ``applyInPandasWithState`` with the
+    ``(ema, n_seen)`` tuple as the group state.
     """
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"alpha must be in (0, 1], got {alpha!r}")
-    if api not in ("auto", "tws", "legacy"):
-        raise ValueError(f"api must be auto|tws|legacy, got {api!r}")
-    if api == "auto":
-        api = "tws" if tws_available() else "legacy"
     import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = ", ".join(f"{k} string" for k in keys) + ", ema double, n_seen long"
 
-    def fold(ema: float | None, n: int, pdfs) -> tuple[float | None, int]:
+    def fold_state(
+        key: tuple, pdfs: Iterable["pd.DataFrame"], state: GroupState
+    ) -> Iterable["pd.DataFrame"]:
+        ema, n = state.get if state.exists else (None, 0)
         # a key's batch may arrive as several Arrow chunks — concatenate
         # BEFORE sorting so the fold order is the batch's global time
         # order, not per-chunk order
         chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return ema, n
-        whole = pd.concat(chunks).sort_values(time_col)
-        for v in whole[value_col]:
-            if v is None or pd.isna(v):
-                continue
-            v = float(v)
-            ema = v if ema is None else alpha * v + (1.0 - alpha) * ema
-            n += 1
-        return ema, n
-
-    def out_row(key: tuple, ema: float | None, n: int) -> "pd.DataFrame":
-        return pd.DataFrame(
+        if chunks:
+            whole = pd.concat(chunks).sort_values(time_col)
+            for v in whole[value_col]:
+                if v is None or pd.isna(v):
+                    continue
+                v = float(v)
+                ema = v if ema is None else alpha * v + (1.0 - alpha) * ema
+                n += 1
+        state.update((ema, n))
+        yield pd.DataFrame(
             {
                 **{k: [key[i]] for i, k in enumerate(keys)},
                 "ema": [ema],
@@ -348,45 +318,12 @@ def ema_stream(
             }
         )
 
-    if api == "legacy":
-        from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-        def legacy_fn(
-            key: tuple, pdfs: Iterable["pd.DataFrame"], state: GroupState
-        ) -> Iterable["pd.DataFrame"]:
-            ema, n = state.get if state.exists else (None, 0)
-            ema, n = fold(ema, n, pdfs)
-            state.update((ema, n))
-            yield out_row(key, ema, n)
-
-        return stream.groupBy(*keys).applyInPandasWithState(
-            legacy_fn,
-            out_schema,
-            "ema double, n_seen long",
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class EmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ema", "ema double, n_seen long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            ema, n = self._state.get() if self._state.exists() else (None, 0)
-            ema, n = fold(ema, n, rows)
-            self._state.update((ema, n))
-            yield out_row(key, ema, n)
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(*keys).transformWithStateInPandas(
-        EmaProcessor(), out_schema, "update", "None"
+    return stream.groupBy(*keys).applyInPandasWithState(
+        fold_state,
+        out_schema,
+        "ema double, n_seen long",
+        "update",
+        GroupStateTimeout.NoTimeout,
     )
 
 

@@ -28,15 +28,17 @@ from pyspark.sql import functions as F
 
 
 def main(sf_dir: str = "/root/testdata/sf0.001") -> int:
-    from etl_tools_rs_spark.frame import EngineFrame
     from etl_tools_rs_spark.operators.dedup import (
         connected_components,
         dedup_minhash_lsh,
+        keep_best_per_group,
     )
     from etl_tools_rs_spark.operators.dsir import (
         dsir_model_vector,
         dsir_sample,
+        dsir_score,
     )
+    from etl_tools_rs_spark.operators.lsh_index import minhash_band_index
     from etl_tools_rs_spark.functions import token_count
     from etl_tools_rs_spark.session import get_spark
 
@@ -50,15 +52,13 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> int:
         "doc_id", "lang", "text",
         token_count("text").cast("bigint").alias("n_tok"),
     )
-    deduped = (
-        EngineFrame(slim).keep_best_per_group(groups, "n_tok").df
-    )
+    deduped = slim.transform(keep_best_per_group, groups, "n_tok")
     print(f"corpus {docs.count()} -> deduped {deduped.count()}")
 
     # 2-3. fit on the curated target (here: the English slice), score all
     target = deduped.filter(F.col("lang") == "en")
     lr = dsir_model_vector(deduped, target, num_buckets=1024)
-    scored = EngineFrame(deduped).dsir_score(lr).df
+    scored = deduped.transform(dsir_score, lr)
     top = scored.orderBy(F.col("log_weight").desc()).limit(3).collect()
     print("most target-like:", [(r["doc_id"], r["log_weight"]) for r in top])
 
@@ -72,7 +72,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> int:
     print(f"sampled {budget}; lang mix:", [(r["lang"], r["count"]) for r in langs])
 
     # 5. persist the band index for O(delta) daily increments
-    idx = EngineFrame(deduped).minhash_band_index().df
+    idx = deduped.transform(minhash_band_index)
     print(f"band index rows: {idx.count()} (persist partitioned by bucket)")
     return 0
 

@@ -33,11 +33,13 @@ def make_input(path: str) -> None:
 
 
 def main(workdir: str | None = None) -> int:
-    from etl_tools_rs_spark.frame import EngineFrame
     from etl_tools_rs_spark.jobs.runner import JobRunner
     from etl_tools_rs_spark.operators import validate as v
+    from etl_tools_rs_spark.operators.dedup import dedup_exact
+    from etl_tools_rs_spark.operators.transform import transform
     from etl_tools_rs_spark.session import get_spark
     from etl_tools_rs_spark.sinks.simple_store import SimpleStore
+    from etl_tools_rs_spark.sources.files import FileSource
 
     work = workdir or tempfile.mkdtemp(prefix="engine_example_")
     spark = get_spark("json-corpus-example", shuffle_partitions=8)
@@ -55,23 +57,24 @@ def main(workdir: str | None = None) -> int:
     )
 
     def ingest(_jr):
-        frame = EngineFrame.read(
-            spark, f"{src}/*.ndjson", format="json", schema="id bigint, text string"
-        )
+        frame = FileSource(
+            paths=[f"{src}/*.ndjson"], format="json", schema="id bigint, text string"
+        ).to_df(spark)
         # Spark requires materializing parsed JSON before a query that
         # references ONLY _corrupt_record — cache covers both uses below
-        raw = frame.df.cache()
+        raw = frame.cache()
         clean = raw.filter(F.col("_corrupt_record").isNull())
         n_bad = raw.filter(F.col("_corrupt_record").isNotNull()).count()
         if n_bad > 10:
             raise RuntimeError(f"too many corrupt records: {n_bad}")
         (
-            EngineFrame(clean)
-            .transform(
-                cols={"text": F.lower(F.col("text"))}, where=F.col("id").isNotNull()
+            clean.transform(
+                transform,
+                cols={"text": F.lower(F.col("text"))},
+                where=F.col("id").isNotNull(),
             )
-            .dedup_exact("text", "id")
-            .df.write.mode("overwrite")
+            .transform(dedup_exact, "text", "id")
+            .write.mode("overwrite")
             .parquet(f"{work}/deduped")
         )
         return n_bad

@@ -347,22 +347,6 @@ def test_sqs_push_md5_dedup_contract():
         q.pop()
 
 
-def test_multimodal_resize_and_frames(spark):
-    media = spark.createDataFrame(
-        [(1, b"x" * 4096, 3500), (2, b"y" * 100, 900)],
-        "media_id long, content binary, duration_ms long",
-    )
-    resized = multimodal.resize_stub(media, width=64, height=64)
-    rows = {r.media_id: r for r in resized.collect()}
-    assert rows[1].width == 64 and len(rows[1].content) == 64 * 64 // 64
-    # frame sampling: 1:N explode, one frame per second of duration
-    frames = multimodal.frame_sample_stub(media, every_ms=1000)
-    per_media = frames.groupBy("media_id").count().collect()
-    got = {r.media_id: r["count"] for r in per_media}
-    assert got[1] == 3  # 3.5s → frames at 0/1000/2000
-    assert got[2] == 1  # <1s still yields frame 0
-
-
 def test_knn_ivf_high_recall(spark):
     import numpy as np
 
@@ -788,32 +772,60 @@ def test_connected_components_count_first_fixpoint_exact(spark):
         assert got == reference(edges)
 
 
-def test_connected_components_driver_path_matches_distributed(spark):
-    """r10 scale-adaptive CC: the driver union-find path (edge count <=
-    driver_max_edges) and the distributed star fixpoint must agree
-    row-for-row — including exactly AT the threshold, just above it,
-    and on non-numeric (string) node ids."""
+def test_connected_components_driver_path_matches_distributed(
+    spark, monkeypatch
+):
+    """The driver union-find path (distinct edge count <=
+    driver_max_edges) and the distributed star fixpoint agree row for
+    row on a 10^4-edge graph: one long chain over shuffled ids (the
+    many-round case for the fixpoint) plus random edges. Each arm's path
+    is asserted by counting ``_cc_union_find`` calls: exactly AT the
+    threshold and at the default the driver path runs, just below it and
+    at 0 the fixpoint runs. String node ids travel the same contract."""
     import random
 
     rng = random.Random(23)
-    n, m = 150, 110
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-    edges = [(a, b) for a, b in edges if a != b]
+    n_nodes, chain_len, n_random = 20_000, 6_000, 5_000
+    ids = rng.sample(range(n_nodes), n_nodes)
+    chain = ids[:chain_len]
+    edges = list(zip(chain, chain[1:]))
+    edges += [
+        (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_random)
+    ]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    n_distinct = pairs.filter("id_a != id_b").distinct().count()
+    n_distinct = len({(a, b) for a, b in edges if a != b})
+    assert n_distinct >= 10_000
 
-    def run(threshold):
-        return {
+    union_find_calls = []
+    real_union_find = dedup._cc_union_find
+
+    def counting_union_find(rows):
+        union_find_calls.append(len(rows))
+        return real_union_find(rows)
+
+    monkeypatch.setattr(dedup, "_cc_union_find", counting_union_find)
+
+    def run(**kw):
+        union_find_calls.clear()
+        got = {
             (r.member_id, r.group_id)
-            for r in dedup.connected_components(
-                pairs, driver_max_edges=threshold
-            ).collect()
+            for r in dedup.connected_components(pairs, **kw).collect()
         }
+        return got, list(union_find_calls)
 
-    distributed = run(0)
-    assert run(n_distinct) == distributed  # at the threshold: driver path
-    assert run(n_distinct - 1) == distributed  # just below: distributed
-    assert run(10**6) == distributed  # default-magnitude threshold
+    distributed, calls = run(driver_max_edges=0)
+    assert calls == []
+    labels = dict(distributed)
+    assert len(labels) == len({x for e in edges for x in e if e[0] != e[1]})
+    assert len({labels[x] for x in chain}) == 1  # the chain is one component
+    assert labels[chain[0]] <= min(chain)
+
+    at_threshold, calls = run(driver_max_edges=n_distinct)
+    assert calls == [n_distinct] and at_threshold == distributed
+    below, calls = run(driver_max_edges=n_distinct - 1)
+    assert calls == [] and below == distributed
+    default, calls = run()
+    assert calls == [n_distinct] and default == distributed
 
     # string ids travel the same contract (min is lexicographic)
     spairs = spark.createDataFrame(

@@ -400,10 +400,9 @@ def test_round3_column_ops_compose_on_streams(spark, tmp_path):
     assert all(r.split in ("train", "test") for r in rows)
 
 
-def test_ema_stream_transform_with_state(spark, tmp_path):
-    """transformWithStateInPandas path: per-key EMA folds across
-    micro-batches (RocksDB state store), final value equals the batch
-    fold of the same rows in time order."""
+def test_ema_stream_folds_across_micro_batches(spark, tmp_path):
+    """Per-key EMA state carries across micro-batches: the final value
+    equals the batch fold of the same rows in time order."""
     rows_a = [
         {"user": "u1", "ts": "2024-01-01 10:00:00", "v": 10.0},
         {"user": "u1", "ts": "2024-01-01 10:01:00", "v": 20.0},
@@ -422,52 +421,28 @@ def test_ema_stream_transform_with_state(spark, tmp_path):
     os.utime(d / "a.ndjson", (1_700_000_000, 1_700_000_000))
     os.utime(d / "b.ndjson", (1_700_000_600, 1_700_000_600))
 
-    if ops.tws_available():
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        raw = sources.file_stream(
-            spark,
-            str(d),
-            format="json",
-            schema="user string, ts string, v double",
-            max_files_per_trigger=1,  # force >= 2 micro-batches
-        )
-        stream = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        ema = ops.ema_stream(
-            stream, keys=["user"], value_col="v", time_col="ts", alpha=0.5
-        )
-        ops.run_available_now(ema, str(tmp_path / "ck_ema"), "ema_out")
-        rows = spark.sql(
-            "SELECT user, ema, n_seen FROM ("
-            "  SELECT *, row_number() OVER ("
-            "    PARTITION BY user ORDER BY n_seen DESC) AS rn FROM ema_out"
-            ") WHERE rn = 1"
-        ).collect()
-        got = {r.user: (r.ema, r.n_seen) for r in rows}
-        # u1: 10 -> .5*20+.5*10=15 -> .5*40+.5*15=27.5 ; u2: 5 -> 10
-        assert got["u1"] == (27.5, 3)
-        assert got["u2"] == (10.0, 2)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_ema_stream_api_gate(spark):
-    """api='tws' is import-gated on protobuf (absent in this container →
-    auto resolves to the legacy path); explicit bad api rejects."""
-    import pytest as _pytest
-
-    df = spark.readStream.format("rate").load().selectExpr(
-        "cast(value as string) AS user", "timestamp AS ts",
-        "cast(value as double) AS v",
+    raw = sources.file_stream(
+        spark,
+        str(d),
+        format="json",
+        schema="user string, ts string, v double",
+        max_files_per_trigger=1,  # force >= 2 micro-batches
     )
-    out = ops.ema_stream(df, ["user"], "v", "ts")  # auto never raises
-    assert out.isStreaming
-    with _pytest.raises(ValueError):
-        ops.ema_stream(df, ["user"], "v", "ts", api="nope")
+    stream = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    ema = ops.ema_stream(
+        stream, keys=["user"], value_col="v", time_col="ts", alpha=0.5
+    )
+    ops.run_available_now(ema, str(tmp_path / "ck_ema"), "ema_out")
+    rows = spark.sql(
+        "SELECT user, ema, n_seen FROM ("
+        "  SELECT *, row_number() OVER ("
+        "    PARTITION BY user ORDER BY n_seen DESC) AS rn FROM ema_out"
+        ") WHERE rn = 1"
+    ).collect()
+    got = {r.user: (r.ema, r.n_seen) for r in rows}
+    # u1: 10 -> .5*20+.5*10=15 -> .5*40+.5*15=27.5 ; u2: 5 -> 10
+    assert got["u1"] == (27.5, 3)
+    assert got["u2"] == (10.0, 2)
 
 
 def test_ema_stream_validates_alpha(spark):
