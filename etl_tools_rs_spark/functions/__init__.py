@@ -100,14 +100,30 @@ def fingerprint(col: str | Column) -> Column:
 
 def ngrams(col: str | Column, n: int = 3) -> Column:
     """Token n-gram (shingle) array: space-joined sliding windows of n
-    tokens. Built from ``transform`` over index range — stays JVM-side."""
+    tokens, built from higher-order functions — stays JVM-side.
+
+    Linear per document: the token array is bound once as a lambda
+    variable (``transform(array(t), ts -> ...)[0]``), so the interpreted
+    tokenization runs twice per row (the size guard and the binding)
+    instead of once per window. Window i is element i of n shifted
+    slices of ``ts`` zipped together, not a slice of ``ts`` taken inside
+    a per-window lambda: a lambda that reads an outer lambda's variable
+    keeps Spark 4.1 from extracting a Python UDF applied to the result
+    out of a filter, and the task fails with "Cannot evaluate
+    expression" (``streaming.ops.near_dup_stream`` over a filtered file
+    scan does exactly that)."""
     t = tokens(col)
-    # windows i..i+n-1 for i in 0..size-n; guard: sequence(0, negative)
-    # would generate a DESCENDING range in Spark, so short docs get []
+    # size-n+1 windows; guard: docs shorter than n get [] (slice rejects
+    # the negative length they would give)
     return F.when(F.size(t) >= n, F.transform(
-        F.sequence(F.lit(0), F.size(t) - n),
-        lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)),
-    )).otherwise(F.array().cast("array<string>"))
+        F.array(t),
+        lambda ts: F.transform(
+            F.arrays_zip(
+                *(F.slice(ts, j + 1, F.size(ts) - n + 1) for j in range(n))
+            ),
+            lambda w: F.concat_ws(" ", *(w[str(j)] for j in range(n))),
+        ),
+    )[0]).otherwise(F.array().cast("array<string>"))
 
 
 def minhash_over(sh: Column, num_hashes: int) -> Column:
@@ -117,7 +133,8 @@ def minhash_over(sh: Column, num_hashes: int) -> Column:
     sits below an exchange/cache boundary), not a raw expression — the
     shingle expression is referenced once per hash seed, and higher-order
     functions are interpreted (outside codegen CSE), so an inlined
-    expression would be re-evaluated ``num_hashes`` times per row.
+    expression would be re-evaluated ``num_hashes`` times per row — for
+    ``ngrams``, ``num_hashes`` linear passes over the document's tokens.
     """
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),

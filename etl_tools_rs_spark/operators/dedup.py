@@ -128,8 +128,10 @@ def minhash_table(
     ``InferFiltersFromGenerate`` rule: the inferred
     ``size(_sh) > 0 AND isnotnull(_sh)`` filter is pushed below the
     Project and re-evaluates the whole interpreted ``ngrams`` expression
-    TWICE more per row (3x the tokenization; measured 2.6-9x slower on
-    every md5-family consumer at sf0.1). Inline generator expressions
+    TWICE more per row (3x the shingling, each pass linear in the
+    document's tokens; 2.6-9x slower on every md5-family consumer at
+    sf0.1 when a pass still re-tokenized once per window). Inline
+    generator expressions
     are exempt from that rule. Pre-tokenized frames are only safe when
     MATERIALIZED first (localCheckpoint), which is exactly what
     :func:`_minhash_from_shingles` is for.
@@ -158,7 +160,8 @@ def _minhash_from_shingles(
     rows (r9). ONLY for frames whose shingle column is (about to be)
     materialized — e.g. localCheckpoint'ed: over a raw projection the
     inferred size/notnull generate-filter re-runs the interpreted
-    ``ngrams`` twice per row (see :func:`minhash_table`)."""
+    ``ngrams`` (one linear pass over the tokens each) twice more per row
+    (see :func:`minhash_table`)."""
     return _minhash_signature_agg(
         toks.select(F.col(id_col), F.explode(F.col(sh_col)).alias("_s")),
         id_col,
@@ -577,12 +580,19 @@ def _cc_union_find(rows: list) -> list:
     return [(x, find(x)) for x in parent]
 
 
+# connected_components' default driver_max_edges: the driver peak the
+# union-find path may add, over its measured cost per distinct edge
+# (465-485 B from 10^4 to 10^6 edges, rounded up; see the docstring).
+_CC_DRIVER_BYTES_PER_EDGE = 500
+_CC_DRIVER_BUDGET_BYTES = 256 * 2**20
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 20,
-    driver_max_edges: int = 1_000_000,
+    driver_max_edges: int = _CC_DRIVER_BUDGET_BYTES // _CC_DRIVER_BYTES_PER_EDGE,
 ) -> DataFrame:
     """Group near-duplicate pairs into clusters: (member_id, group_id)
     where group_id = min member id of the connected component.
@@ -598,7 +608,9 @@ def connected_components(
     count-first (both frames are distinct sets, so unequal counts prove
     change with two narrow scans, no shuffle), and a single-direction
     exceptAll decides the equal-count case (|A|=|B| and A\\B=empty imply
-    A=B for sets).
+    A=B for sets). If the last of ``max_iterations`` rounds still changed
+    the edges, it raises ``RuntimeError``: a half-contracted star forest
+    would split components.
 
     Checkpoints are DISK_ONLY (r6 giant-component hardening): with the
     default MEMORY_AND_DISK level, every round's edge frame lands as
@@ -619,9 +631,9 @@ def connected_components(
     Scale-adaptive small-graph path (r10, guide §1.2 "the distributed
     algorithm" / §3.1 broadcast reasoning): the edge count is already on
     the driver (it seeds the count-first fixpoint), so when the
-    materialized DISTINCT edge list is small — ``driver_max_edges``,
-    default 1,000,000 edges — the exact union-find runs driver-side in
-    one pass and the labels return as a LOCAL relation. That replaces 4+ shuffles per star round (each a
+    materialized DISTINCT edge list is small — ``driver_max_edges``
+    edges — the exact union-find runs driver-side in one pass and the
+    labels return as a LOCAL relation. That replaces 4+ shuffles per star round (each a
     fixed-cost 2-job barrier that dominates answer-sized graphs: the CC
     tail of ``dedup_fuzzy_customers`` measured 4.3 s at sf0.1 on a
     few-hundred-edge graph) with one collect, and — because Catalyst
@@ -632,6 +644,12 @@ def connected_components(
     fixpoint runs unchanged — the 100 TB posture does not regress, it
     simply never pays fixpoint overhead on graphs that fit a broadcast.
     ``driver_max_edges=0`` disables the driver path.
+
+    Driver bytes (``tools/cc_driver_probe.py``, local[4], random graph of
+    N edges over N nodes): the path adds about 470 B of driver peak RSS
+    per distinct edge — +4.5 MB at 10^4 edges (1.7 s), +44 MB at 10^5
+    (3.8 s), +134 MB at 3x10^5 (6.5 s), +463 MB at 10^6 (15.4 s). The
+    default threshold is a 256 MiB budget at 500 B/edge: 536,870 edges.
 
     Ids must not be float or double: the driver path orders ids with
     Python's ``<``, which disagrees with Spark's ordering on NaN, so the
@@ -737,6 +755,14 @@ def connected_components(
                 prev_n = n
                 if changed == 0:
                     break
+            else:
+                # the last round still changed: the edges are a
+                # half-contracted star forest whose labels would split
+                # components, so refuse rather than mislabel
+                raise RuntimeError(
+                    f"connected_components: no fixpoint after "
+                    f"max_iterations={max_iterations} star rounds"
+                )
         finally:
             spark.conf.set(_FLAG, prev)
 

@@ -29,7 +29,6 @@ from etl_tools_rs_spark.functions import (
     token_count,
     tokens,
 )
-from etl_tools_rs_spark import oracle_fixtures_sf0_1 as _fix01
 from etl_tools_rs_spark.operators import dedup as dedup_ops
 from etl_tools_rs_spark.operators import multimodal as mm_ops
 from etl_tools_rs_spark.operators import similarity as sim_ops
@@ -57,21 +56,37 @@ class QueryDef:
     oracle_sf: str | None = None
     # r9 (VERDICT r8 #3): additional per-sf oracle variants — the SAME
     # query with its artifact re-authored at another sf (e.g. the
-    # sf0.1-trained word→pieces map). The local gate picks
-    # oracle_by_sf[sf] when the sf doesn't match oracle_sf, restoring a
-    # full value check instead of rows-only; the driver's oracle_sql()
-    # keeps returning the default (gate-sf) oracle.
-    oracle_by_sf: dict[str, str] | None = None
+    # sf0.1-trained word→pieces map). The local gate asks oracle_for(sf)
+    # when the sf doesn't match oracle_sf, restoring a full value check
+    # instead of rows-only; the driver's oracle_sql() keeps returning the
+    # default (gate-sf) oracle. Each entry is a zero-argument builder that
+    # imports its fixture module inside the call, so importing the
+    # registry never compiles the ~500 KB fixture literals.
+    oracle_by_sf: dict[str, Callable[[], str]] | None = None
+
+    def oracle_for(self, sf: str) -> str | None:
+        """The oracle SQL re-authored for scale factor ``sf`` (e.g.
+        ``"0.1"``), built on this call; None when no variant exists."""
+        build = (self.oracle_by_sf or {}).get(sf)
+        return build() if build else None
 
 
 REGISTRY: dict[str, QueryDef] = {}
+
+
+def _fix01():
+    """The sf0.1 oracle fixtures module, imported on first use: it is a
+    ~500 KB literal that only the per-sf oracle builders read."""
+    from etl_tools_rs_spark import oracle_fixtures_sf0_1
+
+    return oracle_fixtures_sf0_1
 
 
 def qdef(
     name: str,
     oracle: str | None,
     oracle_sf: str | None = None,
-    oracle_by_sf: dict[str, str] | None = None,
+    oracle_by_sf: dict[str, Callable[[], str]] | None = None,
 ):
     def wrap(fn):
         REGISTRY[name] = QueryDef(
@@ -2461,8 +2476,8 @@ def _minhash_fast_oracle_sql(
     _minhash_fast_oracle_sql(),
     oracle_sf="0.01",
     oracle_by_sf={
-        "0.1": _minhash_fast_oracle_sql(
-            bands=_fix01.MINHASH_FAST_BANDS_SF0_1
+        "0.1": lambda: _minhash_fast_oracle_sql(
+            bands=_fix01().MINHASH_FAST_BANDS_SF0_1
         )
     },
 )
@@ -7433,8 +7448,8 @@ _TOKENIZE_COUNT_EXTRAS = (
     # merges genuinely differ (e.g. 'join' → j|o|in</w> vs sf0.01's), so
     # the old map was not portable; now both gate sfs value-check.
     oracle_by_sf={
-        "0.1": _word_pieces_oracle_sql(
-            _fix01.BPE_WORD_TOKENS_SF0_1,
+        "0.1": lambda: _word_pieces_oracle_sql(
+            _fix01().BPE_WORD_TOKENS_SF0_1,
             "bpe_tokens",
             extras=_TOKENIZE_COUNT_EXTRAS,
         )
@@ -7517,8 +7532,8 @@ _WP_WORD_PIECES = {
     # r9: sf0.1 map from the pure-python reference trainer + BERT greedy
     # segmenter (tools/author_sf_oracles.py)
     oracle_by_sf={
-        "0.1": _word_pieces_oracle_sql(
-            _fix01.WP_WORD_PIECES_SF0_1,
+        "0.1": lambda: _word_pieces_oracle_sql(
+            _fix01().WP_WORD_PIECES_SF0_1,
             "wp_tokens",
             extras=_TOKENIZE_COUNT_EXTRAS,
         )
@@ -10714,7 +10729,9 @@ def _unigram_vocab_oracle_sql(vocab: list[tuple[str, float, int]]) -> str:
     # r9: sf0.1 vocabulary from the pure-python reference trainer
     # (tools/author_sf_oracles.py)
     oracle_by_sf={
-        "0.1": _unigram_vocab_oracle_sql(_fix01.UNIGRAM_VOCAB_SF0_1)
+        "0.1": lambda: _unigram_vocab_oracle_sql(
+            _fix01().UNIGRAM_VOCAB_SF0_1
+        )
     },
 )
 def unigram_vocab_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10753,8 +10770,8 @@ _UNI_PIECES_EXTRAS = (
     # r9: sf0.1 map from the pure-python reference trainer + Viterbi
     # segmenter (tools/author_sf_oracles.py)
     oracle_by_sf={
-        "0.1": _word_pieces_oracle_sql(
-            _fix01.UNI_WORD_PIECES_SF0_1, "pieces", extras=_UNI_PIECES_EXTRAS
+        "0.1": lambda: _word_pieces_oracle_sql(
+            _fix01().UNI_WORD_PIECES_SF0_1, "pieces", extras=_UNI_PIECES_EXTRAS
         )
     },
 )
@@ -11079,8 +11096,8 @@ def _pca_project_oracle_sql(mean=None, comps=None) -> str:
     # r9: sf0.1 model re-derived by the numpy replay of pca_fit_exact's
     # integer-moment law (tools/author_sf_oracles.py)
     oracle_by_sf={
-        "0.1": _pca_project_oracle_sql(
-            _fix01.PCA_MEAN_SF0_1, _fix01.PCA_COMPS_SF0_1
+        "0.1": lambda: _pca_project_oracle_sql(
+            _fix01().PCA_MEAN_SF0_1, _fix01().PCA_COMPS_SF0_1
         )
     },
 )

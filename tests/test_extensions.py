@@ -662,6 +662,26 @@ def test_connected_components_long_chain(spark):
     assert {r.group_id for r in rows} == {0}  # one component, min-labeled
 
 
+def test_connected_components_raises_without_fixpoint(spark):
+    """A 3,000-node chain over shuffled ids needs more than two star
+    rounds. With ``max_iterations=2`` on the fixpoint path the last round
+    still changes the edges, and labelling that half-contracted forest
+    gave 560 groups instead of 1; it must raise instead."""
+    import random
+
+    import pytest
+
+    ids = list(range(3000))
+    random.Random(12).shuffle(ids)
+    pairs = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        dedup.connected_components(
+            pairs, max_iterations=2, driver_max_edges=0
+        )
+
+
 def test_connected_components_rejects_float_ids(spark):
     """Float ids raise before any Spark job runs: the driver path's
     Python ``<`` orders NaN differently from Spark, so the two CC paths

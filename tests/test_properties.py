@@ -8,7 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from hypothesis import given, settings, strategies as st
 
-from etl_tools_rs_spark.functions import fingerprint, tokens
+from etl_tools_rs_spark.functions import fingerprint, ngrams, tokens
 from etl_tools_rs_spark.operators.batch import batch_by_count
 from etl_tools_rs_spark.operators.join import asof_join
 
@@ -28,6 +28,19 @@ def test_tokens_match_python_split(spark, docs):
     got = [r[0] for r in df.select(tokens("text")).collect()]
     expected = [t.split() for t in docs]
     assert got == expected  # whitespace tokenization ≡ str.split
+
+
+@given(st.lists(texts, min_size=1, max_size=8), st.integers(1, 4))
+@settings(**SETTINGS)
+def test_ngrams_match_python_sliding_window(spark, docs, n):
+    df = spark.createDataFrame([(t,) for t in docs], "text string")
+    got = [r[0] for r in df.select(ngrams("text", n)).collect()]
+    windows = [t.split() for t in docs]
+    expected = [
+        [" ".join(w[i : i + n]) for i in range(len(w) - n + 1)]
+        for w in windows
+    ]
+    assert got == expected  # short docs (< n tokens) give []
 
 
 @given(texts)

@@ -550,6 +550,19 @@ def test_near_dup_stream_matches_incremental_new_vs_old(spark, tmp_path):
     }
     assert got_batch == want
 
+    # filtered file-backed input: Spark pushes the explode's inferred
+    # size/notnull filter on the band UDF down into the scan filter, and
+    # the UDF must still be extracted from it (an ngrams form whose window
+    # lambda read an outer lambda variable failed here)
+    src = tmp_path / "ndp_parquet"
+    spark.createDataFrame(rows).write.parquet(str(src))
+    filtered = spark.read.parquet(str(src)).filter("doc_id >= 10")
+    got_filtered = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in ops.near_dup_stream(filtered, idx, threshold=0.5).collect()
+    }
+    assert got_filtered == want
+
     # real stream drain
     d = tmp_path / "ndp_docs"
     d.mkdir()

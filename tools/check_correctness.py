@@ -91,9 +91,8 @@ def main() -> int:
             # r9 (VERDICT r8 #3): a re-authored artifact for THIS sf
             # restores the full value check; out-of-scope only when no
             # per-sf variant exists either
-            by_sf = REGISTRY[name].oracle_by_sf or {}
-            if sf_label in by_sf:
-                oracle_sql = by_sf[sf_label]
+            oracle_sql = REGISTRY[name].oracle_for(sf_label)
+            if oracle_sql is not None:
                 oracle_variant = sf_label
             else:
                 print(
