@@ -31,13 +31,6 @@ def dsum(col: str | Column, scale: int = 2) -> Column:
     return F.round(F.sum(c.cast(DEC)), scale).cast("double")
 
 
-def dsum_expr(expr: Column, scale: int = 4) -> Column:
-    """Exact SUM of a computed decimal expression. Callers must build the
-    expression from decimal-cast inputs so intermediate products stay exact
-    (e.g. price*(1-disc) at decimal(18,2)*decimal(18,2))."""
-    return F.round(F.sum(expr), scale).cast("double")
-
-
 def davg(col: str | Column, scale: int = 6) -> Column:
     """Bit-stable cross-engine AVG at fixed ``scale``: floor(10^s*sum/cnt)/10^s
     computed with NO double arithmetic before the final division. The input
@@ -83,12 +76,6 @@ def tokens(col: str | Column) -> Column:
 
 def token_count(col: str | Column) -> Column:
     return F.size(tokens(col))
-
-
-def char_set(col: str | Column) -> Column:
-    """Distinct-character set of a string (for char-Jaccard similarity)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array_distinct(F.filter(F.split(c, ""), lambda ch: ch != ""))
 
 
 def fingerprint(col: str | Column) -> Column:

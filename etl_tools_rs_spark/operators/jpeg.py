@@ -360,13 +360,6 @@ def _jpeg_decode_y(content: bytes) -> tuple[int, int, np.ndarray]:
     return w, hgt, np.clip(plane, 0.0, 255.0) / 255.0
 
 
-def _jpeg_gray_rows(content: bytes) -> list[list[float]]:
-    """Grayscale rows in [0, 1] — the JPEG twin of ``_png_gray_rows``
-    (grayscale of a JFIF image IS its luma plane)."""
-    _, _, plane = _jpeg_decode_y(content)
-    return plane.tolist()
-
-
 def decode_jpeg_real(content: bytes, dim: int) -> list[float]:
     """``dim``-band mean-brightness profile — same output contract as
     ``decode_png_real``/``decode_bmp_real`` so renditions of one image

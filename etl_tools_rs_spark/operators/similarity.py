@@ -360,70 +360,6 @@ def embedding_near_dup(
     )
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    iterations: int = 5,
-    tol: float = 1e-7,
-) -> list[list[float]]:
-    """Lloyd's k-means over a vector column, pure DataFrame ops.
-
-    Deterministic: initial centroids are the k smallest ids (stable across
-    runs/engines); each iteration is one broadcast of k·dim floats + one
-    groupBy shuffle of per-partition partial sums. k·dim stays driver-side
-    (a few MB for k=4096·dim=1024) — the DATA never collects. Stops early
-    when the max centroid coordinate shift drops below ``tol`` —
-    ``iterations`` is a cap, and each saved iteration is a full corpus
-    pass.
-
-    At 100 TB train on a sample (df.sample) — Lloyd on the full corpus is
-    wasted work once centroids stabilize.
-    """
-    centroids = [
-        r[0]
-        for r in df.orderBy(id_col).limit(k).select(vec_col).collect()
-    ]
-    dim = len(centroids[0])
-    for _ in range(iterations):
-        assign = nearest_cells_udf(centroids, 1)
-        # relational reduction: posexplode the vector and sum per
-        # (cell, position) — ONE codegen sum with map-side combine, and a
-        # plan of constant size. A dim-wide agg (64 sum(element_at)
-        # columns) costs seconds of planning + janino compile per
-        # iteration, paid again every iteration because the centroid
-        # literals change the plan.
-        assigned = df.select(
-            F.element_at(assign(F.col(vec_col)), 1).alias("_c"),
-            F.posexplode(F.col(vec_col)).alias("_i", "_x"),
-        )
-        rows = (
-            assigned.groupBy("_c", "_i")
-            .agg(F.sum("_x").alias("_s"), F.count(F.lit(1)).alias("_n"))
-            .collect()
-        )
-        sums: dict[int, list[float]] = {}
-        counts: dict[int, int] = {}
-        for r in rows:
-            sums.setdefault(r["_c"], [0.0] * dim)[r["_i"]] = r["_s"]
-            counts[r["_c"]] = r["_n"]
-        # empty cells keep their previous centroid
-        new_centroids = [
-            [s / counts[c] for s in sums[c]] if c in sums else centroids[c]
-            for c in range(k)
-        ]
-        shift = max(
-            abs(a - b)
-            for nc, oc in zip(new_centroids, centroids)
-            for a, b in zip(nc, oc)
-        )
-        centroids = new_centroids
-        if shift < tol:
-            break
-    return centroids
-
-
 def quantize_vec(col: Column, input_scale: int = 6) -> Column:
     """Floor-quantize a float vector to ``10^-input_scale`` integer
     micro-units (``array<bigint>``). The cast order matters for oracle
@@ -436,23 +372,39 @@ def quantize_vec(col: Column, input_scale: int = 6) -> Column:
     )
 
 
-def _check_magnitude_contract(df: DataFrame, qvec_col: str) -> None:
-    """Standalone 1e8 magnitude-contract check (one narrow max-only
-    aggregate job). Only used by the ``iterations=0`` paths of the exact
-    trainers, where no round-1 aggregation exists to carry the check
-    (ADVICE r9); the message matches the in-loop refusal."""
-    r = (
-        df.select(F.posexplode(F.col(qvec_col)).alias("_i", "_x"))
-        .agg(F.max(F.abs(F.col("_x"))).alias("_mx"))
-        .first()
-    )
-    max_q = int(r["_mx"]) if r is not None and r["_mx"] is not None else 0
+def _trunc_div(s: int, n: int) -> int:
+    """Integer division truncating toward zero, as SQL ``//`` does
+    (Python's ``//`` floors) — the exact trainers' centroid mean."""
+    q = abs(s) // n
+    return q if s >= 0 else -q
+
+
+def _refuse_magnitude(maxima) -> None:
+    """The exact trainers' 1e8 magnitude contract over per-group
+    max|q| values (``None`` for empty groups). The numpy argmin probe
+    computes integer squared distances in float64 — exact iff every
+    per-pair distance < 2^53. |q| ≤ 1e8 gives dim·(2e8)² = dim·4e16 ≤
+    2^53 for dim ≤ 225; the engine's embedding dims (≤ 64) leave 3.5×
+    headroom even there."""
+    max_q = max((int(v) for v in maxima if v is not None), default=0)
     if max_q > 10**8:
         raise ValueError(
             f"quantized magnitudes up to {max_q} exceed the 1e8 "
             f"exactness contract (float64 argmin would no longer "
             f"be exact); lower the quantization scale"
         )
+
+
+def _check_magnitude_contract(df: DataFrame, qvec_col: str) -> None:
+    """Standalone magnitude-contract check (one narrow max-only
+    aggregate job). Only used by the ``iterations=0`` paths of the exact
+    trainers, where no round-1 aggregation exists to carry the check."""
+    r = (
+        df.select(F.posexplode(F.col(qvec_col)).alias("_i", "_x"))
+        .agg(F.max(F.abs(F.col("_x"))).alias("_mx"))
+        .first()
+    )
+    _refuse_magnitude([r["_mx"]] if r is not None else [])
 
 
 def kmeans_centroids_exact(
@@ -463,10 +415,12 @@ def kmeans_centroids_exact(
     iterations: int = 3,
 ) -> list[list[int]]:
     """Deterministic, ORACLE-REPLAYABLE Lloyd's k-means over a
-    pre-quantized (``quantize_vec``) integer vector column. Everything
-    is exact integer arithmetic, so the trained centroids are a pure
-    function of the data — the same property :func:`pca_fit_exact`
-    gives PCA — and the whole TRAINING can be unrolled in SQL:
+    pre-quantized (``quantize_vec``) integer vector column — the
+    engine's one k-means trainer (``knn_ivf`` cells, ``semdedup``
+    clusters). Everything is exact integer arithmetic, so the trained
+    centroids are a pure function of the data — the same property
+    :func:`pca_fit_exact` gives PCA — and the whole TRAINING can be
+    unrolled in SQL:
 
     - init: the ``k`` smallest-id vectors (stable across engines);
     - assignment: argmin of the exact integer squared L2 (micro-unit
@@ -479,16 +433,18 @@ def kmeans_centroids_exact(
 
     Returns micro-unit centroid rows (list of ints). Fixed
     ``iterations`` — no float tolerance test, the replica must run the
-    same round count. Same shuffle shape as :func:`kmeans_centroids`:
-    one broadcast + one map-side-combined groupBy per round.
+    same round count. Each round is one broadcast of k·dim centroids
+    plus one map-side-combined groupBy(cell, dim) of per-partition
+    partial sums; the data never collects. At 100 TB train on a sample
+    (``df.sample``) and reuse the centroids.
 
-    Input contract (r7, enforced): at least ``k`` rows (the k smallest-id
+    Input contract (enforced): at least ``k`` rows (the k smallest-id
     init needs them), and micro-unit magnitudes ≤ 10^8 — the exactness
     argument runs through the float64 numpy probe (per-pair squared L2
     ≤ dim·(2·max)² must stay under 2^53), so out-of-contract magnitudes
     would silently break the exact-argmin property the oracles replay.
-    r9: the magnitude check rides round 1's own aggregation instead of a
-    standalone corpus-scan job — the refusal is unchanged, it just lands
+    The magnitude check rides round 1's own aggregation instead of a
+    standalone corpus-scan job, so an out-of-contract corpus is refused
     after round 1's job."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k!r}")
@@ -506,12 +462,14 @@ def kmeans_centroids_exact(
         # with zero rounds there is no round-1 aggregation to ride, so
         # the magnitude contract gets its own (narrow max-only) job —
         # otherwise an out-of-contract corpus would silently return the
-        # init centroids (ADVICE r9). Only paid on iterations=0 calls.
+        # init centroids. Only paid on iterations=0 calls.
         _check_magnitude_contract(df, qvec_col)
     for it in range(iterations):
-        assign = nearest_cells_udf(
-            [[float(c) for c in row] for row in centroids], 1
-        )
+        assign = nearest_cells_udf(centroids, 1)
+        # relational reduction: posexplode the vector and sum per
+        # (cell, position) — ONE codegen sum with map-side combine and a
+        # plan of constant size, where a dim-wide agg would pay planning
+        # and compile again every round (the centroid literals change)
         assigned = df.select(
             F.element_at(assign(F.col(qvec_col)), 1).alias("_c"),
             F.posexplode(F.col(qvec_col)).alias("_i", "_x"),
@@ -521,42 +479,18 @@ def kmeans_centroids_exact(
             F.count(F.lit(1)).alias("_n"),
         ]
         if it == 0:
-            # float64-exactness bound, checked on round 1's own
-            # aggregation rather than a separate corpus-scan job (r9):
-            # the numpy argmin probe computes integer squared distances
-            # in float64 — exact iff every per-pair distance < 2^53.
-            # |q| ≤ 1e8 gives dim·(2e8)² = dim·4e16 ≤ 2^53 for dim ≤
-            # 225; the engine's embedding dims (≤ 64) leave 3.5×
-            # headroom even there. The global max|q| is the max of the
-            # per-(cell, dim) maxes this groupBy already computes over
-            # every exploded component, so the check is free; on an
-            # out-of-contract corpus the raise lands after round 1's
-            # job instead of before it — the same refusal either way,
-            # and no result is ever returned.
+            # the global max|q| is the max of the per-(cell, dim) maxes
+            # this groupBy already computes over every exploded
+            # component, so the contract check costs no extra job
             aggs.append(F.max(F.abs(F.col("_x"))).alias("_mx"))
         rows = assigned.groupBy("_c", "_i").agg(*aggs).collect()
-        if it == 0 and rows:
-            max_q = max(
-                (int(r["_mx"]) for r in rows if r["_mx"] is not None),
-                default=0,
-            )
-            if max_q > 10**8:
-                raise ValueError(
-                    f"quantized magnitudes up to {max_q} exceed the 1e8 "
-                    f"exactness contract (float64 argmin would no longer "
-                    f"be exact); lower the quantization scale"
-                )
+        if it == 0:
+            _refuse_magnitude(r["_mx"] for r in rows)
         sums: dict[int, list[int]] = {}
         counts: dict[int, int] = {}
         for r in rows:
             sums.setdefault(r["_c"], [0] * dim)[r["_i"]] = int(r["_s"])
             counts[r["_c"]] = r["_n"]
-
-        def _trunc_div(s: int, n: int) -> int:
-            # SQL // truncates toward zero; Python // floors — match SQL
-            q = abs(s) // n
-            return q if s >= 0 else -q
-
         centroids = [
             [_trunc_div(s, counts[c]) for s in sums[c]]
             if c in sums
@@ -594,46 +528,33 @@ def nearest_cells_udf(centroids: list[list[float]], n_probe: int = 1):
 def knn_ivf(
     corpus: DataFrame,
     queries: DataFrame,
+    centroids: list[list[int]],
+    assign_vec: str,
     k: int = 10,
-    n_centroids: int = 16,
     n_probe: int = 4,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    kmeans_iterations: int = 5,
-    assign_corpus_vec: str | None = None,
-    assign_query_vec: str | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus partitioned into centroid cells
     (inverted file); each query probes its ``n_probe`` nearest cells and
     exact-rescores only those candidates.
 
-    The scale path for billion-vector corpora: one assignment pass over the
-    corpus (reusable across queries), candidate work ≈ n_probe/n_centroids
-    of brute force. Recall tunes with n_probe. Pass precomputed
-    ``centroids`` to skip training (production: train once on a sample,
-    reuse per batch).
+    The model is an input: ``centroids`` come from
+    :func:`kmeans_centroids_exact`, trained once (on a sample at scale)
+    over the ``quantize_vec`` column ``assign_vec``, which corpus and
+    queries both carry. Cell assignment and probing are exact integer
+    argmins on that column; the rerank scores the original
+    ``corpus_vec``/``query_vec`` floats. One assignment pass over the
+    corpus (reusable across queries), candidate work ≈
+    n_probe/len(centroids) of brute force; recall tunes with n_probe.
     """
-    # assignment may run on a DIFFERENT column than the rerank (r6: the
-    # oracle-replayable gate path assigns on quantized integer vectors —
-    # exact argmins — and reranks on the original floats)
-    acv = assign_corpus_vec or corpus_vec
-    aqv = assign_query_vec or query_vec
-    if centroids is None:
-        centroids = kmeans_centroids(
-            corpus,
-            n_centroids,
-            vec_col=acv,
-            id_col=corpus_id,
-            iterations=kmeans_iterations,
-        )
     assign = nearest_cells_udf(centroids, 1)
     c = corpus.select(
         F.col(corpus_id).alias("_cid"),
         F.col(corpus_vec).alias("_cv"),
-        F.element_at(assign(F.col(acv)), 1).alias("_cell"),
+        F.element_at(assign(F.col(assign_vec)), 1).alias("_cell"),
     )
     # each query → n_probe candidate cells (ranked by centroid distance)
     probe = nearest_cells_udf(centroids, n_probe)
@@ -641,7 +562,7 @@ def knn_ivf(
     # real attribute (a same-select lateral alias breaks under Generate)
     q0 = queries.select(
         F.col(query_id).alias("_qid"), F.col(query_vec).alias("_qv"),
-        F.col(aqv).alias("_aqv"),
+        F.col(assign_vec).alias("_aqv"),
     )
     q = q0.select("_qid", "_qv", F.explode(probe(F.col("_aqv"))).alias("_cell"))
     scored = c.join(F.broadcast(q), "_cell").select(
@@ -756,45 +677,6 @@ def embedding_profile(
 # -- product quantization (PQ) ----------------------------------------------
 
 
-def pq_train(
-    corpus: DataFrame,
-    m: int = 4,
-    ksub: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    iterations: int = 5,
-) -> list[list[list[float]]]:
-    """Train PQ codebooks: split the vector into ``m`` equal subspaces,
-    k-means each with ``ksub`` codewords (Jégou et al., "Product
-    Quantization for Nearest Neighbor Search", TPAMI'11). Returns
-    ``m × ksub × (dim/m)`` codewords.
-
-    Each subspace trains with the same deterministic distributed Lloyd's
-    as IVF (``kmeans_centroids``) over a sliced view — m passes over the
-    (sampled) corpus, nothing but centroids ever reaches the driver. At
-    100 TB: train on ``corpus.sample(...)``; codebooks are tiny
-    (m·ksub·dim/m floats) and reusable.
-    """
-    first = corpus.select(F.size(vec_col)).first()
-    if first is None:
-        raise ValueError("pq_train: empty corpus")
-    dim = first[0]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    books: list[list[list[float]]] = []
-    for s in range(m):
-        sliced = corpus.select(
-            F.col(id_col), F.slice(F.col(vec_col), s * sub + 1, sub).alias("_sv")
-        )
-        books.append(
-            kmeans_centroids(
-                sliced, ksub, vec_col="_sv", id_col=id_col, iterations=iterations
-            )
-        )
-    return books
-
-
 def pq_train_exact(
     corpus: DataFrame,
     m: int = 4,
@@ -803,18 +685,21 @@ def pq_train_exact(
     id_col: str = "vec_id",
     iterations: int = 3,
 ) -> list[list[list[int]]]:
-    """Deterministic, ORACLE-REPLAYABLE PQ codebook training (r7): the
-    product-quantization analogue of :func:`kmeans_centroids_exact` —
-    each subspace trains exact-quantized Lloyd's on the integer
-    micro-unit slice, so the m×ksub×(dim/m) INTEGER codebooks are a pure
-    function of the data and a SQL engine can replay the whole training
-    (per-subspace unrolled rounds) from the raw table. Same input
-    contract as ``kmeans_centroids_exact`` (≥ ksub rows, micro-units
-    ≤ 1e8). r9: all m subspaces train in ONE fused pass per round, the
-    dim probe reads the init collect, and the magnitude check rides
-    round 1's aggregation (1 + ``iterations`` corpus scans instead of
-    m·(2 + ``iterations``)) — bit-identical to the per-slice
-    composition, see the inline proof sketch."""
+    """Deterministic, ORACLE-REPLAYABLE PQ codebook training — the
+    engine's one PQ trainer (Jégou et al., "Product Quantization for
+    Nearest Neighbor Search", TPAMI'11): split the vector into ``m``
+    equal subspaces and train ``ksub`` codewords in each with the
+    exact-quantized Lloyd's of :func:`kmeans_centroids_exact` on the
+    integer micro-unit slice, so the m×ksub×(dim/m) INTEGER codebooks
+    are a pure function of the data and a SQL engine can replay the
+    whole training (per-subspace unrolled rounds) from the raw table.
+    Same input contract as ``kmeans_centroids_exact`` (≥ ksub rows,
+    micro-units ≤ 1e8). All m subspaces train in ONE fused pass per
+    round, the dim probe reads the init collect, and the magnitude
+    check rides round 1's aggregation (1 + ``iterations`` corpus scans
+    instead of m·(2 + ``iterations``)) — bit-identical to the per-slice
+    composition, see the inline proof sketch. Codebooks are tiny and
+    reusable: at 100 TB train on ``corpus.sample(...)``."""
     # r9 fusion: train ALL m subspaces in one distributed pass per round
     # instead of m independent kmeans_centroids_exact loops — the per-
     # subspace formulation ran m·(init + contract-check + iterations)
@@ -838,8 +723,8 @@ def pq_train_exact(
         raise ValueError("pq_train_exact: empty corpus")
     if len(init_rows) < ksub:
         raise ValueError(
-            f"kmeans_centroids_exact needs >= k rows to initialize; got "
-            f"{len(init_rows)} rows for k={ksub}"
+            f"pq_train_exact needs >= ksub rows to initialize; got "
+            f"{len(init_rows)} rows for ksub={ksub}"
         )
     dim = len(init_rows[0])
     if dim % m != 0:
@@ -850,19 +735,10 @@ def pq_train_exact(
     ]
     if iterations == 0:
         # same rationale as kmeans_centroids_exact: no round-1
-        # aggregation exists to carry the check (ADVICE r9)
+        # aggregation exists to carry the check
         _check_magnitude_contract(corpus, qvec_col)
-
-    def _trunc_div(s: int, n: int) -> int:
-        # SQL // truncates toward zero; Python // floors — match SQL
-        q = abs(s) // n
-        return q if s >= 0 else -q
-
     for it in range(iterations):
-        assign = _pq_assign_all_udf(
-            [[[float(c) for c in row] for row in books[s]] for s in range(m)],
-            sub,
-        )
+        assign = _pq_assign_all_udf(books, sub)
         # one scan: per-row all-m assignments + posexplode of the full
         # vector; (cell, dim) is unique because the dim determines the
         # subspace. Shuffle volume equals the m per-slice jobs' combined.
@@ -884,20 +760,11 @@ def pq_train_exact(
             # magnitude contract check over the full vector == the max
             # over every slice, so accept/reject is identical to the
             # per-subspace checks; riding round 1's aggregation makes
-            # it free (r9 — was its own corpus-scan job)
+            # it free
             aggs.append(F.max(F.abs(F.col("_x"))).alias("_mx"))
         rows = assigned.groupBy("_c", "_i").agg(*aggs).collect()
-        if it == 0 and rows:
-            max_q = max(
-                (int(r["_mx"]) for r in rows if r["_mx"] is not None),
-                default=0,
-            )
-            if max_q > 10**8:
-                raise ValueError(
-                    f"quantized magnitudes up to {max_q} exceed the 1e8 "
-                    f"exactness contract (float64 argmin would no longer "
-                    f"be exact); lower the quantization scale"
-                )
+        if it == 0:
+            _refuse_magnitude(r["_mx"] for r in rows)
         sums: list[dict[int, list[int]]] = [{} for _ in range(m)]
         counts: list[dict[int, int]] = [{} for _ in range(m)]
         for r in rows:
@@ -970,66 +837,53 @@ def pq_encode(
 def knn_pq(
     corpus: DataFrame,
     queries: DataFrame,
+    codebooks: list[list[list[int]]],
+    adc_vec: str,
     k: int = 10,
-    m: int = 4,
-    ksub: int = 16,
     rerank: int = 4,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "embedding",
-    codebooks: list[list[list[float]]] | None = None,
-    adc_vec: str | None = None,
 ) -> DataFrame:
     """PQ approximate top-k cosine with exact re-ranking.
+
+    The model is an input: ``codebooks`` are the INTEGER codebooks
+    :func:`pq_train_exact` trains once (on a sample at scale) over the
+    ``quantize_vec`` micro-unit column ``adc_vec``, which corpus and
+    queries both carry.
 
     Asymmetric distance computation: each query builds an m×ksub lookup
     table of subspace dot products against the codewords; a corpus
     vector's approximate dot product is m table lookups on its codes —
     the compressed-domain scan touches 8·m bits per vector instead of
-    32·dim. The top ``k·rerank`` ADC candidates per query are re-scored
-    EXACTLY against the raw vectors (one id-join), so returned scores
-    are true cosines; only the candidate choice is approximate.
-
-    ``adc_vec`` (r7) switches the candidate stage to the DETERMINISTIC
-    exact-quantized path: corpus and queries carry a ``quantize_vec``
-    integer micro-unit column of that name, ``codebooks`` are INTEGER
-    codebooks (:func:`pq_train_exact`), and the ADC score becomes
-    ``dot / sqrt(xnorm2·qnorm2)`` where dot and both norms are EXACT
-    integers (every intermediate < 2^53, so the float64 matmuls are
-    exact regardless of summation order) — the final score is three
-    IEEE-754 ops (multiply, sqrt, divide) on identical operands, hence
-    bit-identical in any engine. The per-partition candidate cut then
-    uses the same total order as the global cut — (score desc, id asc)
-    — so the candidate set is a partitioning-independent pure function
-    of the data and a SQL oracle can replay the ENTIRE pipeline,
-    training included. The default float path keeps argpartition (ties
-    at the partition boundary may vary run to run; candidates only).
+    32·dim. The ADC score is ``dot / sqrt(xnorm2·qnorm2)`` where dot and
+    both norms are EXACT integers (every intermediate < 2^53, so the
+    float64 matmuls are exact regardless of summation order) — the
+    final score is three IEEE-754 ops (multiply, sqrt, divide) on
+    identical operands, hence bit-identical in any engine. The
+    per-partition candidate cut uses the same total order as the global
+    cut — (score desc, id asc) — so the candidate set is a
+    partitioning-independent pure function of the data and a SQL oracle
+    can replay the ENTIRE pipeline, training included. The top
+    ``k·rerank`` ADC candidates per query are re-scored EXACTLY against
+    the raw ``corpus_vec``/``query_vec`` floats (one id-join), so
+    returned scores are true cosines; only the candidate choice is
+    approximate.
 
     At 100 TB: the code table is ~dim·4/m× smaller than the corpus,
     queries broadcast, and the single wide scan is memory-bandwidth
-    bound. Recall tunes with m/ksub/rerank.
+    bound. Recall tunes with m/ksub (at training) and rerank.
     """
-    exact = adc_vec is not None
-    if codebooks is None:
-        if exact:
-            codebooks = pq_train_exact(
-                corpus, m=m, ksub=ksub, qvec_col=adc_vec, id_col=corpus_id
-            )
-        else:
-            codebooks = pq_train(
-                corpus, m=m, ksub=ksub, vec_col=corpus_vec, id_col=corpus_id
-            )
     C = [np.asarray(b, dtype=np.float64) for b in codebooks]
     m = len(C)
     sub = C[0].shape[1]
-    q_adc_col = adc_vec if exact else query_vec
-    qrows = queries.select(query_id, q_adc_col).collect()
+    qrows = queries.select(query_id, adc_vec).collect()
     if not qrows:
         raise ValueError("knn_pq: empty queries (queries must be the small side)")
     qids = [r[0] for r in qrows]
     Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qnorm2 = (Q * Q).sum(axis=1)  # exact ints in float64 when `exact`
+    qnorm2 = (Q * Q).sum(axis=1)  # exact ints in float64
     # LUT[q, s, c] = dot(query_sub, codeword); corpus-side approx norm from
     # codeword norms (exact norm of the RECONSTRUCTION)
     lut = np.stack(
@@ -1037,10 +891,7 @@ def knn_pq(
     )
     cw_norm2 = [np.asarray([(w * w).sum() for w in C[s]]) for s in range(m)]
 
-    codes = pq_encode(
-        corpus, codebooks,
-        vec_col=(adc_vec if exact else corpus_vec), id_col=corpus_id,
-    )
+    codes = pq_encode(corpus, codebooks, vec_col=adc_vec, id_col=corpus_id)
     n_q = len(qids)
     out_schema = f"{corpus_id} long, _qi int, _adc double"
 
@@ -1053,27 +904,19 @@ def knn_pq(
             for s in range(m):
                 approx += lut[:, s, :][:, Xc[:, s]].T  # b × n_q
                 xnorm2 += cw_norm2[s][Xc[:, s]]
-            if exact:
-                # dot/norms are exact integers; denominator is one IEEE
-                # multiply + sqrt on exact operands (engine-portable).
-                # Zero norms (zero reconstruction / zero query) score 0.
-                denom = np.sqrt(xnorm2[:, None] * qnorm2[None, :])
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    sim = np.where(denom > 0, approx / denom, 0.0)
-            else:
-                sim = approx / (
-                    np.sqrt(xnorm2)[:, None] * np.sqrt(qnorm2)[None, :] + 1e-12
-                )
+            # dot/norms are exact integers; denominator is one IEEE
+            # multiply + sqrt on exact operands (engine-portable).
+            # Zero norms (zero reconstruction / zero query) score 0.
+            denom = np.sqrt(xnorm2[:, None] * qnorm2[None, :])
+            with np.errstate(invalid="ignore", divide="ignore"):
+                sim = np.where(denom > 0, approx / denom, 0.0)
             top = min(k * rerank, b)
             ids_np = pdf[corpus_id].to_numpy()
             for qi in range(n_q):
-                if exact:
-                    # SAME total order as the global cut — (score desc,
-                    # id asc) — so local top-T ⊇ its share of global top-T
-                    # and the candidate set is partitioning-independent
-                    idx = np.lexsort((ids_np, -sim[:, qi]))[:top]
-                else:
-                    idx = np.argpartition(-sim[:, qi], top - 1)[:top]
+                # SAME total order as the global cut — (score desc,
+                # id asc) — so local top-T ⊇ its share of global top-T
+                # and the candidate set is partitioning-independent
+                idx = np.lexsort((ids_np, -sim[:, qi]))[:top]
                 yield pd.DataFrame(
                     {
                         corpus_id: ids_np[idx],
@@ -1181,36 +1024,39 @@ def dequantize_int8(
 
 def semdedup(
     df: DataFrame,
+    centroids: list[list[int]],
+    assign_vec: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    n_clusters: int = 16,
     threshold: float = 0.95,
-    iterations: int = 5,
     max_cluster_size: int | None = None,
-    centroids: list[list[float]] | None = None,
-    assign_vec: str | None = None,
 ) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023): k-means
-    the embeddings, then WITHIN each cluster mark every vector whose
-    cosine to any LOWER-id cluster member reaches ``threshold`` as a
-    semantic duplicate. The lower-id rule makes the verdict a pure
-    function of the pair set (deterministic, no greedy-order dependence)
-    and always keeps exactly one representative per duplicate group's
-    id-minimum.
+    """SemDeDup-style semantic deduplication (Abbas et al. 2023): assign
+    each vector to its nearest centroid, then WITHIN each cluster mark
+    every vector whose cosine to any LOWER-id cluster member reaches
+    ``threshold`` as a semantic duplicate. The lower-id rule makes the
+    verdict a pure function of the pair set (deterministic, no
+    greedy-order dependence) and always keeps exactly one representative
+    per duplicate group's id-minimum.
+
+    The model is an input: ``centroids`` come from
+    :func:`kmeans_centroids_exact`, trained once over the
+    ``quantize_vec`` column ``assign_vec``; assignment is an exact
+    integer argmin on that column, and similarity verdicts come from the
+    original ``vec_col`` floats.
 
     Scale shape: clustering makes the quadratic part local — pairwise
     cosine runs per cluster inside ``applyInPandas`` (one shuffle on the
     cluster id, one numpy matmul per cluster), never across the corpus.
-    Work is Σ|cluster|² ≈ n²/k, so pick ``n_clusters`` ∝ corpus size
-    (SemDeDup used 50k clusters for LAION-440M; cluster on a sample via
-    ``kmeans_centroids`` and reuse). Skewed clusters are the residual
-    risk — AQE splits the shuffle, but a mega-cluster's matmul is one
-    task. ``max_cluster_size`` bounds it (r4, same policy shape as
+    Work is Σ|cluster|² ≈ n²/k, so train k ∝ corpus size (SemDeDup used
+    50k clusters for LAION-440M; train on a sample and reuse the
+    centroids). Skewed clusters are the residual risk — AQE splits the
+    shuffle, but a mega-cluster's matmul is one task.
+    ``max_cluster_size`` bounds it (same policy shape as
     ``dedup_minhash_lsh``'s ``max_bucket_size``): clusters over the cap
     are split into ``ceil(n/cap)`` shards keyed by the portable
-    md5-family id hash (``kmv_hash`` mod shards, SQL-replayable — r8)
-    and the pairwise
-    pass runs per shard. Trade-off is explicit and identical to the LSH
+    md5-family id hash (``kmv_hash`` mod shards, SQL-replayable) and the
+    pairwise pass runs per shard. Trade-off is explicit and identical to the LSH
     salt-split — cross-shard pairs inside an oversize cluster are not
     compared, so a boilerplate mega-cluster keeps one representative
     PER SHARD instead of one overall (recall loss only on clusters that
@@ -1227,23 +1073,14 @@ def semdedup(
         raise ValueError(
             f"max_cluster_size must be >= 1, got {max_cluster_size!r}"
         )
-    # r6: precomputed centroids + a separate assignment column let the
-    # gate run the oracle-replayable exact-quantized family (see
-    # kmeans_centroids_exact / the knn_cosine_ivf precedent); similarity
-    # verdicts still come from the ORIGINAL vectors
-    av = assign_vec or vec_col
-    if centroids is None:
-        centroids = kmeans_centroids(
-            df, n_clusters, vec_col=av, id_col=id_col, iterations=iterations
-        )
     assign = nearest_cells_udf(centroids, 1)
     assigned = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
-        F.element_at(assign(F.col(av)), 1).alias("cluster"),
+        F.element_at(assign(F.col(assign_vec)), 1).alias("cluster"),
     )
     if max_cluster_size is not None:
-        # sizes is ≤ n_clusters rows — a broadcast-sized side (AQE picks
+        # sizes is ≤ len(centroids) rows — a broadcast-sized side (AQE picks
         # BroadcastHashJoin); the shard id is a pure function of _id so
         # the split is deterministic on any partitioning
         sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("_n"))
@@ -1493,8 +1330,8 @@ def embedding_covariance(
     scale: int = 9,
 ) -> DataFrame:
     """Exact population covariance over a SELECTED block of embedding
-    dimensions — the value-checkable audit companion to :func:`pca_fit`
-    (which uses float partial Gram matmuls for the full matrix). Each
+    dimensions — a value-checkable audit of the moment arithmetic
+    :func:`pca_fit_exact` runs over the full matrix. Each
     component is floor-quantized to ``input_scale`` decimals and summed
     as an exact DECIMAL(38,0) scaled integer (partition/AQE-proof, the
     ``corr_matrix`` policy); the final ``floor(cov * 10^scale)`` is also
@@ -1505,13 +1342,13 @@ def embedding_covariance(
     evaluation orders — no double-rounding cliff at quantization
     boundaries. ONE wide map-side-combined aggregate —
     ``|dims| + C(|dims|+1, 2)`` sum slots, so keep the block ≤ ~16 dims
-    (the full-matrix path is ``pca_fit``). Output: one row per ordered
+    (the full-matrix path is ``pca_fit_exact``). Output: one row per ordered
     pair ``(i, j, n, cov)`` with ``i <= j``, both taken from ``dims``.
     """
     if not dims:
         raise ValueError("dims must be non-empty")
     if len(dims) > 16:
-        raise ValueError("covariance block capped at 16 dims — use pca_fit")
+        raise ValueError("covariance block capped at 16 dims — use pca_fit_exact")
     p_in = 10**input_scale
     p10 = float(10**scale)
 
@@ -1574,99 +1411,38 @@ class PcaModel:
         self.explained_ratio = explained_ratio
 
 
-def pca_fit(df: DataFrame, vec_col: str, k: int) -> PcaModel:
-    """Principal components of an embedding column at any corpus size:
-    each Arrow batch contributes ``(count, Σx, XᵀX)`` via ONE numpy
-    matmul (mapInPandas — full vectors never shuffle, the partial rows
-    are (d + d²)-sized metadata), partials sum in a tiny aggregate, and
-    the d×d eigendecomposition runs on the driver (d is hundreds at
-    most; the corpus never is). The classic two-phase moment pattern —
-    same shape as the k-means/centroid collects.
-
-    Float partial sums are not bit-stable across repartitioning (unlike
-    :func:`embedding_covariance`'s exact decimal block, which is the
-    auditable twin); eigenvector signs are normalized (max-|x| entry
-    positive) so downstream projections are reproducible given the same
-    partials."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k!r}")
-
-    def _partials(it):
-        for pdf in it:
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            if len(X) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "n": [int(X.shape[0])],
-                    "s": [X.sum(axis=0).tolist()],
-                    "g": [(X.T @ X).ravel().tolist()],
-                }
-            )
-
-    parts = df.select(vec_col).mapInPandas(
-        _partials, schema="n long, s array<double>, g array<double>"
-    )
-    # gram/sum/count are separate tiny aggregates over the same partials
-    # frame — checkpoint it so the corpus matmul pass runs exactly once
-    parts = parts.localCheckpoint(eager=True)
-    sums = (
-        parts.select(F.posexplode("s").alias("i", "v"))
-        .groupBy("i").agg(F.sum("v").alias("s")).orderBy("i").collect()
-    )
-    gram = (
-        parts.select(F.posexplode("g").alias("i", "v"))
-        .groupBy("i").agg(F.sum("v").alias("g")).orderBy("i").collect()
-    )
-    n = parts.agg(F.sum("n")).first()[0]
-    if not n:
-        raise ValueError("pca_fit on an empty frame")
-    s = np.asarray([r["s"] for r in sums])
-    d = s.shape[0]
-    G = np.asarray([r["g"] for r in gram]).reshape(d, d)
-    mean = s / n
-    cov = G / n - np.outer(mean, mean)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1][:k]
-    comps = evecs[:, order].T
-    # deterministic sign: max-|x| entry of each component positive
-    for row in comps:
-        j = int(np.argmax(np.abs(row)))
-        if row[j] < 0:
-            row *= -1.0
-    total = float(evals.sum()) or 1.0
-    ratios = [float(evals[i]) / total for i in order]
-    return PcaModel(mean.tolist(), comps.tolist(), ratios)
-
-
 def pca_fit_exact(
     df: DataFrame, vec_col: str, k: int, input_scale: int = 6
 ) -> PcaModel:
-    """Deterministic twin of :func:`pca_fit`: the model is a PURE
-    FUNCTION of the data — identical across partitionings, AQE
-    re-plans, and retries — which makes downstream projections
+    """Principal components of an embedding column at any corpus size,
+    as a PURE FUNCTION of the data — identical across partitionings,
+    AQE re-plans, and retries — which makes downstream projections
     value-oracle-checkable (the ``pca_project_embeddings`` gate).
 
     How: each Arrow batch floor-quantizes its vectors to
-    ``input_scale`` decimals (int64) and contributes EXACT integer
-    partials ``(count, Σq, qᵀq)`` via one numpy integer matmul —
-    integer addition is associative, so partial order cannot matter,
-    unlike :func:`pca_fit`'s float Gram. Partials total as
-    DECIMAL(38,0) (overflow-proof at any corpus size), and the d×d
-    eigendecomposition runs on the driver over the exact moments with
-    :func:`pca_fit`'s sign pinning (max-|x| entry positive). Same
-    shuffle shape as ``pca_fit``: (d + d²)-sized partial rows, full
-    vectors never move.
+    ``input_scale`` decimals (int64) and, per chunk of at most 1024
+    rows, contributes EXACT integer partials ``(count, Σq, qᵀq)`` via
+    one numpy integer matmul — integer addition is associative, so
+    partial order cannot matter. Partials total as DECIMAL(38,0)
+    (overflow-proof at any corpus size), and the d×d eigendecomposition
+    runs on the driver over the exact moments (d is hundreds at most;
+    the corpus never is), with deterministic signs (each component's
+    max-|x| entry positive). Full vectors never shuffle: partial rows
+    are (d + d²)-sized metadata.
 
-    Input contract: components should be ~unit-scale (|x| ≤ ~30 at the
-    default scale); batches are sub-chunked to 1024 rows so the int64
-    Gram accumulation cannot overflow within a partial.
+    Input contract (enforced): a chunk's int64 Gram entry sums at most
+    1024 products, so it cannot wrap while 1024·max|q|² < 2^63, i.e.
+    max|q| < 2^26.5 ≈ 9.49e7 micro-units — |x| < ~94.9 at the default
+    ``input_scale=6``. Each chunk carries its max|q|, the count
+    aggregate reads the global max, and a corpus at or over the bound
+    raises ``ValueError``. The bound uses the 1024-row chunk cap, not a
+    chunk's actual row count, so the refusal does not depend on the
+    partitioning either.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k!r}")
     p_in = 10**input_scale
+    chunk_rows = 1024
 
     def _partials(it):
         for pdf in it:
@@ -1675,12 +1451,16 @@ def pca_fit_exact(
             )
             if len(X) == 0:
                 continue
-            Q = np.floor(float(p_in) * X).astype(np.int64)
-            for lo in range(0, Q.shape[0], 1024):
-                C = Q[lo : lo + 1024]
+            Qf = np.floor(float(p_in) * X)
+            Q = Qf.astype(np.int64)
+            for lo in range(0, Q.shape[0], chunk_rows):
+                C = Q[lo : lo + chunk_rows]
                 yield pd.DataFrame(
                     {
                         "n": [int(C.shape[0])],
+                        # max|q| from the float floor: exact, and immune
+                        # to the int64 cast of out-of-range values
+                        "mx": [float(np.abs(Qf[lo : lo + chunk_rows]).max())],
                         # int64 sums stringify losslessly into decimals
                         "s": [[str(int(x)) for x in C.sum(axis=0)]],
                         "g": [[str(int(x)) for x in (C.T @ C).ravel()]],
@@ -1688,8 +1468,11 @@ def pca_fit_exact(
                 )
 
     parts = df.select(vec_col).mapInPandas(
-        _partials, schema="n long, s array<string>, g array<string>"
+        _partials,
+        schema="n long, mx double, s array<string>, g array<string>",
     )
+    # gram/sum/count are separate tiny aggregates over the same partials
+    # frame — checkpoint it so the corpus matmul pass runs exactly once
     parts = parts.localCheckpoint(eager=True)
     dec = "decimal(38,0)"
     sums = (
@@ -1702,9 +1485,16 @@ def pca_fit_exact(
         .groupBy("i").agg(F.sum(F.col("v").cast(dec)).alias("g"))
         .orderBy("i").collect()
     )
-    n = parts.agg(F.sum("n")).first()[0]
+    n, mx = parts.agg(F.sum("n"), F.max("mx")).first()
     if not n:
         raise ValueError("pca_fit_exact on an empty frame")
+    max_q = int(mx)
+    if chunk_rows * max_q * max_q >= 2**63:
+        raise ValueError(
+            f"quantized magnitudes up to {max_q} exceed the int64 Gram "
+            f"contract ({chunk_rows}·max|q|² must stay under 2^63, or a "
+            f"chunk's Gram partial wraps); lower input_scale"
+        )
     s = np.asarray([int(r["s"]) for r in sums], dtype=np.float64)
     d = s.shape[0]
     G = np.asarray([int(r["g"]) for r in gram], dtype=np.float64).reshape(d, d)
@@ -1713,9 +1503,10 @@ def pca_fit_exact(
     # plausible component structure
     mean = s / (n * p_in)
     cov = G / (n * p_in * p_in) - np.outer(mean, mean)
-    evals, evecs = np.linalg.eigh(cov)
+    evals, evecs = np.linalg.eigh(cov)  # ascending
     order = np.argsort(evals)[::-1][:k]
     comps = evecs[:, order].T
+    # deterministic sign: max-|x| entry of each component positive
     for row in comps:
         j = int(np.argmax(np.abs(row)))
         if row[j] < 0:

@@ -3075,10 +3075,7 @@ def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, 16, "_q6", "vec_id", iterations=3
     )
     return sim_ops.knn_ivf(
-        corpus=emb, queries=queries, k=10,
-        n_centroids=16, n_probe=4, query_id="query_id",
-        centroids=[[float(c) for c in row] for row in centroids],
-        assign_corpus_vec="_q6", assign_query_vec="_q6",
+        emb, queries, centroids, "_q6", k=10, n_probe=4, query_id="query_id",
     )
 
 
@@ -5353,10 +5350,7 @@ def knn_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = sim_ops.pq_train_exact(
         emb, m=4, ksub=16, qvec_col="_q6", iterations=3
     )
-    return sim_ops.knn_pq(
-        emb, queries, k=10, m=4, ksub=16, rerank=8,
-        codebooks=books, adc_vec="_q6",
-    )
+    return sim_ops.knn_pq(emb, queries, books, "_q6", k=10, rerank=8)
 
 
 @qdef(
@@ -7052,10 +7046,7 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap = 4096
     centroids = kmeans_centroids_exact(emb, 8, "_q6", "vec_id", iterations=3)
     return semdedup(
-        emb, "embedding", "vec_id", n_clusters=8, threshold=0.9,
-        max_cluster_size=cap,
-        centroids=[[float(c) for c in row] for row in centroids],
-        assign_vec="_q6",
+        emb, centroids, "_q6", threshold=0.9, max_cluster_size=cap
     )
 
 
@@ -10937,9 +10928,8 @@ def embedding_covariance_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.py::embedding_covariance): floor-quantized scaled-integer
     moments summed as DECIMAL(38,0) — partition/AQE-proof, the
     corr_matrix numeric policy — in ONE wide map-side-combined
-    aggregate. The value-checkable audit twin of pca_fit's float
-    partial-Gram path: the block proves the moment arithmetic the
-    full-matrix fit relies on."""
+    aggregate. The block proves the moment arithmetic the full-matrix
+    pca_fit_exact relies on."""
     from etl_tools_rs_spark.operators.similarity import embedding_covariance
 
     t = load_tables(spark, sf_dir, ("embeddings",))
@@ -11114,9 +11104,8 @@ def pca_project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the sf0.01 corpus is embedded in the oracle as literals and
     DuckDB replays the k folds; projections rounded to 6dp on both
     engines (raw doubles differ ~1e-17 — DuckDB fuses multiply-adds).
-    The float-Gram `pca_fit` stays the cheap path when auditability
-    isn't needed (unit-tested in tests/test_pca.py). The embedding
-    pre-step before ANN/semdedup when 64 dims still cost too much."""
+    The embedding pre-step before ANN/semdedup when 64 dims still cost
+    too much."""
     from etl_tools_rs_spark.operators.similarity import (
         pca_fit_exact,
         pca_project,

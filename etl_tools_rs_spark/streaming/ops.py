@@ -415,8 +415,8 @@ def _md5_band_udf(num_hashes: int, bands: int):
     the Python eval node MATERIALIZES its output, so the 16-hash
     signature is computed exactly once per row — the pure-expression HOF
     form re-evaluates it per band reference after projection collapse.
-    Zero-shingle docs return [] (dropped by the downstream explode, the
-    same contract as minhash_table's explode)."""
+    Zero-shingle docs return [] (dropped downstream, the same contract
+    as minhash_table's explode)."""
     import hashlib
 
     rpb = num_hashes // bands
@@ -463,8 +463,9 @@ def near_dup_stream(
     intra-delta pairs are the batch op's job,
     lsh_index.py::incremental_near_dup).
 
-    Completely STATELESS: the stream side shingles, minhashes and bands
-    each document inline (pure column expressions), explodes its bands,
+    Completely STATELESS: the stream side shingles each document, then
+    minhashes and bands it in one Arrow UDF pass (evaluated once per
+    row), explodes its bands,
     equi-joins the static denormalized index on (band, bucket), keeps
     each candidate pair exactly once WITHOUT a distinct — a pair is kept
     only on its lexicographically-first shared band
@@ -487,12 +488,18 @@ def near_dup_stream(
             "new_bands",
             _md5_band_udf(num_hashes, bands)(F.col("new_shingles")),
         )
+        # explode_outer + a null filter on the element, not explode: for
+        # explode, Spark infers a size(new_bands) > 0 filter and pushes it
+        # below the projection, which evaluates _bands a second time per
+        # row. Zero-shingle docs ([] bands) yield one null element here
+        # and are dropped by the filter, as explode drops them.
         .select(
             "new_id",
-            F.explode("new_bands").alias("_bb"),
+            F.explode_outer("new_bands").alias("_bb"),
             "new_bands",
             "new_shingles",
         )
+        .filter(F.col("_bb").isNotNull())
         .select(
             "new_id",
             F.col("_bb.band").alias("band"),
@@ -509,8 +516,13 @@ def near_dup_stream(
     )
     jacc = shingle_jaccard(F.col("new_shingles"), F.col("old_shingles"))
     return (
+        # null-safe: the banded row shares this (band, bucket) with the
+        # index row, so first_shared is never null and <=> keeps exactly
+        # the == rows; a null-intolerant == would let Spark infer an
+        # isnotnull(new_bands) filter and push it below the projection,
+        # evaluating _bands a second time per row
         joined.filter(
-            F.struct(F.col("band"), F.col("bucket")) == first_shared
+            F.struct(F.col("band"), F.col("bucket")).eqNullSafe(first_shared)
         )
         .filter(jacc >= F.lit(threshold))  # raw ratio gates (oracle parity)
         .select(

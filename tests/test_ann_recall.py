@@ -1,11 +1,13 @@
 """ANN recall gates (r4, VERDICT r3 task #7): every approximate KNN path
 is measured against knn_brute ON THE GATE EMBEDDINGS (sf0.01, 500×64f,
 the corpus the driver's correctness gate uses) AT THE EXACT REGISTRY
-CONFIGS — the rows-only gate entries prove the plans run; these pins
+CONFIGS — the value oracles prove the pipelines replay; these pins
 prove the answers are close. Measured values (also in COVERAGE.md):
-LSH 0.82, IVF 0.86, PQ 0.88 (r7: exact-quantized training + rerank=8,
-up from 0.70) — pinned at ≥ 0.7 / PQ ≥ 0.8 with the registry configs
-(all deterministic: seeded hyperplanes / id-seeded k-means, no rand())."""
+LSH 0.82, IVF 0.86, PQ 0.88 — pinned at ≥ 0.7 / PQ ≥ 0.8 with the
+registry configs. All deterministic: seeded hyperplanes, and the IVF
+centroids and PQ codebooks come from the engine's exact-quantized
+trainers (kmeans_centroids_exact, pq_train_exact — id-seeded init,
+exact integer rounds, no rand()), which the classes below pin."""
 
 from __future__ import annotations
 
@@ -321,17 +323,27 @@ class TestKmeansExact:
 
     def test_tracks_float_kmeans(self, spark):
         """Quantization at 1e-6 must not change the clustering story:
-        on well-separated clusters the exact and float fits agree on
-        every assignment."""
+        on well-separated clusters the exact fit and a float Lloyd's
+        reference (numpy, same k-smallest-id init, same round count)
+        agree on every assignment."""
         import numpy as np
         from pyspark.sql import functions as F
 
         from etl_tools_rs_spark.operators.similarity import (
-            kmeans_centroids,
             kmeans_centroids_exact,
             nearest_cells_udf,
             quantize_vec,
         )
+
+        def float_lloyd(X, k, iterations):
+            C = X[:k].copy()
+            for _ in range(iterations):
+                a = ((X[:, None, :] - C[None]) ** 2).sum(axis=2).argmin(axis=1)
+                # empty cells keep their previous centroid
+                for c in range(k):
+                    if (a == c).any():
+                        C[c] = X[a == c].mean(axis=0)
+            return C
 
         rng = np.random.RandomState(5)
         centers = rng.randn(3, 8) * 6
@@ -341,9 +353,10 @@ class TestKmeansExact:
             rows, "vec_id long, embedding array<float>"
         ).withColumn("_q6", quantize_vec(F.col("embedding")))
         ce = kmeans_centroids_exact(df, 3, "_q6", "vec_id", iterations=5)
-        cf = kmeans_centroids(df, 3, vec_col="embedding", id_col="vec_id",
-                              iterations=5)
-        a_e = nearest_cells_udf([[float(c) for c in r] for r in ce], 1)
+        # float32 round-trip: the reference sees exactly what Spark sees
+        X32 = X.astype(np.float32).astype(np.float64)
+        cf = float_lloyd(X32, 3, iterations=5)
+        a_e = nearest_cells_udf(ce, 1)
         a_f = nearest_cells_udf(cf, 1)
         got = df.select(
             F.element_at(a_e(F.col("_q6")), 1).alias("e"),
@@ -398,8 +411,8 @@ class TestKmeansExact:
 
 
 class TestPqExact:
-    """r7 exact-quantized PQ (similarity.py::pq_train_exact + knn_pq
-    adc_vec mode): the determinism the knn_cosine_pq value oracle
+    """r7 exact-quantized PQ (similarity.py::pq_train_exact + knn_pq):
+    the determinism the knn_cosine_pq value oracle
     stands on — integer codebooks, integer ADC inputs, and a candidate
     cut that is a pure function of the data, not the partitioning."""
 
@@ -429,12 +442,11 @@ class TestPqExact:
         books = pq_train_exact(emb, m=4, ksub=8, qvec_col="_q6", iterations=2)
         key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.cosine_sim)  # noqa: E731
         base = sorted(map(key, knn_pq(
-            emb, q, k=5, m=4, ksub=8, rerank=4, codebooks=books, adc_vec="_q6"
+            emb, q, books, "_q6", k=5, rerank=4
         ).collect()))
         for reshaped in (emb.repartition(17), emb.coalesce(1)):
             got = sorted(map(key, knn_pq(
-                reshaped, q, k=5, m=4, ksub=8, rerank=4,
-                codebooks=books, adc_vec="_q6",
+                reshaped, q, books, "_q6", k=5, rerank=4
             ).collect()))
             assert got == base
 
@@ -517,7 +529,7 @@ class TestPqTrainExactFused:
         from etl_tools_rs_spark.operators.similarity import pq_train_exact
 
         emb = self._emb(spark, n=3)
-        with _pytest.raises(ValueError, match=">= k rows"):
+        with _pytest.raises(ValueError, match="pq_train_exact needs >= ksub rows"):
             pq_train_exact(emb, m=3, ksub=5, qvec_col="_q6", iterations=1)
         with _pytest.raises(ValueError, match="not divisible"):
             pq_train_exact(emb, m=5, ksub=2, qvec_col="_q6", iterations=1)

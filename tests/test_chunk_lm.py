@@ -134,9 +134,12 @@ def test_knn_pq_recall_against_brute(spark):
     queries = spark.createDataFrame(
         [(100, a), (101, b)], "query_id long, embedding array<double>"
     )
-    out = similarity.knn_pq(
-        corpus, queries, k=5, m=4, ksub=4, rerank=4
-    ).collect()
+    q6 = similarity.quantize_vec(F.col("embedding"))
+    corpus, queries = corpus.withColumn("_q6", q6), queries.withColumn("_q6", q6)
+    books = similarity.pq_train_exact(
+        corpus, m=4, ksub=4, qvec_col="_q6", iterations=5
+    )
+    out = similarity.knn_pq(corpus, queries, books, "_q6", k=5, rerank=4).collect()
     brute = similarity.knn_brute(corpus, queries, k=5).collect()
     got = {(r.query_id, r.rank): r.neighbor_id for r in out}
     want = {(r.query_id, r.rank): r.neighbor_id for r in brute}

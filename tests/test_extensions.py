@@ -353,13 +353,18 @@ def test_knn_ivf_high_recall(spark):
     rng = np.random.RandomState(11)
     vecs = rng.randn(60, 6).astype("float64")
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    emb = spark.createDataFrame(
+        rows, "vec_id int, embedding array<double>"
+    ).withColumn("_q6", similarity.quantize_vec(F.col("embedding")))
     queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+        F.col("vec_id").alias("query_id"), "embedding", "_q6"
     )
     brute = similarity.knn_brute(emb, queries, k=5, query_id="query_id")
+    centroids = similarity.kmeans_centroids_exact(
+        emb, 4, "_q6", "vec_id", iterations=5
+    )
     ivf = similarity.knn_ivf(
-        emb, queries, k=5, n_centroids=4, n_probe=3, query_id="query_id"
+        emb, queries, centroids, "_q6", k=5, n_probe=3, query_id="query_id"
     )
     b = {(r.query_id, r.neighbor_id) for r in brute.collect()}
     a = {(r.query_id, r.neighbor_id) for r in ivf.collect()}
@@ -367,15 +372,6 @@ def test_knn_ivf_high_recall(spark):
     assert len(a & b) / len(b) >= 0.6
     # and every query still returns k ranked rows
     assert ivf.groupBy("query_id").count().filter("count <> 5").count() == 0
-
-
-def test_kmeans_deterministic(spark):
-    rows = [(i, [float(i % 3), float(i % 5)]) for i in range(30)]
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    c1 = similarity.kmeans_centroids(emb, k=3, iterations=3)
-    c2 = similarity.kmeans_centroids(emb, k=3, iterations=3)
-    assert c1 == c2
-    assert len(c1) == 3 and len(c1[0]) == 2
 
 
 def test_salted_join_matches_plain(spark):

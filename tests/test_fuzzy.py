@@ -365,14 +365,28 @@ class TestComputeOnceCheckpoints:
             assert fast == run(False, **kw) and len(fast) > 0, kw
 
 
+def _exact_clusters(df, k, iterations=5):
+    """``df`` with the ``_q6`` micro-unit column, and the exact k-means
+    centroids trained on it — the model semdedup takes."""
+    from etl_tools_rs_spark.operators.similarity import (
+        kmeans_centroids_exact,
+        quantize_vec,
+    )
+
+    q = df.withColumn("_q6", quantize_vec(F.col("embedding")))
+    return q, kmeans_centroids_exact(q, k, "_q6", "vec_id", iterations)
+
+
 class TestSemdedup:
-    def _run(self, spark, rows, **kw):
+    def _run(self, spark, rows, n_clusters, **kw):
         from etl_tools_rs_spark.operators.similarity import semdedup
 
-        df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+        df, centroids = _exact_clusters(
+            spark.createDataFrame(rows, ["vec_id", "embedding"]), n_clusters
+        )
         return {
             r.vec_id: r
-            for r in semdedup(df, "embedding", "vec_id", **kw).collect()
+            for r in semdedup(df, centroids, "_q6", **kw).collect()
         }
 
     def test_near_identical_pair_marks_higher_id(self, spark):
@@ -436,14 +450,14 @@ class TestSemdedup:
 
         df = spark.createDataFrame([(1, [1.0])], ["vec_id", "embedding"])
         with pytest.raises(ValueError):
-            semdedup(df, threshold=0.0)
+            semdedup(df, [[0]], "embedding", threshold=0.0)
 
     def test_max_cluster_size_validation(self, spark):
         from etl_tools_rs_spark.operators.similarity import semdedup
 
         df = spark.createDataFrame([(1, [1.0])], ["vec_id", "embedding"])
         with pytest.raises(ValueError):
-            semdedup(df, max_cluster_size=0)
+            semdedup(df, [[0]], "embedding", max_cluster_size=0)
 
     def test_max_cluster_size_bounds_tasks_on_mega_cluster(self, spark):
         """VERDICT r3 task #2: 10k near-identical embeddings collapse into
@@ -465,9 +479,9 @@ class TestSemdedup:
                 F.lit(0.0),
             ).alias("embedding"),
         )
+        base, centroids = _exact_clusters(base, 1, iterations=1)
         out = semdedup(
-            base, "embedding", "vec_id", n_clusters=1, threshold=0.99,
-            iterations=1, max_cluster_size=cap,
+            base, centroids, "_q6", threshold=0.99, max_cluster_size=cap
         ).collect()
         assert len(out) == n
         n_shards = -(-n // cap)  # 20
@@ -557,10 +571,7 @@ class TestSemdedup:
             emb, 2, "_q6", "vec_id", iterations=2
         )
         out = semdedup(
-            emb, "embedding", "vec_id", n_clusters=2, threshold=0.9,
-            max_cluster_size=cap,
-            centroids=[[float(c) for c in row] for row in centroids],
-            assign_vec="_q6",
+            emb, centroids, "_q6", threshold=0.9, max_cluster_size=cap
         ).collect()
         # the split must actually engage
         from collections import Counter

@@ -1,4 +1,4 @@
-"""PCA over embedding columns (operators/similarity.py::pca_fit/
+"""PCA over embedding columns (operators/similarity.py::pca_fit_exact/
 pca_project/embedding_covariance)."""
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from etl_tools_rs_spark.operators.similarity import (
     PcaModel,
     embedding_covariance,
-    pca_fit,
+    pca_fit_exact,
     pca_project,
 )
 
@@ -37,10 +37,32 @@ def _df(spark, X):
     )
 
 
+def _assert_matches_quantized_numpy(df, X, k):
+    """pca_fit_exact on ``df`` equals a straight numpy PCA of ``X`` after
+    the same 1e-6 floor quantization: mean to 1e-9, components to 1e-4
+    elementwise, and each component's |dot| with the numpy eigenvector
+    is 1 within 1e-6."""
+    model = pca_fit_exact(df, "embedding", k=k)
+    Q = np.floor(1e6 * X) / 1e6
+    mean = Q.mean(axis=0)
+    cov = (Q - mean).T @ (Q - mean) / len(Q)
+    evals, evecs = np.linalg.eigh(cov)
+    ref = evecs[:, np.argsort(evals)[::-1][:k]].T
+    for row in ref:
+        j = int(np.argmax(np.abs(row)))
+        if row[j] < 0:
+            row *= -1.0
+    assert np.allclose(np.asarray(model.mean), mean, atol=1e-9)
+    assert np.allclose(np.asarray(model.components), ref, atol=1e-4)
+    for ki in range(k):
+        got = np.asarray(model.components[ki])
+        assert abs(abs(np.dot(ref[ki], got)) - 1.0) < 1e-6, ki
+
+
 class TestPcaFit:
     def test_recovers_dominant_axis_and_ordering(self, spark):
         X = _aniso()
-        model = pca_fit(_df(spark, X), "embedding", k=3)
+        model = pca_fit_exact(_df(spark, X), "embedding", k=3)
         c0 = np.asarray(model.components[0])
         want = np.array([3.0, 1.0, 0.0, 0.0]) / math.sqrt(10.0)
         assert abs(abs(np.dot(c0, want)) - 1.0) < 1e-3
@@ -55,19 +77,11 @@ class TestPcaFit:
         X = _aniso(n=200, seed=11)
         # float32 round-trip: numpy reference sees exactly what Spark sees
         X = X.astype(np.float32).astype(np.float64)
-        model = pca_fit(_df(spark, X), "embedding", k=4)
-        cov = np.cov(X, rowvar=False, bias=True)
-        evals, evecs = np.linalg.eigh(cov)
-        order = np.argsort(evals)[::-1]
-        for ki in range(4):
-            ref = evecs[:, order[ki]]
-            got = np.asarray(model.components[ki])
-            assert abs(abs(np.dot(ref, got)) - 1.0) < 1e-6, ki
-        assert np.allclose(model.mean, X.mean(axis=0), atol=1e-9)
+        _assert_matches_quantized_numpy(_df(spark, X), X, k=4)
 
     def test_sign_determinism(self, spark):
         X = _aniso(n=150, seed=3)
-        model = pca_fit(_df(spark, X), "embedding", k=4)
+        model = pca_fit_exact(_df(spark, X), "embedding", k=4)
         for comp in model.components:
             j = int(np.argmax(np.abs(comp)))
             assert comp[j] > 0
@@ -75,16 +89,16 @@ class TestPcaFit:
     def test_validation(self, spark):
         df = _df(spark, _aniso(n=10))
         with pytest.raises(ValueError):
-            pca_fit(df, "embedding", k=0)
+            pca_fit_exact(df, "embedding", k=0)
         with pytest.raises(ValueError):
-            pca_fit(df.limit(0), "embedding", k=2)
+            pca_fit_exact(df.limit(0), "embedding", k=2)
 
 
 class TestPcaProject:
     def test_jvm_projection_equals_numpy(self, spark):
         X = _aniso(n=100, seed=5).astype(np.float32).astype(np.float64)
         df = _df(spark, X)
-        model = pca_fit(df, "embedding", k=2)
+        model = pca_fit_exact(df, "embedding", k=2)
         got = {
             r["id"]: r["pca"]
             for r in pca_project(df, "embedding", model).collect()
@@ -162,7 +176,7 @@ class TestPcaKnnRecall:
             }
 
         full = pairs(df, "embedding")
-        model = pca_fit(df, "embedding", k=k)
+        model = pca_fit_exact(df, "embedding", k=k)
         proj = pca_project(df, "embedding", model).select("id", "pca")
         red = pairs(proj, "pca")
         return len(red & full) / len(full), model
@@ -220,18 +234,30 @@ class TestPcaFitExact:
         """Components agree with a straight numpy PCA on the same
         quantized corpus to ~quantization precision (1e-6 inputs →
         sub-1e-4 component agreement on a well-separated spectrum)."""
+        df, X = self._corpus(spark)
+        _assert_matches_quantized_numpy(df, X, k=3)
+
+    def test_refuses_int64_gram_overflow(self, spark):
+        """A chunk's int64 Gram partial wraps once its Σq² reaches 2^63;
+        the fit must refuse a corpus where 1024·max|q|² does (|x| ≈ 94.9
+        at input_scale=6) rather than return a wrong model, and still
+        fit one just inside the bound. Without the check, this corpus
+        on one partition (1024-row chunks) gave explained ratios
+        ≈ [-0.0002, -0.0002, 1.0005] and a wrong leading component, while
+        on four partitions (~500-row chunks) it fit correctly: the
+        refusal is partition-independent, the wrap was not."""
         from etl_tools_rs_spark.operators.similarity import pca_fit_exact
 
-        df, X = self._corpus(spark)
-        model = pca_fit_exact(df, "embedding", k=3)
-        Q = np.floor(1e6 * X) / 1e6
-        mean = Q.mean(axis=0)
-        cov = (Q - mean).T @ (Q - mean) / len(Q)
-        evals, evecs = np.linalg.eigh(cov)
-        ref = evecs[:, np.argsort(evals)[::-1][:3]].T
-        for row in ref:
-            j = int(np.argmax(np.abs(row)))
-            if row[j] < 0:
-                row *= -1.0
-        assert np.allclose(np.asarray(model.mean), mean, atol=2e-6)
-        assert np.allclose(np.asarray(model.components), ref, atol=1e-4)
+        rng = np.random.RandomState(3)
+        X = rng.randn(2000, 3) * np.array([120.0, 1.0, 1.0])
+        df = _df(spark, X)
+        for frame in (df, df.coalesce(1)):
+            with pytest.raises(ValueError, match="int64 Gram contract"):
+                pca_fit_exact(frame, "embedding", k=3)
+
+        X = np.clip(X, -94.0, 94.0)
+        model = pca_fit_exact(_df(spark, X), "embedding", k=3)
+        Q = np.floor(1e6 * X.astype(np.float32).astype(np.float64)) / 1e6
+        evals = np.linalg.eigvalsh(np.cov(Q, rowvar=False, bias=True))[::-1]
+        assert np.allclose(model.explained_ratio, evals / evals.sum(), atol=1e-9)
+        assert abs(model.components[0][0]) > 0.999

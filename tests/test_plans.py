@@ -627,3 +627,22 @@ def test_knn_lsh_plane_dots_folded_once(spark):
         spark.conf.set(key, old)
     assert "more field" not in plan
     assert plan.count("aggregate(") == 2 * 6 * 4 + 3, plan.count("aggregate(")
+
+
+def test_near_dup_stream_evaluates_band_udf_once(spark):
+    """near_dup_stream's Python band UDF (16 md5 hashes per shingle) runs
+    once per incoming row: the physical plan over a parquet input has
+    exactly one ArrowEvalPython node. With a plain explode, Spark infers
+    a size/notnull filter on the band array and pushes it below the
+    projection, which evaluates the UDF a second time."""
+    from etl_tools_rs_spark.streaming.ops import (
+        near_dup_stream,
+        near_dup_stream_index,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    idx = near_dup_stream_index(docs.filter("doc_id < 50"))
+    plan = (
+        near_dup_stream(docs, idx)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("ArrowEvalPython") == 1, plan

@@ -520,10 +520,12 @@ def test_near_dup_stream_matches_incremental_new_vs_old(spark, tmp_path):
         {"doc_id": 2, "text": base.replace("pi", "phi")},  # near-dup of 1
         {"doc_id": 3, "text": "totally different words entirely here "
                               "nothing shared with anything else at all"},
+        {"doc_id": 4, "text": "too short"},                 # zero shingles
         # delta side
         {"doc_id": 10, "text": base},                       # dup of 1 (and 2)
         {"doc_id": 11, "text": "unique snowflake content with zero overlap "
                                "whatsoever in any shingle of any kind"},
+        {"doc_id": 12, "text": "too short"},                # zero shingles
     ]
     old = spark.createDataFrame([r for r in rows if r["doc_id"] < 10])
     new = spark.createDataFrame([r for r in rows if r["doc_id"] >= 10])
@@ -533,13 +535,14 @@ def test_near_dup_stream_matches_incremental_new_vs_old(spark, tmp_path):
     pairs, _ = incremental_near_dup(
         narrow, old, new, threshold=0.5, hash_family="md5"
     )
-    old_ids = {1, 2, 3}
+    old_ids = {1, 2, 3, 4}
     want = {
         (r.id_a, r.id_b, r.jaccard)
         for r in pairs.collect()
         if r.id_b in old_ids and r.id_a >= 10
     }
     assert any(a == 10 for a, _, _ in want)  # the dup must be found
+    assert not any(a == 12 for a, _, _ in want)  # zero-shingle docs: no rows
 
     idx = ops.near_dup_stream_index(old)
 
@@ -550,10 +553,11 @@ def test_near_dup_stream_matches_incremental_new_vs_old(spark, tmp_path):
     }
     assert got_batch == want
 
-    # filtered file-backed input: Spark pushes the explode's inferred
-    # size/notnull filter on the band UDF down into the scan filter, and
-    # the UDF must still be extracted from it (an ngrams form whose window
-    # lambda read an outer lambda variable failed here)
+    # filtered file-backed input: filters inferred on the band UDF's
+    # output can land next to the scan, and the UDF must still be
+    # extracted from them (an ngrams form whose window lambda read an
+    # outer lambda variable failed here when explode's inferred
+    # size/notnull filter did)
     src = tmp_path / "ndp_parquet"
     spark.createDataFrame(rows).write.parquet(str(src))
     filtered = spark.read.parquet(str(src)).filter("doc_id >= 10")
