@@ -113,41 +113,6 @@ def ngrams(col: str | Column, n: int = 3) -> Column:
     )[0]).otherwise(F.array().cast("array<string>"))
 
 
-def minhash_over(sh: Column, num_hashes: int) -> Column:
-    """MinHash signature over an existing shingle-array column.
-
-    Performance contract: pass a *materialized attribute* (a column that
-    sits below an exchange/cache boundary), not a raw expression — the
-    shingle expression is referenced once per hash seed, and higher-order
-    functions are interpreted (outside codegen CSE), so an inlined
-    expression would be re-evaluated ``num_hashes`` times per row — for
-    ``ngrams``, ``num_hashes`` linear passes over the document's tokens.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.array_min(
-            F.transform(
-                sh,
-                lambda s: F.md5(
-                    F.concat(seed.cast("string"), F.lit(":"), s)
-                ),
-            )
-        ),
-    )
-
-
-def minhash(col: str | Column, num_hashes: int, shingle_n: int = 3) -> Column:
-    """MinHash signature (array of length ``num_hashes``) over token
-    shingles, using md5(seed || ':' || shingle) as the hash family.
-
-    Portable construction: every engine with md5 produces identical
-    signatures, which makes the signature itself oracle-checkable. The
-    per-hash value is the minimum hex digest (string min ≡ numeric min on
-    fixed-width hex).
-    """
-    return minhash_over(ngrams(col, shingle_n), num_hashes)
-
-
 # ---------------------------------------------------------------------------
 # URL helpers (for web-corpus dedup / grouping by host)
 # ---------------------------------------------------------------------------

@@ -103,9 +103,9 @@ def minhash_table(
     """Relational MinHash: one row per doc with columns ``_h0.._h{n-1}``.
 
     ``hash_family``:
-    - ``"md5"`` — md5(seed || ':' || shingle), bit-identical to
-      ``functions.minhash`` and reproducible in any engine with md5: the
-      oracle-checkable form.
+    - ``"md5"`` — md5(seed || ':' || shingle), the minimum hex digest
+      per seed (string min ≡ numeric min on fixed-width hex);
+      reproducible in any engine with md5: the oracle-checkable form.
     - ``"xxhash64"`` — xxhash64(seed, shingle): native JVM hash, ~an order
       of magnitude cheaper per call than md5 and the min-agg compares
       longs instead of 32-char strings. Same minhash guarantees (any
@@ -116,9 +116,9 @@ def minhash_table(
     Computed as explode(shingles) → groupBy(id) with ``num_hashes`` MIN
     aggregates. Every hash runs inside whole-stage codegen, and map-side
     partial aggregation collapses each partition to one row per doc before
-    the single shuffle on ``id_col`` — the higher-order-function form
-    (`functions.minhash_over`) is interpreted per element and ~10x slower
-    per row. Docs with zero shingles are dropped (explode of an empty
+    the single shuffle on ``id_col`` (a higher-order-function form over
+    the shingle array is interpreted per element and ~10x slower per
+    row). Docs with zero shingles are dropped (explode of an empty
     array), matching the LSH contract.
 
     Plan-shape contract (r10, the mhonce-regression lesson): the explode
@@ -191,6 +191,21 @@ def _minhash_signature_agg(
     else:
         raise ValueError(f"unknown hash_family: {hash_family!r}")
     return ex.groupBy(id_col).agg(*aggs)
+
+
+def _band_bucket(b: int, rows_per_band: int, hash_family: str) -> Column:
+    """LSH bucket key of band ``b`` over the signature columns ``_h{i}``
+    — the one band key of every MinHash banding site (batch, cross,
+    index, stream index). xxhash64 hashes the band's longs directly;
+    the md5 family takes md5 of the slice joined with ``'|'``, identical
+    to ``md5(concat_ws('|', slice(minhash_sig, b*rpb+1, rpb)))``."""
+    cols = [
+        F.col(f"_h{i}")
+        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
+    ]
+    if hash_family == "xxhash64":
+        return F.xxhash64(*cols)
+    return F.md5(F.concat_ws("|", *cols))
 
 
 def dedup_minhash_lsh(
@@ -270,18 +285,12 @@ def dedup_minhash_lsh(
     # interpreted ngrams passes (see minhash_table)
     sig = _minhash_from_shingles(toks, "_id", "_sh", num_hashes, hash_family)
 
-    def band_bucket(b: int) -> Column:
-        cols = [F.col(f"_h{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        if hash_family == "xxhash64":
-            # signature slices are longs — hash them directly, no string glue
-            return F.xxhash64(*cols)
-        # md5 family: bucket = md5 of the joined slice, identical to
-        # md5(concat_ws('|', slice(minhash_sig, b*rpb+1, rpb)))
-        return F.md5(F.concat_ws("|", *cols))
-
     bucket_structs = F.array(
         *[
-            F.struct(F.lit(b).alias("band"), band_bucket(b).alias("bucket"))
+            F.struct(
+                F.lit(b).alias("band"),
+                _band_bucket(b, rows_per_band, hash_family).alias("bucket"),
+            )
             for b in range(bands)
         ]
     )
@@ -344,93 +353,18 @@ def dedup_minhash_lsh(
     )
 
 
-def simhash64(text_col: str | Column, shingle_n: int = 2) -> Column:
-    """63-bit SimHash over token shingles using xxhash64 (JVM built-in).
-
-    counts[i] = number of shingles with hash-bit i set (fold over the
-    shingle array); result bit i is set when counts[i]*2 > n_shingles.
-    63 bits (not 64) so the Horner reconstruction stays inside a signed
-    long under ANSI overflow checking. Fully JVM-side.
-    """
-    sh = ngrams(text_col, shingle_n)
-    # hash each shingle ONCE, then fold bit-counts over the hash array —
-    # xxhash64 inside the bit lambda would re-hash per bit (63x the work)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 63),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(62)),
-                lambda i: F.getbit(h, i).cast("long"),
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    n = F.size(sh)
-    bits = F.transform(
-        counts,
-        lambda c: F.when(c * 2 > n, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")),
-    )
-    # Horner fold MSB→LSB: value = Σ bit_i << i without shift-by-column
-    return F.aggregate(
-        F.reverse(bits), F.lit(0).cast("long"), lambda acc, b: acc * 2 + b
-    )
-
-
-def simhash_table(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", shingle_n: int = 2
-) -> DataFrame:
-    """(id, simhash) via the *relational* formulation: explode shingles →
-    xxhash64 per shingle (once) → groupBy(id) with 63 bit-count sums →
-    reassemble the long.
-
-    Same values as ``simhash64`` but whole-stage-codegen throughout (the
-    HOF fold is interpreted and ~2 orders of magnitude slower per row).
-    Map-side partial aggregation collapses each partition to one row per
-    doc before the single shuffle on ``id_col``.
-    """
-    # explode_outer keeps zero-shingle docs (their simhash is 0, matching
-    # the HOF fold over an empty array); the null guard stops xxhash64 from
-    # hashing NULL to its seed constant
-    shingled = df.select(
-        F.col(id_col), F.explode_outer(ngrams(text_col, shingle_n)).alias("_s")
-    )
-    hashed = shingled.select(
-        id_col, F.when(F.col("_s").isNotNull(), F.xxhash64("_s")).alias("_h")
-    )
-    bit_sums = [
-        F.sum(F.getbit("_h", F.lit(i)).cast("long")).alias(f"_b{i}") for i in range(63)
-    ]
-    counted = hashed.groupBy(id_col).agg(F.count("_h").alias("_n"), *bit_sums)
-    value = None
-    for i in range(63):
-        bit = F.when(F.col(f"_b{i}") * 2 > F.col("_n"), F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = bit * F.lit(1 << i).cast("long")
-        value = term if value is None else value + term
-    return counted.select(F.col(id_col), value.alias("simhash"))
-
-
 def dedup_simhash(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 2,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash near-dup groups: docs sharing an identical simhash.
-    One shuffle on the simhash; for hamming-distance ≤ k matching, band the
-    bits into k+1 chunks and bucket-join per chunk (same LSH shape as
-    minhash). ``hash_family="md5"`` uses the oracle-portable 60-bit
-    signature (:func:`simhash_table_md5`; note it drops zero-shingle
-    docs, so no spurious simhash-0 group forms from empty texts)."""
-    if hash_family == "md5":
-        h = simhash_table_md5(df, text_col, id_col, shingle_n)
-    else:
-        h = simhash_table(df, text_col, id_col, shingle_n)
+    """SimHash near-dup groups: docs sharing an identical 60-bit md5
+    simhash (:func:`simhash_table_md5`, the oracle-portable signature;
+    zero-shingle docs are dropped, so no spurious simhash-0 group forms
+    from empty texts). One shuffle on the simhash; for hamming-distance
+    ≤ k matching use :func:`simhash_near_dup`."""
+    h = simhash_table_md5(df, text_col, id_col, shingle_n)
     return (
         h.groupBy("simhash")
         .agg(
@@ -839,14 +773,14 @@ def simhash_table_md5(
     shingle_n: int = 2,
     bits: int = 60,
 ) -> DataFrame:
-    """Oracle-portable SimHash: same relational bit-count plan as
-    ``simhash_table`` but the per-shingle hash is the 60-bit md5 prefix
-    (15 hex chars → bigint) instead of xxhash64 — every op (md5,
-    substring, shift, and) exists identically in any SQL engine, so the
-    SIGNATURES themselves value-check against the DuckDB oracle
-    (``simhash_table`` keeps xxhash64 for production: one fewer string
-    op per shingle). Docs with zero shingles are dropped — define their
-    simhash as 0 upstream if completeness matters."""
+    """The engine's SimHash signature: ``(id, simhash)`` with ``bits``
+    (≤ 60) bits. Explode shingles → per-shingle hash = the 60-bit md5
+    prefix (15 hex chars → bigint) → groupBy(id) with one bit-count sum
+    per bit → bit i set when more than half the shingles set it. Every
+    op (md5, substring, shift, and) exists identically in any SQL
+    engine, so the signatures value-check against the DuckDB oracle.
+    Docs with zero shingles are dropped — define their simhash as 0
+    upstream if completeness matters."""
     shingled = df.select(
         F.col(id_col), F.explode(ngrams(text_col, shingle_n)).alias("_s")
     )
@@ -1518,19 +1452,12 @@ def minhash_cross_pairs(
         sig = minhash_table(
             df, text_col, id_col, num_hashes, shingle_n, hash_family
         ).withColumnRenamed(id_col, "_id")
-
-        def band_bucket(b: int) -> Column:
-            cols = [
-                F.col(f"_h{i}")
-                for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-            ]
-            if hash_family == "xxhash64":
-                return F.xxhash64(*cols)
-            return F.md5(F.concat_ws("|", *cols))
-
         bb = F.array(
             *[
-                F.struct(F.lit(b).alias("band"), band_bucket(b).alias("bucket"))
+                F.struct(
+                    F.lit(b).alias("band"),
+                    _band_bucket(b, rows_per_band, hash_family).alias("bucket"),
+                )
                 for b in range(bands)
             ]
         )

@@ -1,17 +1,18 @@
 """Baseline JPEG decode with the stdlib + numpy only.
 
-The container ships no codec libraries (PIL is import-gated and absent),
-but JPEG is the dominant web image format — a training-data pipeline
-whose "real" image set stops at BMP/PNG leaves most of a crawl opaque.
-This module implements the baseline sequential DCT process from the
-public JPEG specification (ITU-T T.81 / ISO 10918-1): marker parsing,
-canonical Huffman entropy decode, dequantization, the 8×8 inverse DCT
-(one numpy matrix sandwich per block), restart-interval handling, and
-arbitrary chroma subsampling. Only the LUMA (Y) plane is inverse-
-transformed — every consumer here (band profiles, aHash/pHash grids)
-wants grayscale, and grayscale IS the Y channel, so chroma blocks are
-entropy-decoded (the bitstream demands it) but never dequantized or
-IDCT'd: ~3× less math on 4:4:4 color images, ~1.5× on 4:2:0.
+The engine depends on no codec library, but JPEG is the dominant web
+image format — a training-data pipeline whose image set stops at
+BMP/PNG leaves most of a crawl opaque. This module implements the
+baseline sequential DCT process from the public JPEG specification
+(ITU-T T.81 / ISO 10918-1): marker parsing, canonical Huffman entropy
+decode, dequantization, the 8×8 inverse DCT (one numpy matrix sandwich
+per block), restart-interval handling, and arbitrary chroma
+subsampling. Only the LUMA (Y) plane is inverse-transformed — its one
+consumer, ``multimodal._gray_rows`` (band profiles, resize, aHash/pHash
+grids), wants grayscale, and grayscale IS the Y channel, so chroma
+blocks are entropy-decoded (the bitstream demands it) but never
+dequantized or IDCT'd: ~3× less math on 4:4:4 color images, ~1.5× on
+4:2:0.
 
 Out of scope, rejected with ValueError (error-as-record upstream, same
 policy as the PNG/BMP/AVI decoders): progressive (SOF2) and every
@@ -358,39 +359,6 @@ def _jpeg_decode_y(content: bytes) -> tuple[int, int, np.ndarray]:
     else:
         plane = plane[:hgt, :w]
     return w, hgt, np.clip(plane, 0.0, 255.0) / 255.0
-
-
-def decode_jpeg_real(content: bytes, dim: int) -> list[float]:
-    """``dim``-band mean-brightness profile — same output contract as
-    ``decode_png_real``/``decode_bmp_real`` so renditions of one image
-    in different formats yield comparable features."""
-    _, _, plane = _jpeg_decode_y(content)
-    row_means = plane.mean(axis=1)
-    bucket = max(1, len(row_means) // dim)
-    vals = []
-    for b in range(dim):
-        chunk = row_means[b * bucket : (b + 1) * bucket]
-        vals.append(float(chunk.mean()) if len(chunk) else 0.0)
-    return vals
-
-
-def _jpeg_gray_grid(content: bytes, n: int) -> list[list[float]]:
-    """n×n block-mean grayscale grid (for aHash/pHash) — identical cell
-    geometry to ``_png_gray_grid``: grid-driven cells, nearest-neighbor
-    when the image is smaller than the grid, so no zero-filled cells."""
-    _, _, plane = _jpeg_decode_y(content)
-    height, width = plane.shape
-    grid = []
-    for gr in range(n):
-        r0 = gr * height // n
-        r1 = max(r0 + 1, (gr + 1) * height // n)
-        out_row = []
-        for gc in range(n):
-            c0 = gc * width // n
-            c1 = max(c0 + 1, (gc + 1) * width // n)
-            out_row.append(float(plane[r0:r1, c0:c1].mean()))
-        grid.append(out_row)
-    return grid
 
 
 # --------------------------------------------------------------------------

@@ -40,21 +40,15 @@ MinHash/LSH construction as operators/dedup.py — Broder 1997).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_tools_rs_spark.functions import ngrams
-from etl_tools_rs_spark.operators.dedup import minhash_table, shingle_jaccard
-
-
-def _band_bucket(b: int, rows_per_band: int, hash_family: str) -> Column:
-    cols = [
-        F.col(f"_h{i}")
-        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-    ]
-    if hash_family == "xxhash64":
-        return F.xxhash64(*cols)
-    return F.md5(F.concat_ws("|", *cols))
+from etl_tools_rs_spark.operators.dedup import (
+    _band_bucket,
+    minhash_table,
+    shingle_jaccard,
+)
 
 
 def minhash_band_index(

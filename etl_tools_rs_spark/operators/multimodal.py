@@ -1,17 +1,29 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 No reference equivalent (extension surface per BASELINE.json). The Spark
-plumbing here — schemas, binaryFile ingestion, Arrow-batched decode UDFs,
-partition sizing — is real and tested. Decoders are import-gated (same
-pattern as the SFTP/SQS environment stubs): AUDIO decode is REAL (stdlib
-``wave`` PCM parser — RMS envelope features + header metadata); IMAGE
-decode is REAL for uncompressed BMP (stdlib ``struct``) and PNG
-(stdlib ``struct`` + ``zlib`` — gray/palette/truecolor/alpha at depths
-1-16, all five scanline filters, Adam7 interlacing — r4), via PIL for
-everything else when importable; only
-then does the loudly-marked deterministic fake (``_fake_decode``,
-derives features from the payload hash) stand in so lossy-format
-pipeline shapes stay testable in this container.
+plumbing here — schemas, binaryFile ingestion, Arrow-batched decode
+stages, partition sizing — is real and tested, and every decoder is
+stdlib (+ numpy) only, so what runs is the same on every machine.
+
+One reader per modality:
+
+- IMAGE bytes are read in exactly one place, :func:`_gray_rows`. It
+  picks the parser by signature — uncompressed 24/32-bit BMP, PNG
+  (gray/palette/truecolor/alpha at depths 1-16, all five scanline
+  filters, Adam7 interlacing) or baseline JPEG (``operators/jpeg.py``,
+  luma plane) — and raises ``ValueError`` on anything else (GIF, WebP,
+  progressive JPEG, compressed BMP, truncated payloads). Every image
+  operator (band profiles, :func:`image_resize`, aHash, pHash) reads
+  through it and resamples with the one grid :func:`_block_mean_resize`.
+- AUDIO is WAV through the stdlib ``wave`` parser.
+- VIDEO is uncompressed AVI; its frames share the BMP's BGR row walk.
+
+Every per-payload operator runs through one Arrow stage,
+:func:`_map_payloads`: a payload that raises becomes an error record
+(``decode_ok = "error: …"``), never a job failure. The deterministic
+sha256 fake (``_fake_decode``) runs only where no real decoder is asked
+for: :func:`extract_features` without a modality column, or with a
+modality other than audio/image.
 
 Scale notes: binary payloads dominate partition size — size partitions by
 bytes not rows (maxPartitionBytes), keep metadata in separate narrow
@@ -22,7 +34,7 @@ pruning does this for free), and never collect() blobs to the driver.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,43 +85,11 @@ def read_binary_files(spark: SparkSession, path: str, glob: str | None = None) -
 
 def _fake_decode(content: bytes, dim: int) -> list[float]:
     """DETERMINISTIC FAKE decoder: derives a feature vector from the sha256
-    of the payload. Stands in for image/audio decode (libs unavailable
-    here); replace with PIL/librosa in production. Marked loudly on purpose."""
+    of the payload. Runs only where no real decoder is asked for (see the
+    module docstring); marked loudly on purpose."""
     h = hashlib.sha256(content or b"").digest()
     # repeat the 32-byte digest to fill dim floats in [0, 1)
     vals = [(h[i % 32]) / 256.0 for i in range(dim)]
-    return vals
-
-
-# -- real decoders, import-gated (same pattern as SFTP/SQS stubs) -----------
-
-
-def _pil_image():  # pragma: no cover - depends on environment
-    """PIL import gate: returns the Image module or None."""
-    try:
-        from PIL import Image  # type: ignore[import-not-found]
-
-        return Image
-    except ImportError:
-        return None
-
-
-def decode_image_real(content: bytes, dim: int) -> list[float]:
-    """REAL image decode via PIL when importable: decode → grayscale →
-    resize to a √dim×√dim grid → normalized pixel vector. Raises
-    ImportError when PIL is absent (callers fall back to the fake)."""
-    Image = _pil_image()
-    if Image is None:
-        raise ImportError("PIL not available")
-    import io
-    import math
-
-    side = max(1, int(math.isqrt(dim)))
-    img = Image.open(io.BytesIO(content)).convert("L").resize((side, side))
-    px = list(img.getdata())
-    vals = [p / 255.0 for p in px]
-    # pad/trim to exactly dim
-    vals = (vals * ((dim // max(1, len(vals))) + 1))[:dim]
     return vals
 
 
@@ -176,53 +156,6 @@ def wav_metadata(content: bytes) -> dict[str, int]:
         }
 
 
-def decode_bmp_real(content: bytes, dim: int) -> list[float]:
-    """REAL image decode for uncompressed 24/32-bit BMP using ONLY the
-    stdlib (``struct``): parse the BITMAPFILEHEADER/BITMAPINFOHEADER,
-    walk the (bottom-up, 4-byte-padded) pixel rows, and return a
-    ``dim``-bucket mean-brightness profile over horizontal bands,
-    normalized to [0, 1]. Raises on non-BMP / compressed payloads
-    (callers treat that as a decode error-as-record). BMP is the one
-    mainstream raster format fully decodable without external libs —
-    the same de-stubbing move the stdlib ``wave`` parser makes for
-    audio."""
-    import struct
-
-    if len(content) < 54 or content[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    px_off = struct.unpack_from("<I", content, 10)[0]
-    width, height = struct.unpack_from("<ii", content, 18)
-    bpp = struct.unpack_from("<H", content, 28)[0]
-    compression = struct.unpack_from("<I", content, 30)[0]
-    if compression != 0 or bpp not in (24, 32):
-        raise ValueError(f"unsupported BMP (bpp={bpp}, compression={compression})")
-    flipped = height > 0  # positive height ⇒ rows stored bottom-up
-    height = abs(height)
-    if width <= 0 or height <= 0:
-        raise ValueError("degenerate BMP dimensions")
-    step = bpp // 8
-    stride = ((width * step + 3) // 4) * 4
-    # mean brightness per pixel row (b, g, r byte order)
-    row_means = []
-    for r in range(height):
-        src = r if not flipped else height - 1 - r
-        base = px_off + src * stride
-        if base + width * step > len(content):
-            raise ValueError("truncated BMP pixel data")
-        tot = 0
-        for c in range(width):
-            i = base + c * step
-            tot += content[i] + content[i + 1] + content[i + 2]
-        row_means.append(tot / (3.0 * 255.0 * width))
-    # collapse rows into dim horizontal bands
-    bucket = max(1, len(row_means) // dim)
-    vals = []
-    for b in range(dim):
-        chunk = row_means[b * bucket : (b + 1) * bucket]
-        vals.append(sum(chunk) / len(chunk) if chunk else 0.0)
-    return vals
-
-
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
@@ -243,8 +176,8 @@ def _png_gray_rows(content: bytes) -> list[list[float]]:
     / RGBA at 8/16, and Adam7 interlacing for all of those (each pass
     unfiltered as its own sub-image, RFC 2083 §8.2). Raises ValueError
     on invalid depth/type combinations, missing PLTE, out-of-range
-    palette indices, or malformed streams — error-as-record upstream, the same contract
-    as :func:`decode_bmp_real`. CRCs are not verified (decode cost,
+    palette indices, or malformed streams — error-as-record upstream.
+    CRCs are not verified (decode cost,
     parity with common fast decoders); truncated or length-inconsistent
     pixel data still fails loudly."""
     import struct
@@ -407,14 +340,97 @@ def _png_gray_rows(content: bytes) -> list[list[float]]:
     return rows
 
 
-def decode_png_real(content: bytes, dim: int) -> list[float]:
-    """REAL image decode for 8-bit non-interlaced PNG using ONLY the
-    stdlib (:func:`_png_gray_rows`): same ``dim``-band mean-brightness
-    profile as :func:`decode_bmp_real`, so PNG and BMP renditions of the
-    same image produce comparable features. PNG is the most common
-    training-corpus lossless format — with this the honest-real set is
-    WAV + BMP + PNG; only lossy formats (JPEG) still need PIL."""
-    rows = _png_gray_rows(content)
+def _bgr_rows(
+    data: bytes, offset: int, width: int, height: int, step: int, bottom_up: bool
+) -> list[list[float]]:
+    """Gray rows in [0, 1] (mean of the B, G, R bytes) from packed
+    ``step``-byte pixels in 4-byte-padded rows starting at ``offset`` —
+    the pixel layout of a BMP body and of an uncompressed AVI frame."""
+    stride = ((width * step + 3) // 4) * 4
+    if offset + (height - 1) * stride + width * step > len(data):
+        raise ValueError("truncated BMP pixel data")
+    rows = []
+    for r in range(height):
+        base = offset + (height - 1 - r if bottom_up else r) * stride
+        rows.append(
+            [
+                (data[base + c * step]
+                 + data[base + c * step + 1]
+                 + data[base + c * step + 2]) / (3.0 * 255.0)
+                for c in range(width)
+            ]
+        )
+    return rows
+
+
+def _bmp_gray_rows(content: bytes) -> list[list[float]]:
+    """Uncompressed 24/32-bit BMP: parse the BITMAPFILEHEADER /
+    BITMAPINFOHEADER with ``struct`` and walk the pixel rows (bottom-up
+    when the stored height is positive). Raises on compressed or other
+    bit depths and on truncated payloads."""
+    import struct
+
+    if len(content) < 54:
+        raise ValueError("truncated BMP header")
+    px_off = struct.unpack_from("<I", content, 10)[0]
+    width, height = struct.unpack_from("<ii", content, 18)
+    bpp = struct.unpack_from("<H", content, 28)[0]
+    compression = struct.unpack_from("<I", content, 30)[0]
+    if compression != 0 or bpp not in (24, 32):
+        raise ValueError(f"unsupported BMP (bpp={bpp}, compression={compression})")
+    if width <= 0 or height == 0:
+        raise ValueError("degenerate BMP dimensions")
+    return _bgr_rows(content, px_off, width, abs(height), bpp // 8, height > 0)
+
+
+def _gray_rows(content: bytes) -> list[list[float]]:
+    """The one image reader: full-resolution gray rows in [0, 1] from a
+    BMP, PNG or baseline JPEG payload, the parser picked by signature.
+    Any other payload raises ``ValueError`` (error-as-record upstream)."""
+    if content[:2] == b"BM":
+        return _bmp_gray_rows(content)
+    if content[:8] == _PNG_SIG:
+        return _png_gray_rows(content)
+    if content[:2] == b"\xff\xd8":
+        from etl_tools_rs_spark.operators.jpeg import _jpeg_decode_y
+
+        return _jpeg_decode_y(content)[2].tolist()
+    raise ValueError("not a BMP, PNG or baseline JPEG payload")
+
+
+def _block_mean_resize(
+    rows: list[list[float]], out_h: int, out_w: int
+) -> list[list[float]]:
+    """Rectangular block-mean (area-average) resample of a pixel-row
+    matrix to ``out_h`` × ``out_w`` — the one grid behind
+    :func:`image_resize`, aHash, pHash and video frames. Grid-driven:
+    each output cell averages its own source block, and upsampling
+    degrades to nearest-neighbor, never zero-filled cells (a uniform
+    brightness shift must not turn into a high-frequency artifact)."""
+    height, width = len(rows), len(rows[0])
+    out = []
+    for gr in range(out_h):
+        r0 = gr * height // out_h
+        r1 = max(r0 + 1, (gr + 1) * height // out_h)
+        out_row = []
+        for gc in range(out_w):
+            c0 = gc * width // out_w
+            c1 = max(c0 + 1, (gc + 1) * width // out_w)
+            acc = 0.0
+            for r in range(r0, r1):
+                row = rows[r]
+                for c in range(c0, c1):
+                    acc += row[c]
+            out_row.append(acc / ((r1 - r0) * (c1 - c0)))
+        out.append(out_row)
+    return out
+
+
+def _band_profile(rows: list[list[float]], dim: int) -> list[float]:
+    """``dim`` horizontal-band mean brightness of a gray-row matrix: row
+    means, then the mean of each run of ``len(rows) // dim`` rows (bands
+    past the last row are 0.0). Renditions of one image in different
+    formats give comparable profiles."""
     row_means = [sum(r) / len(r) for r in rows]
     bucket = max(1, len(row_means) // dim)
     vals = []
@@ -424,55 +440,57 @@ def decode_png_real(content: bytes, dim: int) -> list[float]:
     return vals
 
 
-def _png_gray_grid(content: bytes, n: int) -> list[list[float]]:
-    """n×n block-mean grayscale grid from a PNG (for perceptual
-    hashing) — same cell geometry as :func:`_bmp_gray_grid`. Cells are
-    GRID-driven (each cell averages its source block, nearest-neighbor
-    when the image is smaller than the grid) so upsampling never leaves
-    empty cells — a 16×16 image into pHash's 32×32 grid previously
-    interleaved zeros, turning a uniform brightness shift into a
-    high-frequency artifact."""
-    rows = _png_gray_rows(content)
-    height, width = len(rows), len(rows[0])
-    grid = []
-    for gr in range(n):
-        r0 = gr * height // n
-        r1 = max(r0 + 1, (gr + 1) * height // n)
-        out_row = []
-        for gc in range(n):
-            c0 = gc * width // n
-            c1 = max(c0 + 1, (gc + 1) * width // n)
-            acc = 0.0
-            for r in range(r0, r1):
-                row = rows[r]
-                for c in range(c0, c1):
-                    acc += row[c]
-            out_row.append(acc / ((r1 - r0) * (c1 - c0)))
-        grid.append(out_row)
-    return grid
-
-
 def decode_media(content: bytes, modality: str, dim: int) -> list[float]:
-    """Dispatch to the best available decoder: real WAV parser for audio,
-    PIL (when importable) for images, deterministic fake otherwise. The
-    fake is the documented fallback, not the default at any site where a
-    real decoder can run."""
-    # MIME-style prefixes ("audio/wav", "image/png") and bare labels both
-    # dispatch — a real decoder must never be skipped over a spelling
+    """``dim`` features of one payload by modality: audio → the WAV RMS
+    envelope (:func:`decode_wav_real`), image → the band profile of
+    :func:`_gray_rows` (BMP, PNG, baseline JPEG; any other image payload
+    raises). MIME-style prefixes (``"audio/wav"``, ``"image/png"``) and
+    bare labels both dispatch. Other modalities get the deterministic
+    fake."""
     if modality.startswith("audio"):
-        return decode_wav_real(content, dim)  # stdlib — always real
+        return decode_wav_real(content, dim)
     if modality.startswith("image"):
-        if _pil_image() is not None:
-            return decode_image_real(content, dim)
-        if content[:2] == b"BM":
-            return decode_bmp_real(content, dim)  # stdlib — always real
-        if content[:8] == _PNG_SIG:
-            return decode_png_real(content, dim)  # stdlib — always real
-        if content[:2] == b"\xff\xd8":
-            from etl_tools_rs_spark.operators.jpeg import decode_jpeg_real
-
-            return decode_jpeg_real(content, dim)  # stdlib+numpy — real
+        return _band_profile(_gray_rows(content), dim)
     return _fake_decode(content, dim)
+
+
+def _map_payloads(
+    src: DataFrame, fn: Callable[..., list[tuple]], schema: StructType | str
+) -> DataFrame:
+    """The one Arrow stage behind the per-payload media operators.
+    ``src`` holds a key column, the binary payload, then any extra
+    per-row arguments. For each row ``fn(payload, *extra)`` returns a
+    list of zero or more value tuples, each emitted as ``(key, *values,
+    "ok")``. A null payload is read as ``b""``. A payload whose ``fn``
+    raises emits ONE ``(key, nulls…, "error: …")`` row — error-as-record,
+    never a job failure. ``schema`` (a StructType or DDL string) names
+    the output columns in that order."""
+    import pandas as pd
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    nulls = (None,) * (len(names) - 2)
+
+    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in it:
+            out: list[tuple] = []
+            for key, content, *extra in pdf.itertuples(index=False, name=None):
+                raw = bytes(content) if content is not None else b""
+                try:
+                    out += [(key, *vals, "ok") for vals in fn(raw, *extra)]
+                except Exception as e:  # noqa: BLE001 — error-as-record
+                    out.append((key, *nulls, f"error: {e}"))
+            yield pd.DataFrame(out, columns=names)
+
+    return src.mapInPandas(_batches, schema=schema)
+
+
+def _with_media_id(df: DataFrame) -> DataFrame:
+    """``df`` with a generated ``media_id`` column when it has none."""
+    if "media_id" in df.columns:
+        return df
+    return df.withColumn("media_id", F.monotonically_increasing_id())
 
 
 def extract_features(
@@ -481,47 +499,22 @@ def extract_features(
     content_col: str = "content",
     modality_col: str | None = None,
 ) -> DataFrame:
-    """Arrow-batched feature extraction over media payloads.
+    """Arrow-batched ``dim``-float feature extraction over media
+    payloads: ``(media_id, feature, decode_ok)``. With ``modality_col``,
+    each row dispatches through :func:`decode_media` — the real WAV,
+    BMP, PNG and baseline-JPEG decoders, and an error record for an
+    image payload in any other format. Without it, every row gets the
+    deterministic sha256 fake. Decoding runs executor-side per Arrow
+    batch (:func:`_map_payloads`); failures are error-as-record."""
 
-    The mapInPandas shape (batch iterator → batch iterator) is the
-    production plumbing: decoding happens executor-side per Arrow batch,
-    bounded memory, no row-at-a-time Python overhead. When
-    ``modality_col`` is given, each row dispatches through
-    :func:`decode_media` — audio rows get the REAL stdlib WAV decoder,
-    image rows the real PIL path when PIL is importable; otherwise rows
-    fall back to the loudly-marked deterministic fake. Decode failures
-    are error-as-record (``decode_ok``), never job failures."""
-    import pandas as pd
+    def features(raw: bytes, modality: str | None = None) -> list[tuple]:
+        if modality is None:
+            return [(_fake_decode(raw, dim),)]
+        return [(decode_media(raw, modality, dim),)]
 
-    id_col = "media_id" if "media_id" in df.columns else None
-    if id_col is None:
-        df = df.withColumn("media_id", F.monotonically_increasing_id())
-
-    cols = ["media_id", content_col] + ([modality_col] if modality_col else [])
-    src = df.select(*cols)
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            feats, oks = [], []
-            modalities = (
-                pdf[modality_col] if modality_col else [None] * len(pdf)
-            )
-            for content, modality in zip(pdf[content_col], modalities):
-                raw = bytes(content) if content is not None else b""
-                try:
-                    if modality is not None:
-                        feats.append(decode_media(raw, modality, dim))
-                    else:
-                        feats.append(_fake_decode(raw, dim))
-                    oks.append("ok")
-                except Exception as e:  # noqa: BLE001 — error-as-record
-                    feats.append(None)
-                    oks.append(f"error: {e}")
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "feature": feats, "decode_ok": oks}
-            )
-
-    return src.mapInPandas(_batches, schema=FEATURE_SCHEMA)
+    cols = [content_col] + ([modality_col] if modality_col else [])
+    src = _with_media_id(df).select("media_id", *cols)
+    return _map_payloads(src, features, FEATURE_SCHEMA)
 
 
 def wav_samples(content: bytes):
@@ -621,172 +614,48 @@ def audio_features(df: DataFrame, content_col: str = "content") -> DataFrame:
     DSP run executor-side per Arrow batch, decode failures are
     error-as-record, never job failures. Row-local, zero shuffle; at
     100 TB the cost is one scan of the binary column."""
-    import pandas as pd
+    feat_cols = AUDIO_FEATURE_SCHEMA.fieldNames()[1:-1]
 
-    if "media_id" not in df.columns:
-        df = df.withColumn("media_id", F.monotonically_increasing_id())
-    src = df.select("media_id", content_col)
-    feat_cols = [f.name for f in AUDIO_FEATURE_SCHEMA.fields[1:-1]]
+    def features(raw: bytes) -> list[tuple]:
+        f = wav_features(raw)
+        return [tuple(f[c] for c in feat_cols)]
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            rows, oks = [], []
-            for content in pdf[content_col]:
-                try:
-                    f = wav_features(
-                        bytes(content) if content is not None else b""
-                    )
-                    rows.append([f[c] for c in feat_cols])
-                    oks.append("ok")
-                except Exception as e:  # noqa: BLE001 — error-as-record
-                    rows.append([None] * len(feat_cols))
-                    oks.append(f"error: {e}")
-            out = pd.DataFrame(rows, columns=feat_cols)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            out["decode_ok"] = oks
-            yield out
-
-    return src.mapInPandas(_batches, schema=AUDIO_FEATURE_SCHEMA)
-
-
-def _bmp_gray_rows(content: bytes) -> list[list[float]]:
-    """Full-resolution grayscale rows from an uncompressed 24/32-bit BMP
-    (same stdlib header handling as :func:`decode_bmp_real`), values in
-    [0, 1] — the raw-pixel twin of :func:`_png_gray_rows`."""
-    import struct
-
-    if len(content) < 54 or content[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    px_off = struct.unpack_from("<I", content, 10)[0]
-    width, height = struct.unpack_from("<ii", content, 18)
-    bpp = struct.unpack_from("<H", content, 28)[0]
-    compression = struct.unpack_from("<I", content, 30)[0]
-    if compression != 0 or bpp not in (24, 32):
-        raise ValueError(f"unsupported BMP (bpp={bpp}, compression={compression})")
-    flipped = height > 0
-    height = abs(height)
-    if width <= 0 or height <= 0:
-        raise ValueError("degenerate BMP dimensions")
-    step = bpp // 8
-    stride = ((width * step + 3) // 4) * 4
-    if px_off + (height - 1) * stride + width * step > len(content):
-        raise ValueError("truncated BMP pixel data")
-    rows = []
-    for r in range(height):
-        src = r if not flipped else height - 1 - r
-        base = px_off + src * stride
-        rows.append(
-            [
-                (content[base + c * step]
-                 + content[base + c * step + 1]
-                 + content[base + c * step + 2]) / (3.0 * 255.0)
-                for c in range(width)
-            ]
-        )
-    return rows
-
-
-def _block_mean_resize(
-    rows: list[list[float]], out_h: int, out_w: int
-) -> list[list[float]]:
-    """Rectangular block-mean (area-average) resample of a pixel-row
-    matrix to ``out_h`` × ``out_w`` — grid-driven like the perceptual-hash
-    grids (each output cell averages its own source block; upsampling
-    degrades to nearest-neighbor, never zero-filled cells)."""
-    height, width = len(rows), len(rows[0])
-    out = []
-    for gr in range(out_h):
-        r0 = gr * height // out_h
-        r1 = max(r0 + 1, (gr + 1) * height // out_h)
-        out_row = []
-        for gc in range(out_w):
-            c0 = gc * width // out_w
-            c1 = max(c0 + 1, (gc + 1) * width // out_w)
-            acc = 0.0
-            for r in range(r0, r1):
-                row = rows[r]
-                for c in range(c0, c1):
-                    acc += row[c]
-            out_row.append(acc / ((r1 - r0) * (c1 - c0)))
-        out.append(out_row)
-    return out
+    src = _with_media_id(df).select("media_id", content_col)
+    return _map_payloads(src, features, AUDIO_FEATURE_SCHEMA)
 
 
 def resize_image_real(
     content: bytes, width: int, height: int
 ) -> list[list[float]]:
-    """REAL image resize to a ``height`` × ``width`` grayscale matrix
-    (values in [0, 1]): PIL when importable (any format), else the
-    stdlib BMP/PNG parsers by signature + area-average resampling.
-    Raises on undecodable payloads (callers treat as error-as-record)."""
-    pil = _pil_image()
-    if pil is not None:
-        import io
-
-        img = pil.open(io.BytesIO(content)).convert("L")
-        img = img.resize((width, height))
-        data = list(img.getdata())
-        return [
-            [data[r * width + c] / 255.0 for c in range(width)]
-            for r in range(height)
-        ]
-    if content[:8] == _PNG_SIG:
-        rows = _png_gray_rows(content)
-    else:
-        rows = _bmp_gray_rows(content)
-    return _block_mean_resize(rows, height, width)
-
-
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("pixels", ArrayType(ArrayType(DoubleType())), True),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("decode_ok", StringType(), True),
-    ]
-)
+    """Image resize to a ``height`` × ``width`` grayscale matrix (values
+    in [0, 1]): :func:`_gray_rows` decode, then :func:`_block_mean_resize`.
+    Raises on payloads :func:`_gray_rows` does not read."""
+    return _block_mean_resize(_gray_rows(content), height, width)
 
 
 def image_resize(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Arrow-batched REAL image resize (:func:`resize_image_real` per
-    payload): binary column in, ``height`` × ``width`` grayscale pixel
-    matrix out, decode failures error-as-record. Row-local, zero
-    shuffle. Decodes BMP/PNG with the stdlib decoders and anything else
-    via PIL when it is importable."""
-    import pandas as pd
+    """Arrow-batched image resize (:func:`resize_image_real` per
+    payload): binary ``content`` column in, ``(media_id, pixels, width,
+    height, decode_ok)`` out, ``pixels`` a ``height`` × ``width``
+    grayscale matrix of doubles. Decode failures are error-as-record.
+    Row-local, zero shuffle. Reads BMP, PNG and baseline JPEG."""
 
-    if "media_id" not in df.columns:
-        df = df.withColumn("media_id", F.monotonically_increasing_id())
-    src = df.select("media_id", "content")
+    def resize(raw: bytes) -> list[tuple]:
+        return [(resize_image_real(raw, width, height),)]
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            pix, oks = [], []
-            for content in pdf["content"]:
-                try:
-                    pix.append(
-                        resize_image_real(
-                            bytes(content) if content is not None else b"",
-                            width,
-                            height,
-                        )
-                    )
-                    oks.append("ok")
-                except Exception as e:  # noqa: BLE001 — error-as-record
-                    pix.append(None)
-                    oks.append(f"error: {e}")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "pixels": pix,
-                    "width": width,
-                    "height": height,
-                    "decode_ok": oks,
-                }
-            )
-
-    return src.mapInPandas(_batches, schema=RESIZE_SCHEMA)
+    src = _with_media_id(df).select("media_id", "content")
+    out = _map_payloads(
+        src,
+        resize,
+        "media_id long, pixels array<array<double>>, decode_ok string",
+    )
+    return out.select(
+        "media_id",
+        "pixels",
+        F.lit(width).alias("width"),
+        F.lit(height).alias("height"),
+        "decode_ok",
+    )
 
 
 def avi_frames(content: bytes) -> tuple[int, int, int, list[bytes]]:
@@ -844,22 +713,6 @@ def avi_frames(content: bytes) -> tuple[int, int, int, list[bytes]]:
     return int(width), int(height), int(usec or 0), frames
 
 
-def _dib_gray_rows(data: bytes, width: int, height: int) -> list[list[float]]:
-    """Grayscale rows in [0, 1] from raw bottom-up BGR24 DIB data."""
-    stride = ((width * 3 + 3) // 4) * 4
-    rows = []
-    for r in range(height):
-        base = (height - 1 - r) * stride
-        rows.append(
-            [
-                (data[base + c * 3] + data[base + c * 3 + 1]
-                 + data[base + c * 3 + 2]) / (3.0 * 255.0)
-                for c in range(width)
-            ]
-        )
-    return rows
-
-
 FRAME_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -883,95 +736,32 @@ def video_frame_sample(
     event-time and a ``grid``-sized area-average grayscale matrix
     (:func:`_block_mean_resize`, the resize stage fused into the same
     pass so full-resolution frames never leave the executor). 1:N
-    explode inside Arrow ``mapInPandas``; undecodable payloads produce
-    ONE error row (error-as-record), never job failures."""
-    import pandas as pd
-
+    explode inside the :func:`_map_payloads` stage; an undecodable payload
+    produces ONE error row (error-as-record), never a job failure."""
     if every_ms <= 0:
         raise ValueError(f"every_ms must be positive, got {every_ms!r}")
     gh, gw = grid
-    if "media_id" not in df.columns:
-        df = df.withColumn("media_id", F.monotonically_increasing_id())
-    src = df.select("media_id", content_col)
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out: list[tuple] = []
-            for mid, content in zip(pdf["media_id"], pdf[content_col]):
-                try:
-                    w, h, usec, frames = avi_frames(
-                        bytes(content) if content is not None else b""
-                    )
-                    if usec <= 0:
-                        # unknown frame rate: every frame would get
-                        # ts_ms = 0 and only frame 0 would sample —
-                        # surface it instead of silently collapsing
-                        # near-dup overlap denominators
-                        raise ValueError(
-                            "AVI frame rate unknown (dwMicroSecPerFrame=0)"
-                        )
-                    next_target = 0
-                    for idx, fdata in enumerate(frames):
-                        ts_ms = idx * usec // 1000
-                        if ts_ms < next_target:
-                            continue
-                        next_target = ts_ms + every_ms
-                        px = _block_mean_resize(
-                            _dib_gray_rows(fdata, w, h), gh, gw
-                        )
-                        out.append((mid, idx, ts_ms, px, "ok"))
-                except Exception as e:  # noqa: BLE001 — error-as-record
-                    out.append((mid, None, None, None, f"error: {e}"))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "frame_idx", "ts_ms", "pixels", "decode_ok"],
-            )
+    def sample(raw: bytes) -> list[tuple]:
+        w, h, usec, frames = avi_frames(raw)
+        if usec <= 0:
+            # unknown frame rate: every frame would get ts_ms = 0 and only
+            # frame 0 would sample — surface it instead of silently
+            # collapsing near-dup overlap denominators
+            raise ValueError("AVI frame rate unknown (dwMicroSecPerFrame=0)")
+        out = []
+        next_target = 0
+        for idx, fdata in enumerate(frames):
+            ts_ms = idx * usec // 1000
+            if ts_ms < next_target:
+                continue
+            next_target = ts_ms + every_ms
+            rows = _bgr_rows(fdata, 0, w, h, 3, True)
+            out.append((idx, ts_ms, _block_mean_resize(rows, gh, gw)))
+        return out
 
-    return src.mapInPandas(_batches, schema=FRAME_SCHEMA)
-
-
-def _bmp_gray_grid(content: bytes, n: int) -> list[list[float]]:
-    """n×n block-mean grayscale grid from an uncompressed 24/32-bit BMP
-    (stdlib struct parsing, same header handling as decode_bmp_real)."""
-    import struct
-
-    if len(content) < 54 or content[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    px_off = struct.unpack_from("<I", content, 10)[0]
-    width, height = struct.unpack_from("<ii", content, 18)
-    bpp = struct.unpack_from("<H", content, 28)[0]
-    compression = struct.unpack_from("<I", content, 30)[0]
-    if compression != 0 or bpp not in (24, 32):
-        raise ValueError(f"unsupported BMP (bpp={bpp}, compression={compression})")
-    flipped = height > 0
-    height = abs(height)
-    if width <= 0 or height <= 0:
-        raise ValueError("degenerate BMP dimensions")
-    step = bpp // 8
-    stride = ((width * step + 3) // 4) * 4
-    if px_off + (height - 1) * stride + width * step > len(content):
-        raise ValueError("truncated BMP pixel data")
-    # grid-driven block means (see _png_gray_grid): each cell averages
-    # its own source block; upsampling degrades to nearest-neighbor
-    # instead of leaving zero-filled cells
-    grid = []
-    for gr in range(n):
-        r0 = gr * height // n
-        r1 = max(r0 + 1, (gr + 1) * height // n)
-        out_row = []
-        for gc in range(n):
-            c0 = gc * width // n
-            c1 = max(c0 + 1, (gc + 1) * width // n)
-            acc = 0.0
-            for r in range(r0, r1):
-                src = r if not flipped else height - 1 - r
-                base = px_off + src * stride
-                for c in range(c0, c1):
-                    i = base + c * step
-                    acc += content[i] + content[i + 1] + content[i + 2]
-            out_row.append(acc / (3.0 * 255.0 * (r1 - r0) * (c1 - c0)))
-        grid.append(out_row)
-    return grid
+    src = _with_media_id(df).select("media_id", content_col)
+    return _map_payloads(src, sample, FRAME_SCHEMA)
 
 
 def ahash_bytes(content: bytes, hash_size: int = 8) -> str:
@@ -979,23 +769,10 @@ def ahash_bytes(content: bytes, hash_size: int = 8) -> str:
     string (``hash_size²`` bits): block-mean grayscale grid, threshold
     each cell at the global mean. Identical images hash identically;
     small edits flip few bits — Hamming distance ≈ visual difference.
-    Dispatch: PIL when importable (any format), else the stdlib BMP or
-    PNG parser by signature (this container's real paths)."""
-    pil = _pil_image()
-    if pil is not None:
-        img = pil.open(__import__("io").BytesIO(content)).convert("L")
-        img = img.resize((hash_size, hash_size))
-        cells = [p / 255.0 for p in img.getdata()]
-    else:
-        if content[:8] == _PNG_SIG:
-            grid = _png_gray_grid(content, hash_size)
-        elif content[:2] == b"\xff\xd8":
-            from etl_tools_rs_spark.operators.jpeg import _jpeg_gray_grid
-
-            grid = _jpeg_gray_grid(content, hash_size)
-        else:
-            grid = _bmp_gray_grid(content, hash_size)
-        cells = [v for row in grid for v in row]
+    The grid is :func:`resize_image_real`, so BMP, PNG and baseline JPEG
+    renditions of one image hash alike; other payloads raise."""
+    grid = resize_image_real(content, hash_size, hash_size)
+    cells = [v for row in grid for v in row]
     mean = sum(cells) / len(cells)
     bits = 0
     for v in cells:
@@ -1013,26 +790,10 @@ def image_ahash(
     decode_ok)``. Decode failures are error-as-record. The hash is
     64 bits at the default size — the image analogue of simhash, and the
     near-dup machinery composes the same way (``ahash_near_dup``)."""
-    import pandas as pd
-
-    src = df.select(id_col, content_col)
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            hs, oks = [], []
-            for content in pdf[content_col]:
-                try:
-                    hs.append(ahash_bytes(bytes(content), hash_size))
-                    oks.append("ok")
-                except Exception as e:  # noqa: BLE001 — error-as-record
-                    hs.append(None)
-                    oks.append(f"error: {e}")
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "ahash": hs, "decode_ok": oks}
-            )
-
-    return src.mapInPandas(
-        _batches, schema=f"{id_col} long, ahash string, decode_ok string"
+    return _map_payloads(
+        df.select(id_col, content_col),
+        lambda raw: [(ahash_bytes(raw, hash_size),)],
+        f"{id_col} long, ahash string, decode_ok string",
     )
 
 
@@ -1134,20 +895,7 @@ def phash_bytes(
     import numpy as np
 
     n = hash_size * highfreq_factor
-    pil = _pil_image()
-    if pil is not None:
-        img = pil.open(__import__("io").BytesIO(content)).convert("L")
-        img = img.resize((n, n))
-        grid = np.asarray(img, dtype=np.float64) / 255.0
-    else:
-        if content[:8] == _PNG_SIG:
-            grid = np.asarray(_png_gray_grid(content, n), dtype=np.float64)
-        elif content[:2] == b"\xff\xd8":
-            from etl_tools_rs_spark.operators.jpeg import _jpeg_gray_grid
-
-            grid = np.asarray(_jpeg_gray_grid(content, n), dtype=np.float64)
-        else:
-            grid = np.asarray(_bmp_gray_grid(content, n), dtype=np.float64)
+    grid = np.asarray(resize_image_real(content, n, n), dtype=np.float64)
     # orthonormal DCT-II basis: D[k, i] = s_k * cos(pi*(2i+1)*k / (2n))
     i = np.arange(n)
     k = i.reshape(-1, 1)
@@ -1188,26 +936,10 @@ def image_phash(
     decode_ok)`` — drop-in sibling of ``image_ahash`` (same batch shape,
     same error-as-record contract); pass ``hash_col='phash'`` to
     ``ahash_near_dup`` for banded Hamming pairs."""
-    import pandas as pd
-
-    src = df.select(id_col, content_col)
-
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            hs, oks = [], []
-            for content in pdf[content_col]:
-                try:
-                    hs.append(phash_bytes(bytes(content), hash_size))
-                    oks.append("ok")
-                except Exception as e:  # noqa: BLE001 — error-as-record
-                    hs.append(None)
-                    oks.append(f"error: {e}")
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "phash": hs, "decode_ok": oks}
-            )
-
-    return src.mapInPandas(
-        _batches, schema=f"{id_col} long, phash string, decode_ok string"
+    return _map_payloads(
+        df.select(id_col, content_col),
+        lambda raw: [(phash_bytes(raw, hash_size),)],
+        f"{id_col} long, phash string, decode_ok string",
     )
 
 
@@ -1433,33 +1165,14 @@ def audio_fingerprint(
     job failures. Row-local 1:N explode inside ``mapInPandas`` — at
     100 TB the cost is one scan of the binary column; downstream
     matching only ever sees the narrow (id, idx, hash) rows."""
-    import pandas as pd
 
-    if "media_id" not in df.columns:
-        df = df.withColumn("media_id", F.monotonically_increasing_id())
-    src = df.select("media_id", content_col)
+    def frames(raw: bytes) -> list[tuple]:
+        return list(enumerate(audio_fingerprint_frames(raw, frame_ms, n_bands)))
 
-    def _batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out: list[tuple] = []
-            for mid, content in zip(pdf["media_id"], pdf[content_col]):
-                try:
-                    words = audio_fingerprint_frames(
-                        bytes(content) if content is not None else b"",
-                        frame_ms,
-                        n_bands,
-                    )
-                    for i, wd in enumerate(words):
-                        out.append((mid, i, wd, "ok"))
-                except Exception as e:  # noqa: BLE001 — error-as-record
-                    out.append((mid, None, None, f"error: {e}"))
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "fhash", "decode_ok"]
-            )
-
-    return src.mapInPandas(
-        _batches,
-        schema="media_id long, frame_idx int, fhash string, decode_ok string",
+    return _map_payloads(
+        _with_media_id(df).select("media_id", content_col),
+        frames,
+        "media_id long, frame_idx int, fhash string, decode_ok string",
     )
 
 

@@ -356,7 +356,7 @@ def near_dup_stream_index(
     is read back only for CANDIDATE rows (bucket equi-join prunes
     first)."""
     from etl_tools_rs_spark.functions import ngrams
-    from etl_tools_rs_spark.operators.dedup import minhash_table
+    from etl_tools_rs_spark.operators.dedup import _band_bucket, minhash_table
 
     if num_hashes % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
@@ -371,15 +371,7 @@ def near_dup_stream_index(
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"_h{i}")
-                            for i in range(b * rpb, (b + 1) * rpb)
-                        ],
-                    )
-                ).alias("bucket"),
+                _band_bucket(b, rpb, "md5").alias("bucket"),
             )
             for b in range(bands)
         ]

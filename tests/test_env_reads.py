@@ -4,7 +4,10 @@ Operator behaviour is set by arguments, never by the environment: the
 only reads allowed in ``etl_tools_rs_spark/`` are the two that size the
 local session (``session.py``: cores and driver memory). A new
 ``os.environ``/``os.getenv`` read anywhere in the package fails this
-static scan, so an env-var knob cannot be added silently.
+static scan, so an env-var knob cannot be added silently. The same
+AST walk checks that no engine module imports ``PIL``: image decoding
+has one stdlib path (``operators/multimodal.py::_gray_rows``), and an
+import-gated arm would make results depend on what is installed.
 """
 
 from __future__ import annotations
@@ -50,6 +53,25 @@ def env_reads(source: str) -> list[tuple[int, str | None]]:
     return found
 
 
+def imported_packages(source: str) -> set[str]:
+    """Top-level package of every absolute import in ``source``,
+    including ``__import__("X")`` / ``importlib.import_module("X")``."""
+    found: set[str] = set()
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Import):
+            found |= {a.name.split(".")[0] for a in node.names}
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            found.add(node.module.split(".")[0])
+        elif isinstance(node, ast.Call) and node.args:
+            fn = getattr(node.func, "attr", None) or getattr(node.func, "id", None)
+            arg = node.args[0]
+            if fn in ("__import__", "import_module") and isinstance(
+                arg, ast.Constant
+            ) and isinstance(arg.value, str):
+                found.add(arg.value.split(".")[0])
+    return found
+
+
 @pytest.mark.parametrize(
     "src, want",
     [
@@ -74,3 +96,15 @@ def test_engine_reads_only_deployment_env_vars():
     assert {var for _, _, var in reads} == ALLOWED, sorted(
         r for r in reads if r[2] not in ALLOWED
     )
+
+
+def test_engine_never_imports_pil():
+    assert imported_packages("from PIL import Image\n__import__('PIL.Image')") == {
+        "PIL"
+    }
+    offenders = sorted(
+        os.path.relpath(path, _ENGINE)
+        for path in _ENGINE.rglob("*.py")
+        if "PIL" in imported_packages(path.read_text())
+    )
+    assert offenders == []

@@ -8,7 +8,7 @@ import math
 import pyspark.sql.functions as F
 import pytest
 
-from etl_tools_rs_spark.functions import fingerprint, minhash, ngrams, token_count, tokens
+from etl_tools_rs_spark.functions import fingerprint, ngrams, token_count, tokens
 from etl_tools_rs_spark.operators import dedup, multimodal, similarity, text
 
 DOCS = [
@@ -53,9 +53,9 @@ def test_duplicate_groups(docs):
 
 
 def test_minhash_deterministic(docs):
-    sig = docs.select("doc_id", minhash("text", 8, 3).alias("s"))
-    a = {r.doc_id: r.s for r in sig.collect()}
-    b = {r.doc_id: r.s for r in sig.collect()}
+    sig = dedup.minhash_table(docs, num_hashes=8, shingle_n=3)
+    a = {r.doc_id: list(r)[1:] for r in sig.collect()}
+    b = {r.doc_id: list(r)[1:] for r in sig.collect()}
     assert a == b
     assert a["d1"] == a["d2"]  # identical text → identical signature
     assert len(a["d1"]) == 8
@@ -595,28 +595,6 @@ def test_audio_features_operator(spark):
     assert abs(out[1].zero_crossing_rate - 2 * 500.0 / 8000) < 0.01
 
 
-def test_image_decode_gated():
-    """PIL path: real when importable, ImportError otherwise (the gate)."""
-    from etl_tools_rs_spark.operators.multimodal import (
-        _pil_image,
-        decode_image_real,
-    )
-
-    if _pil_image() is None:
-        import pytest
-
-        with pytest.raises(ImportError):
-            decode_image_real(b"\x89PNG", dim=4)
-    else:  # pragma: no cover - environment-dependent
-        import io
-
-        Image = _pil_image()
-        buf = io.BytesIO()
-        Image.new("L", (8, 8), color=128).save(buf, format="PNG")
-        vals = decode_image_real(buf.getvalue(), dim=4)
-        assert len(vals) == 4 and all(abs(v - 128 / 255) < 0.01 for v in vals)
-
-
 def test_lsh_mega_bucket_cap(spark):
     """Mega-bucket guard: N identical docs put all rows in one bucket per
     band -> quadratic pairs uncapped; salt-splitting bounds candidates,
@@ -896,24 +874,41 @@ def test_bmp_decoder_hand_built_exact():
     to exact per-band brightness."""
     import struct
 
-    from etl_tools_rs_spark.operators.multimodal import decode_bmp_real
+    from etl_tools_rs_spark.operators.multimodal import decode_media
 
     # rows bottom-up: file row0 = image BOTTOM = white,white; row1 = top = black,black
     stride_pad = b"\x00\x00"  # 2*3=6 -> stride 8
     pixels = (b"\xff\xff\xff" * 2 + stride_pad) + (b"\x00\x00\x00" * 2 + stride_pad)
     info = struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(pixels), 0, 0, 0, 0)
     head = struct.pack("<2sIHHI", b"BM", 54 + len(pixels), 0, 0, 54)
-    vals = decode_bmp_real(head + info + bytes(pixels), dim=2)
+    vals = decode_media(head + info + bytes(pixels), "image/bmp", 2)
     assert vals == [0.0, 1.0]  # top band black, bottom band white
 
     import pytest
 
     with pytest.raises(ValueError):
-        decode_bmp_real(b"not a bmp", 2)
+        decode_media(b"not a bmp", "image/bmp", 2)
     # compressed BMP (compression=1) must be rejected, not garbage-decoded
     bad_info = struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 1, len(pixels), 0, 0, 0, 0)
     with pytest.raises(ValueError):
-        decode_bmp_real(head + bad_info + bytes(pixels), 2)
+        decode_media(head + bad_info + bytes(pixels), "image/bmp", 2)
+
+
+def test_unsupported_image_format_is_error_record(spark):
+    """An image payload outside BMP/PNG/baseline JPEG (here a GIF) is an
+    error record, not a fake feature vector marked ok."""
+    from etl_tools_rs_spark.operators.multimodal import extract_features
+
+    gif = (
+        b"GIF89a\x01\x00\x01\x00\x80\x00\x00\x00\x00\x00\xff\xff\xff!"
+        b"\xf9\x04\x01\x00\x00\x00\x00,\x00\x00\x00\x00\x01\x00\x01\x00"
+        b"\x00\x02\x02D\x01\x00;"
+    )
+    media = spark.createDataFrame(
+        [(1, gif, "image/gif")], "media_id long, content binary, modality string"
+    )
+    [r] = extract_features(media, dim=4, modality_col="modality").collect()
+    assert r.decode_ok.startswith("error:") and r.feature is None
 
 
 def test_bmp_pipeline_decodes_all_real(spark):
@@ -1076,6 +1071,26 @@ class TestImageResize:
         px = resize_image_real(png, 4, 4)  # 2x2 -> 4x4 nearest-ish
         assert len(px) == 4 and len(px[0]) == 4
         assert px[0][0] < 0.01 and px[0][3] > 0.99  # corners preserved
+
+    def test_jpeg_resizes_like_its_bmp_rendition(self, spark):
+        """A baseline JPEG goes through the same decoder dispatch as BMP:
+        it decodes ok, and its grid matches the BMP rendition of the
+        same image within JPEG quantization error."""
+        import numpy as np
+
+        from etl_tools_rs_spark.operators.jpeg import encode_baseline_jpeg
+        from etl_tools_rs_spark.operators.multimodal import image_resize
+
+        r = np.arange(16).reshape(-1, 1)
+        c = np.arange(16).reshape(1, -1)
+        y = ((r * 255 // 15) // 2 + 120 * ((c // 8) % 2)).astype(np.uint8)
+        bmp = _pack_bmp([[(int(v),) * 3 for v in row] for row in y])
+        rows = [(1, bmp), (2, encode_baseline_jpeg(y, q=4))]
+        media = spark.createDataFrame(rows, "media_id long, content binary")
+        out = {r.media_id: r for r in image_resize(media, 4, 4).collect()}
+        assert out[1].decode_ok == "ok" and out[2].decode_ok == "ok"
+        err = np.abs(np.array(out[2].pixels) - np.array(out[1].pixels))
+        assert err.shape == (4, 4) and err.max() < 0.02, err
 
     def test_operator_error_as_record(self, spark):
         from etl_tools_rs_spark.operators.multimodal import image_resize

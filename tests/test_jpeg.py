@@ -12,12 +12,11 @@ import numpy as np
 import pytest
 
 from etl_tools_rs_spark.operators.jpeg import (
-    _jpeg_gray_grid,
     _jpeg_decode_y,
-    decode_jpeg_real,
     encode_baseline_jpeg,
     jpeg_metadata,
 )
+from etl_tools_rs_spark.operators.multimodal import decode_media, resize_image_real
 
 # flat 8-bit canonical Huffman table: 256 codes of length 8, symbol k
 # gets code k — legal, complete, and trivially correct on both sides
@@ -117,7 +116,7 @@ class TestGridAndProfile:
     def test_gray_grid_two_tone(self):
         y = np.zeros((32, 32), dtype=np.uint8)
         y[:, 16:] = 240
-        g = np.asarray(_jpeg_gray_grid(encode_baseline_jpeg(y, q=4), 2))
+        g = np.asarray(resize_image_real(encode_baseline_jpeg(y, q=4), 2, 2))
         assert g.shape == (2, 2)
         assert g[0][0] < 0.05 and g[1][0] < 0.05
         assert abs(g[0][1] - 240 / 255) < 0.05 and abs(g[1][1] - 240 / 255) < 0.05
@@ -128,7 +127,7 @@ class TestGridAndProfile:
             (np.arange(h) * 255 // (h - 1)).astype(np.uint8).reshape(-1, 1),
             (1, 16),
         )
-        prof = decode_jpeg_real(encode_baseline_jpeg(y, q=4), 8)
+        prof = decode_media(encode_baseline_jpeg(y, q=4), "image/jpeg", 8)
         assert len(prof) == 8
         assert all(b2 > b1 - 0.02 for b1, b2 in zip(prof, prof[1:]))
         assert prof[0] < 0.15 and prof[-1] > 0.85

@@ -220,7 +220,7 @@ class TestPngDecodeAndHash:
         # 16 rows, vertical dark→light ramp: band means must increase
         rows = [[(r * 17,)] * 4 for r in range(16)]
         png = make_png(rows, color_type=0)
-        vals = mm.decode_png_real(png, dim=4)
+        vals = mm.decode_media(png, "image/png", 4)
         assert len(vals) == 4
         assert vals == sorted(vals)
         assert vals[0] < 0.2 and vals[3] > 0.75
@@ -261,8 +261,7 @@ class TestPngDecodeAndHash:
         from pyspark.sql import functions as F
 
         # the corrupt payload carries a REAL PNG signature so it reaches
-        # decode_png_real (signature-less bytes fall to the documented
-        # fake-decode fallback instead of erroring)
+        # the PNG parser and fails inside it
         rows = [
             (0, make_png([[(0,)] * 4] * 4, 0), "image/png"),
             (1, make_png([[(255,)] * 4] * 4, 0), "image/png"),
